@@ -117,34 +117,16 @@ def ip_normalize(ip: Column | str) -> Column:
     )
 
 
-def qualify(source: Column | str, name: Column | str) -> Column:
-    """N6: qualified action = source ':' name
-    (ConfigurableEventNormalizer.py:142)."""
-    return F.concat_ws(":", source, name)
-
-
 def fill_missing(col: Column | str, token: str = "NONE") -> Column:
     """N7: absent value -> literal 'NONE'
     (ConfigurableEventNormalizer.py:157-160)."""
     return F.coalesce(col if isinstance(col, Column) else F.col(col), F.lit(token))
 
 
-def content_hash(*cols, bits: int = 256) -> Column:
-    """N9: deterministic row content hash (the unique-logs dedup id,
-    sha1-of-sorted-json at EnvLogUniverseGenerator.py:91-94).  Columns
-    are passed in a fixed order, which plays the role of key sorting."""
-    return F.sha2(F.concat_ws("\x1f", *[F.col(c) if isinstance(c, str) else c for c in cols]), bits)
-
-
 def arn_resource_type(arn: Column | str) -> Column:
     """N10: arn.split(':')[5].split('/')[0]
     (/root/reference/src/model/EventNormalizerNg.py:77)."""
     return F.split(F.split(arn, ":")[5], "/")[0]
-
-
-def kv_item(key: str, value: Column | str) -> Column:
-    """N11: 'k=v' constraint item codec (RuleUtils.py:29-38)."""
-    return F.concat_ws("=", F.lit(key), value)
 
 
 def constraint_predicate(constraints: dict[str, list]) -> Column:

@@ -21,15 +21,6 @@ def token_count(text: Column | str) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """BPE-ish token estimate: count of word/number/punct chunks after a
-    regex split — a cheap proxy for subword tokenizers."""
-    t = text if isinstance(text, Column) else F.col(text)
-    cleaned = F.regexp_replace(t, r"([a-zA-Z]{1,4})|([0-9])|([^a-zA-Z0-9\s])", "$1$2$3\x1e")
-    stripped = F.regexp_replace(cleaned, r"[^\x1e]", "")
-    return F.length(stripped).cast("int")
-
-
 def punct_ratio(text: Column | str) -> Column:
     t = text if isinstance(text, Column) else F.col(text)
     n = F.length(t)
@@ -69,12 +60,6 @@ _LANG_MARKERS = {
     "fr": ("le", "la", "et", "est", "les"),
     "es": ("el", "de", "que", "y", "los"),
 }
-
-
-def lang_hits(text: Column | str, lang: str) -> Column:
-    t = text if isinstance(text, Column) else F.col(text)
-    toks = F.split(F.trim(F.lower(t)), r"\s+")
-    return F.size(F.filter(toks, lambda w: w.isin(*_LANG_MARKERS[lang])))
 
 
 def lang_guess(text: Column | str) -> Column:

@@ -15,6 +15,10 @@ largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-
     stage 2 (merge):  grouped tree merge with fanout F until <= F rows,
                       then a driver-side final fold.
 
+Keyed builds (windows, groups) use the sorted-stream fold instead:
+``build_partials`` / ``merge_partials`` repartition and sort by key and
+fold runs of equal keys in one ``mapInPandas`` pass.
+
 Scale notes (100 TB / 1000 executors):
 - The only wide exchange is the stage-1 groupBy on ``group_id`` — a
   *uniform* integer key (salted row hash), so no skew regardless of how
@@ -32,6 +36,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -124,14 +129,163 @@ def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
 
 
 def _clean(col, dropna: bool, sentinel):
-    """Series -> numpy array with nulls removed: sentinel filter for
-    int64 key columns (kept int64 across Arrow), dropna otherwise."""
+    """Series or array -> numpy array with nulls removed: sentinel filter
+    for int64 key columns (kept int64 across Arrow), dropna otherwise."""
+    arr = col.to_numpy() if isinstance(col, pd.Series) else col
     if sentinel is not None:
-        arr = col.to_numpy()
         return arr[arr != sentinel]
     if dropna:
-        col = col.dropna()
-    return col.to_numpy()
+        return arr[~pd.isna(arr)]
+    return arr
+
+
+def _spec_list(specs: list[SketchSpec], spec_cols: list[str]) -> list[tuple]:
+    """(name, make, column, dropna, prehash, sentinel) per spec, picklable
+    into the Python workers."""
+    return [
+        (
+            s.name,
+            s.make,
+            c,
+            s.dropna,
+            s.prehash,
+            NULL_SENTINEL if s.prehash else s.null_value,
+        )
+        for s, c in zip(specs, spec_cols)
+    ]
+
+
+def _update(kernel, arr, prehash: bool) -> None:
+    if len(arr):
+        if prehash:
+            kernel.update_batch(arr, prehashed=True)
+        else:
+            kernel.update_batch(arr)
+
+
+def _differs(a, b):
+    """Elementwise key inequality with nulls equal to each other."""
+    return (a != b) & ~(pd.isna(a) & pd.isna(b))
+
+
+def _sorted_fold(df: DataFrame, key_cols, order_cols, tail: str, new_state, fold_run, finish):
+    """``repartition(keys).sortWithinPartitions(keys, order)``, then one
+    ``mapInPandas`` per partition that folds the key-sorted Arrow batches
+    one run of equal keys at a time.
+
+    Run boundaries come from numpy (``a[1:] != a[:-1]`` over the key
+    columns, nulls equal).  ``fold_run(state, cols, lo, hi)`` folds rows
+    ``[lo, hi)`` of a batch (``cols``: column name -> numpy array) into
+    the open key's state.  A batch's last run stays open, because its key
+    may continue in the next batch, so exactly one key's state is live.
+    ``finish(state)`` returns the key's output rows without the key, and
+    finished rows leave as one frame per input batch.  The output is the
+    key columns followed by the ``tail`` DDL fields."""
+    keys = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in key_cols)
+    columns = [*key_cols, *(f.split()[0] for f in tail.split(", "))]
+
+    def fold(batches):
+        key, state = None, None
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+            runs = [cols[c] for c in key_cols]
+            change = np.zeros(n - 1, dtype=bool)
+            for a in runs:
+                change |= _differs(a[1:], a[:-1])
+            bounds = [0, *(np.flatnonzero(change) + 1).tolist(), n]
+            done = []
+            for lo, hi in zip(bounds, bounds[1:]):
+                k = tuple(a[lo] for a in runs)
+                if state is None or lo > 0 or any(map(_differs, k, key)):
+                    if state is not None:
+                        done += [key + row for row in finish(state)]
+                    key, state = k, new_state()
+                fold_run(state, cols, lo, hi)
+            if done:
+                yield pd.DataFrame.from_records(done, columns=columns)
+        if state is not None:
+            yield pd.DataFrame.from_records(
+                [key + row for row in finish(state)], columns=columns
+            )
+
+    return (
+        df.repartition(*key_cols)
+        .sortWithinPartitions(*key_cols, *order_cols)
+        .mapInPandas(fold, schema=f"{keys}, {tail}")
+    )
+
+
+_STATE_TAIL = "row_count long, sketch binary, wall_time_s double"
+
+
+def build_partials(
+    df: DataFrame, specs: list[SketchSpec], key_cols: list[str]
+) -> DataFrame:
+    """One partial state per (key, spec) from rows, in a single sorted
+    stream: ``df`` holds ``key_cols`` and the spec columns; the output is
+    the key columns + ``sketch_name, row_count, sketch, wall_time_s``.
+
+    Rows are hash-partitioned and sorted by key, then one ``mapInPandas``
+    per partition folds each key run into fresh kernels.  Memory is one
+    key's kernels and one Arrow batch, never a whole group's pandas
+    frame; a hot key should be split by a salt column among the keys.
+    Within a key, rows reach the kernels in shuffle arrival order."""
+    proj, spec_cols = _projected(df, specs, extra=list(key_cols))
+    spec_list = _spec_list(specs, spec_cols)
+
+    def new_state():
+        return [[make(), 0, 0.0] for _, make, *_ in spec_list]
+
+    def fold_run(state, cols, lo, hi):
+        for st, (_, _, column, dropna, prehash, sentinel) in zip(state, spec_list):
+            t0 = time.perf_counter()
+            arr = _clean(cols[column][lo:hi], dropna, sentinel)
+            _update(st[0], arr, prehash)
+            st[1] += len(arr)
+            st[2] += time.perf_counter() - t0
+
+    def finish(state):
+        return [
+            (name, n, kernel.serialize(), secs)
+            for (name, *_), (kernel, n, secs) in zip(spec_list, state)
+        ]
+
+    tail = f"sketch_name string, {_STATE_TAIL}"
+    return _sorted_fold(proj, key_cols, [], tail, new_state, fold_run, finish)
+
+
+def merge_partials(
+    states: DataFrame, specs: list[SketchSpec], key_cols: list[str], order_col: str
+) -> DataFrame:
+    """Merge serialized partial states into one state per (key,
+    sketch_name), folding in ``order_col`` order so the bytes are
+    reproducible.  ``states`` holds ``key_cols``, ``order_col`` and the
+    partial columns ``sketch_name, row_count, sketch, wall_time_s``; the
+    output has the same shape without ``order_col``.  Same sorted-stream
+    fold as ``build_partials``: one merged state live at a time."""
+    deser = {s.name: _deserializer(s) for s in specs}
+    run_key = [*key_cols, "sketch_name"]
+
+    def new_state():
+        return [None, 0, 0.0]
+
+    def fold_run(state, cols, lo, hi):
+        de = deser[cols["sketch_name"][lo]]
+        for blob in cols["sketch"][lo:hi]:
+            k = de(bytes(blob))
+            state[0] = k if state[0] is None else type(k).merge(state[0], k)
+        state[1] += int(cols["row_count"][lo:hi].sum())
+        state[2] += float(cols["wall_time_s"][lo:hi].sum())
+
+    def finish(state):
+        merged, n, secs = state
+        return [(n, merged.serialize(), secs)]
+
+    proj = states.select(*run_key, order_col, "row_count", "sketch", "wall_time_s")
+    return _sorted_fold(proj, run_key, [order_col], _STATE_TAIL, new_state, fold_run, finish)
 
 
 def build_sketches(
@@ -165,17 +319,7 @@ def build_sketches(
     """
     order_by = order_by or []
     proj, spec_cols = _projected(df, specs, extra=order_by)
-    spec_list = [
-        (
-            s.name,
-            s.make,
-            c,
-            s.dropna,
-            s.prehash,
-            NULL_SENTINEL if s.prehash else s.null_value,
-        )
-        for s, c in zip(specs, spec_cols)
-    ]
+    spec_list = _spec_list(specs, spec_cols)
 
     if method == "map":
         tagged = proj.withColumn(_GROUP_COL, F.spark_partition_id())
@@ -204,12 +348,8 @@ def build_sketches(
                         rows[name] = 0
                         times[name] = 0.0
                     arr = _clean(pdf[column], dropna, sentinel)
-                    if len(arr):
-                        if prehash:
-                            state[name].update_batch(arr, prehashed=True)
-                        else:
-                            state[name].update_batch(arr)
-                        rows[name] += len(arr)
+                    _update(state[name], arr, prehash)
+                    rows[name] += len(arr)
                     times[name] += time.perf_counter() - t0
             if buffered:
                 pdf = pd.concat(buffered, ignore_index=True).sort_values(
@@ -220,11 +360,7 @@ def build_sketches(
                     state[name] = make()
                     arr = _clean(pdf[column], dropna, sentinel)
                     rows[name] = len(arr)
-                    if len(arr):
-                        if prehash:
-                            state[name].update_batch(arr, prehashed=True)
-                        else:
-                            state[name].update_batch(arr)
+                    _update(state[name], arr, prehash)
                     times[name] = time.perf_counter() - t0
             if state:
                 yield pd.DataFrame(
@@ -260,14 +396,9 @@ def build_sketches(
             t0 = time.perf_counter()
             kernel = make()
             arr = _clean(pdf[column], dropna, sentinel)
-            n = len(arr)
-            if n:
-                if prehash:
-                    kernel.update_batch(arr, prehashed=True)
-                else:
-                    kernel.update_batch(arr)
+            _update(kernel, arr, prehash)
             out.append(
-                (gid, name, n, kernel.serialize(), time.perf_counter() - t0)
+                (gid, name, len(arr), kernel.serialize(), time.perf_counter() - t0)
             )
         return pd.DataFrame(
             out,

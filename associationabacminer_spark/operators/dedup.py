@@ -429,11 +429,11 @@ def minhash_signatures_oph(
                 attempt = 0
                 while r_need.size and attempt < 256:
                     attempt += 1
+                    # the multiply wraps modulo 2^64 on purpose
+                    with np.errstate(over="ignore"):
+                        salt = np.uint64(attempt) * step
                     donors = (
-                        splitmix64(
-                            b_need.astype(np.uint64)
-                            ^ (np.uint64(attempt) * step)
-                        )
+                        splitmix64(b_need.astype(np.uint64) ^ salt)
                         % np.uint64(nb)
                     ).astype(np.int64)
                     ok = filled0[r_need, donors]

@@ -93,19 +93,6 @@ def pearson_correlation(df: DataFrame, cols: list[str]) -> list[list[float]]:
     return m.toArray().tolist()
 
 
-def column_entropy(df: DataFrame, col: str) -> float:
-    """Shannon entropy of a categorical column (E6 info-gain building
-    block) — one groupBy + one tiny agg."""
-    counts = df.groupBy(col).agg(F.count("*").alias("cnt"))
-    total = df.count()
-    row = counts.select(
-        F.sum(
-            -(F.col("cnt") / total) * F.log2(F.col("cnt") / total)
-        ).alias("h")
-    ).collect()[0]
-    return float(row["h"] or 0.0)
-
-
 def dedup_summaries_by_beta(
     df: DataFrame,
     beta_col: str = "beta",

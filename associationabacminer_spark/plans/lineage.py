@@ -33,12 +33,24 @@ from associationabacminer_spark.operators.agg import (
 )
 
 
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
-    build_path = os.path.join(ledger_path, "build")
-    try:
-        return spark.read.parquet(build_path)
-    except Exception:
+def read_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when ``path`` holds no data
+    file yet.  Probes with the session's Hadoop ``FileSystem`` instead of
+    a failing read, which would log a warning on every fresh build and an
+    error from any registered ``Observation`` listener.  A crashed first
+    write leaves only hidden ``_temporary`` files, which count as absent."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(p) or not any(
+        not f.getPath().getName().startswith(("_", ".")) for f in fs.listStatus(p)
+    ):
         return None
+    return spark.read.parquet(path)
+
+
+def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
+    return read_if_present(spark, os.path.join(ledger_path, "build"))
 
 
 def run_with_lineage(

@@ -37,22 +37,6 @@ def prepare_transcripts(df: DataFrame) -> DataFrame:
     ).select("conv_h", "tool_h", "text_len", "latency_s")
 
 
-def transcript_gaps(df: DataFrame) -> DataFrame:
-    """Inter-turn latency values via the hash-aggregate gap operator
-    (operators/windows.inter_event_gaps_agg): conv keys pre-hashed so the
-    exchange carries (int64, int32, float64) rows, and the per-conv sort
-    happens on tiny in-memory arrays instead of an external sort of the
-    whole partition.  Feeds the SQL-reduced t-digest build."""
-    from associationabacminer_spark.operators.windows import inter_event_gaps_agg
-
-    slim = df.select(
-        F.xxhash64("conv_id").alias("conv_h"),
-        "turn_idx",
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    return inter_event_gaps_agg(slim, "conv_h", "turn_idx", "ts")
-
-
 def transcript_specs(bloom_capacity: int = 2_000_000) -> list[SketchSpec]:
     """HLL distinct conv, CMS tool frequencies, KLL turn-length quantiles,
     t-digest inter-turn latency quantiles, Bloom conv membership.  Key

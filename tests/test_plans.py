@@ -339,3 +339,45 @@ class TestRound5QueryPlans:
             assert "MapInPandas" in self._exec_plan(auto_big)
         finally:
             D.BLOOM_AUTO_MIN_BYTES = old
+
+
+class TestSortedFoldPlans:
+    """Window and group sketch builds are sorted-stream folds: one
+    ``MapInPandas`` per fold stage, each after its own key exchange, and
+    never a per-group ``FlatMapGroupsInPandas``."""
+
+    @staticmethod
+    def _nodes(df) -> list[str]:
+        import re
+
+        tree = df._jdf.queryExecution().executedPlan().toString()
+        return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", tree, re.M)]
+
+    def test_fold_stage_budget(self, spark):
+        from associationabacminer_spark.operators.agg import SketchSpec
+        from associationabacminer_spark.operators.windowed_sketch import (
+            WINDOW_LINEAGE_SCHEMA,
+            grouped_sketch_states,
+            rollup_windows,
+            windowed_sketch_partials,
+            windowed_sketches,
+        )
+        from associationabacminer_spark.sketch import HyperLogLog
+
+        ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        specs = [SketchSpec("hll_user", HyperLogLog, "user_id",
+                            kernel_cls=HyperLogLog, prehash=True)]
+        lineage = spark.createDataFrame([], WINDOW_LINEAGE_SCHEMA)
+        stages = {
+            "partials": (windowed_sketch_partials(ev, specs, "ts", "1 day", "1 day"), 1),
+            "windowed": (windowed_sketches(ev, specs, "ts", "1 day", "1 day"), 2),
+            "rollup": (rollup_windows(lineage, specs, group_days=10), 1),
+            "grouped": (grouped_sketch_states(ev, "event_type", specs, salts=4), 2),
+        }
+        for name, (df, folds) in stages.items():
+            nodes = self._nodes(df)
+            assert "FlatMapGroupsInPandas" not in nodes, name
+            assert nodes.count("MapInPandas") == folds, (name, nodes)
+            assert nodes.count("Exchange") == folds, (name, nodes)

@@ -374,6 +374,16 @@ class TestSqlQuantileSketches:
             assert abs(true_rank - q) <= 0.03, (q, est, true_rank)
 
 
+class TestLedgerProbe:
+    def test_read_ledger_missing_path_is_none(self, spark, tmp_path):
+        from associationabacminer_spark.plans.lineage import read_ledger
+
+        assert read_ledger(spark, str(tmp_path / "absent")) is None
+        # a crashed first write leaves only hidden files: still absent
+        (tmp_path / "crashed" / "build" / "_temporary").mkdir(parents=True)
+        assert read_ledger(spark, str(tmp_path / "crashed")) is None
+
+
 class TestLineageMetrics:
     def test_observe_metrics_from_build_and_resume(self, spark, tmp_path):
         from associationabacminer_spark.operators.agg import SketchSpec
@@ -448,6 +458,76 @@ class TestWindowedResume:
         m3: dict = {}
         run_windowed_with_lineage(ev, specs, ledger, "ts", "1 day", metrics_out=m3)
         assert m3["rows_processed"] == 0
+
+
+class TestSortedStreamFold:
+    """The window and group builds fold key-sorted Arrow batches run by
+    run; a key may straddle batches, and null keys keep the semantics of
+    a groupBy."""
+
+    @staticmethod
+    def _specs():
+        return [
+            SketchSpec("hll_user", HyperLogLog, "user_id",
+                       kernel_cls=HyperLogLog, prehash=True),
+            SketchSpec("cms_type", lambda: CountMinSketch(width=256, depth=4),
+                       "event_type", kernel_cls=CountMinSketch, prehash=True),
+        ]
+
+    def test_tiny_arrow_batches_match_default(self, spark, sf_dir):
+        from associationabacminer_spark.operators.windowed_sketch import (
+            grouped_sketch_states,
+            windowed_sketches,
+        )
+
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        specs = self._specs()
+
+        def states():
+            win = windowed_sketches(ev, specs, "ts", "1 day", "1 day").collect()
+            grp = grouped_sketch_states(ev, "event_type", specs, salts=4).collect()
+            return (
+                {(r["window_start"], r["sketch_name"]): (r["row_count"], bytes(r["sketch"]))
+                 for r in win},
+                {(r["group"], r["sketch_name"]): (r["row_count"], bytes(r["sketch"]))
+                 for r in grp},
+            )
+
+        default = states()
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "7")
+        try:
+            tiny = states()
+        finally:
+            spark.conf.set(key, old)
+        assert tiny == default
+        assert len(default[0]) > 2 and len(default[1]) > 2
+
+    def test_null_keys_keep_groupby_semantics(self, spark):
+        import datetime as dt
+
+        from associationabacminer_spark.operators.windowed_sketch import (
+            grouped_sketch_states,
+            windowed_sketches,
+        )
+
+        base = dt.datetime(2024, 1, 1)
+        rows = [(i, "view", base + dt.timedelta(hours=i)) for i in range(50)]
+        rows += [(50, "view", None), (51, None, None), (52, None, base)]
+        df = spark.createDataFrame(rows, "user_id long, event_type string, ts timestamp")
+        specs = [self._specs()[0]]
+        win = windowed_sketches(df, specs, "ts", "1 day", "1 day").collect()
+        # rows with a null ts fall in no window
+        assert len(win) == 3
+        assert sum(r["row_count"] for r in win) == 51
+        grp = grouped_sketch_states(df, "event_type", specs, salts=4).collect()
+        # null groups form one group, as in groupBy
+        assert sorted((r["group"] or "", r["row_count"]) for r in grp) == [
+            ("", 2), ("view", 51)
+        ]
 
 
 class TestBottomKSql:
