@@ -1,5 +1,5 @@
-"""The two-stage sketch aggregation harness: per-partition build ->
-tree merge, with salted repartitioning and a lineage ledger.
+"""The two-stage sketch aggregation harness: partial builds -> merge,
+with a lineage ledger.
 
 This formalizes the reference's hand-rolled partial-aggregation shape —
 ``Pool.starmap_async(calc_hashes, chunks, callback=merge_into_set)``
@@ -8,25 +8,31 @@ This formalizes the reference's hand-rolled partial-aggregation shape —
 largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-135)
 — as an idiomatic Spark pipeline:
 
-    stage 1 (build):  df.withColumn(group_id, salted hash)
-                        .groupBy(group_id).applyInPandas(build)
+    stage 1 (build):  map:   rows tagged with spark_partition_id and
+                             folded where they are (no exchange)
+                      group: rows keyed on a content hash of the spec
+                             columns, repartitioned and sorted by it
+                             (``build_partials``)
                       -> lineage rows (group_id, sketch_name, row_count,
                          sketch binary, wall_time_s)
-    stage 2 (merge):  grouped tree merge with fanout F until <= F rows,
-                      then a driver-side final fold.
+    stage 2 (merge):  a driver-side fold in group_id order; above 64
+                      states, first one ``merge_partials`` step into 64
+                      buckets.
 
-Keyed builds (windows, groups) use the sorted-stream fold instead:
-``build_partials`` / ``merge_partials`` repartition and sort by key and
-fold runs of equal keys in one ``mapInPandas`` pass.
+Every build and merge, here and in ``windowed_sketch``, is one fold
+(``_fold_runs``) over key-sorted Arrow batches that hands each key's
+rows to every kernel in a single ``update_batch`` call.  KLL and
+t-digest states depend on where compactions happen, so a partial's
+bytes must not depend on where Arrow cut the batches.
 
 Scale notes (100 TB / 1000 executors):
-- The only wide exchange is the stage-1 groupBy on ``group_id`` — a
-  *uniform* integer key (salted row hash), so no skew regardless of how
-  hot a conversation is; sketches are order-insensitive so splitting a
-  conversation across groups is safe (SURVEY.md §7.4 hard part 4).
+- The group build's only exchange is on ``group_id`` — a *uniform*
+  integer key (content hash), so no skew regardless of how hot a
+  conversation is; sketches merge, so splitting a conversation across
+  groups is safe (SURVEY.md §7.4 hard part 4).
 - Shuffle payload after stage 1 is G x (few KiB..16 KiB) binary states,
-  not data rows — the tree merge moves megabytes, not terabytes.
-- All kernels update via numpy over Arrow batches: no per-row Python.
+  not data rows — the merge moves megabytes, not terabytes.
+- All kernels update via numpy over a key's rows: no per-row Python.
 """
 
 from __future__ import annotations
@@ -41,11 +47,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "group_id int, sketch_name string, row_count long, sketch binary, wall_time_s double"
-)
+_STATE_TAIL = "row_count long, sketch binary, wall_time_s double"
+_PARTIAL_TAIL = f"sketch_name string, {_STATE_TAIL}"
+LINEAGE_SCHEMA = f"group_id int, {_PARTIAL_TAIL}"
 
 _GROUP_COL = "__sketch_group__"
+_DRIVER_STATES = 64  # tree_merge folds at most this many states per sketch on the driver
 
 # Sentinel standing in for NULL in int64 key columns: a nullable int64
 # column crosses Arrow->pandas as float64, destroying the low bits of
@@ -84,27 +91,6 @@ class SketchSpec:
         return self.factory(**self.params) if self.params else self.factory()
 
 
-def salted_group_id(
-    num_groups: int,
-    group_col: str = "conv_id",
-    salt_col: str = "turn_idx",
-    salts: int = 8,
-):
-    """Deterministic salted grouping expression.
-
-    Base group = hash(conv_id) spread over num_groups//salts buckets;
-    salt = hash(turn_idx-within-key) over ``salts`` sub-buckets — a hot
-    conversation is split across ``salts`` groups instead of melting one
-    task (the reference's analog pain: 10x10 hand-chunking at
-    /root/reference/src/eval/EnvPolicyEvaluator.py:109-121).
-    Deterministic (no rand()) so a resumed run regroups identically.
-    """
-    base_groups = max(1, num_groups // salts)
-    base = F.pmod(F.xxhash64(F.col(group_col)), F.lit(base_groups))
-    salt = F.pmod(F.xxhash64(F.col(group_col), F.col(salt_col)), F.lit(salts))
-    return (base * salts + salt).cast("int")
-
-
 def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
     """Project exactly the columns the build needs, pre-hashing key
     columns JVM-side for ``prehash`` specs (null keys stay null so
@@ -128,31 +114,14 @@ def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
     return proj, spec_cols
 
 
-def _clean(col, dropna: bool, sentinel):
-    """Series or array -> numpy array with nulls removed: sentinel filter
-    for int64 key columns (kept int64 across Arrow), dropna otherwise."""
-    arr = col.to_numpy() if isinstance(col, pd.Series) else col
+def _clean(arr, dropna: bool, sentinel):
+    """Numpy array with nulls removed: sentinel filter for int64 key
+    columns (kept int64 across Arrow), dropna otherwise."""
     if sentinel is not None:
         return arr[arr != sentinel]
     if dropna:
         return arr[~pd.isna(arr)]
     return arr
-
-
-def _spec_list(specs: list[SketchSpec], spec_cols: list[str]) -> list[tuple]:
-    """(name, make, column, dropna, prehash, sentinel) per spec, picklable
-    into the Python workers."""
-    return [
-        (
-            s.name,
-            s.make,
-            c,
-            s.dropna,
-            s.prehash,
-            NULL_SENTINEL if s.prehash else s.null_value,
-        )
-        for s, c in zip(specs, spec_cols)
-    ]
 
 
 def _update(kernel, arr, prehash: bool) -> None:
@@ -168,57 +137,86 @@ def _differs(a, b):
     return (a != b) & ~(pd.isna(a) & pd.isna(b))
 
 
-def _sorted_fold(df: DataFrame, key_cols, order_cols, tail: str, new_state, fold_run, finish):
-    """``repartition(keys).sortWithinPartitions(keys, order)``, then one
-    ``mapInPandas`` per partition that folds the key-sorted Arrow batches
-    one run of equal keys at a time.
+def _fold_runs(key_cols: list[str], tail: str, fold_key):
+    """The one fold behind every sketch build and merge: a ``mapInPandas``
+    function over key-sorted Arrow batches that folds one run of equal
+    keys at a time.
 
     Run boundaries come from numpy (``a[1:] != a[:-1]`` over the key
-    columns, nulls equal).  ``fold_run(state, cols, lo, hi)`` folds rows
-    ``[lo, hi)`` of a batch (``cols``: column name -> numpy array) into
-    the open key's state.  A batch's last run stays open, because its key
-    may continue in the next batch, so exactly one key's state is live.
-    ``finish(state)`` returns the key's output rows without the key, and
-    finished rows leave as one frame per input batch.  The output is the
-    key columns followed by the ``tail`` DDL fields."""
-    keys = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in key_cols)
+    columns, nulls equal).  A run's slices are held until its key closes
+    (a batch's last run may continue in the next batch), then
+    ``fold_key(key, cols)`` gets the key's rows as one numpy array per
+    column and returns the key's output rows without the key.  Each
+    kernel therefore sees a key's rows in one call, so the bytes of a
+    state depend on its rows and their order, never on where Arrow cut
+    the batches.  Memory is one key's rows plus one batch.  Finished
+    rows leave as one frame per input batch: the key columns followed by
+    the ``tail`` DDL fields."""
     columns = [*key_cols, *(f.split()[0] for f in tail.split(", "))]
 
+    def close(key, parts):
+        cols = {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+        return [key + row for row in fold_key(key, cols)]
+
     def fold(batches):
-        key, state = None, None
+        key, parts = None, []
         for pdf in batches:
             n = len(pdf)
             if not n:
                 continue
             cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-            runs = [cols[c] for c in key_cols]
+            keys = [cols[c] for c in key_cols]
             change = np.zeros(n - 1, dtype=bool)
-            for a in runs:
+            for a in keys:
                 change |= _differs(a[1:], a[:-1])
             bounds = [0, *(np.flatnonzero(change) + 1).tolist(), n]
             done = []
             for lo, hi in zip(bounds, bounds[1:]):
-                k = tuple(a[lo] for a in runs)
-                if state is None or lo > 0 or any(map(_differs, k, key)):
-                    if state is not None:
-                        done += [key + row for row in finish(state)]
-                    key, state = k, new_state()
-                fold_run(state, cols, lo, hi)
+                k = tuple(a[lo] for a in keys)
+                if parts and (lo > 0 or any(map(_differs, k, key))):
+                    done += close(key, parts)
+                    parts = []
+                key = k
+                parts.append({c: a[lo:hi] for c, a in cols.items() if c not in key_cols})
             if done:
                 yield pd.DataFrame.from_records(done, columns=columns)
-        if state is not None:
-            yield pd.DataFrame.from_records(
-                [key + row for row in finish(state)], columns=columns
-            )
+        if parts:
+            yield pd.DataFrame.from_records(close(key, parts), columns=columns)
 
+    return fold
+
+
+def _sorted_fold(df: DataFrame, key_cols, order_cols, tail: str, fold_key):
+    """``repartition(keys).sortWithinPartitions(keys, order)``, then the
+    run fold (``_fold_runs``) in one ``mapInPandas`` per partition."""
+    keys = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in key_cols)
     return (
         df.repartition(*key_cols)
         .sortWithinPartitions(*key_cols, *order_cols)
-        .mapInPandas(fold, schema=f"{keys}, {tail}")
+        .mapInPandas(_fold_runs(key_cols, tail, fold_key), schema=f"{keys}, {tail}")
     )
 
 
-_STATE_TAIL = "row_count long, sketch binary, wall_time_s double"
+def _build_fold(specs: list[SketchSpec], spec_cols: list[str]):
+    """``fold_key`` that builds one fresh kernel per spec from a key's
+    rows: (sketch_name, row_count, sketch, wall_time_s) per spec."""
+    spec_list = [  # picklable into the Python workers
+        (s.name, s.make, c, s.dropna, s.prehash, NULL_SENTINEL if s.prehash else s.null_value)
+        for s, c in zip(specs, spec_cols)
+    ]
+
+    def fold_key(key, cols):
+        out = []
+        for name, make, column, dropna, prehash, sentinel in spec_list:
+            t0 = time.perf_counter()
+            kernel = make()
+            arr = _clean(cols[column], dropna, sentinel)
+            _update(kernel, arr, prehash)
+            secs = time.perf_counter() - t0
+            out.append((name, len(arr), kernel.serialize(), secs))
+        return out
+
+    return fold_key
 
 
 def build_partials(
@@ -229,32 +227,13 @@ def build_partials(
     the key columns + ``sketch_name, row_count, sketch, wall_time_s``.
 
     Rows are hash-partitioned and sorted by key, then one ``mapInPandas``
-    per partition folds each key run into fresh kernels.  Memory is one
-    key's kernels and one Arrow batch, never a whole group's pandas
-    frame; a hot key should be split by a salt column among the keys.
-    Within a key, rows reach the kernels in shuffle arrival order."""
+    per partition folds each key's rows into fresh kernels.  Memory is
+    one key's spec columns plus one Arrow batch, never a whole group's
+    pandas frame; a hot key should be split by a salt column among the
+    keys.  Within a key, rows reach the kernels in shuffle arrival order,
+    in a single ``update_batch`` call per kernel."""
     proj, spec_cols = _projected(df, specs, extra=list(key_cols))
-    spec_list = _spec_list(specs, spec_cols)
-
-    def new_state():
-        return [[make(), 0, 0.0] for _, make, *_ in spec_list]
-
-    def fold_run(state, cols, lo, hi):
-        for st, (_, _, column, dropna, prehash, sentinel) in zip(state, spec_list):
-            t0 = time.perf_counter()
-            arr = _clean(cols[column][lo:hi], dropna, sentinel)
-            _update(st[0], arr, prehash)
-            st[1] += len(arr)
-            st[2] += time.perf_counter() - t0
-
-    def finish(state):
-        return [
-            (name, n, kernel.serialize(), secs)
-            for (name, *_), (kernel, n, secs) in zip(spec_list, state)
-        ]
-
-    tail = f"sketch_name string, {_STATE_TAIL}"
-    return _sorted_fold(proj, key_cols, [], tail, new_state, fold_run, finish)
+    return _sorted_fold(proj, key_cols, [], _PARTIAL_TAIL, _build_fold(specs, spec_cols))
 
 
 def merge_partials(
@@ -265,245 +244,98 @@ def merge_partials(
     reproducible.  ``states`` holds ``key_cols``, ``order_col`` and the
     partial columns ``sketch_name, row_count, sketch, wall_time_s``; the
     output has the same shape without ``order_col``.  Same sorted-stream
-    fold as ``build_partials``: one merged state live at a time."""
+    fold as ``build_partials``."""
     deser = {s.name: _deserializer(s) for s in specs}
     run_key = [*key_cols, "sketch_name"]
 
-    def new_state():
-        return [None, 0, 0.0]
-
-    def fold_run(state, cols, lo, hi):
-        de = deser[cols["sketch_name"][lo]]
-        for blob in cols["sketch"][lo:hi]:
-            k = de(bytes(blob))
-            state[0] = k if state[0] is None else type(k).merge(state[0], k)
-        state[1] += int(cols["row_count"][lo:hi].sum())
-        state[2] += float(cols["wall_time_s"][lo:hi].sum())
-
-    def finish(state):
-        merged, n, secs = state
-        return [(n, merged.serialize(), secs)]
+    def fold_key(key, cols):
+        kernels = map(deser[key[-1]], map(bytes, cols["sketch"]))
+        merged = reduce(lambda a, b: type(b).merge(a, b), kernels)
+        return [(int(cols["row_count"].sum()), merged.serialize(), float(cols["wall_time_s"].sum()))]
 
     proj = states.select(*run_key, order_col, "row_count", "sketch", "wall_time_s")
-    return _sorted_fold(proj, run_key, [order_col], _STATE_TAIL, new_state, fold_run, finish)
+    return _sorted_fold(proj, run_key, [order_col], _STATE_TAIL, fold_key)
 
 
 def build_sketches(
     df: DataFrame,
     specs: list[SketchSpec],
     num_groups: int | None = None,
-    group_expr=None,
     only_groups: list[int] | None = None,
-    order_by: list[str] | None = None,
     method: str = "map",
 ) -> DataFrame:
     """Stage 1: one pass over the data builds every spec's sketch per
     group; returns the lineage DataFrame (LINEAGE_SCHEMA).
 
-    ``method='map'`` (default): per-input-partition ``mapInPandas`` build
-    — ZERO extra shuffle; group id = spark_partition_id, streaming over
-    Arrow batches (never materializes a whole group in memory).  This is
-    the treeAggregate shape and the 100 TB default.  Deterministic for a
-    fixed input + partitioning (resume contract).
+    ``method='map'`` (default): the run fold applied in place, with group
+    id = spark_partition_id — ZERO extra shuffle, one run per input
+    partition.  This is the treeAggregate shape and the 100 TB default.
+    Deterministic for a fixed input + partitioning (resume contract).
 
-    ``method='group'``: explicit ``groupBy(group_expr).applyInPandas``
-    with a deterministic content-hash (or ``salted_group_id``) key —
-    use when the build must follow a specific grouping (e.g. to reuse a
-    prior shuffle, or a fixed group count for a ledger).
+    ``method='group'``: the keyed fold of ``build_partials`` on a
+    deterministic content hash of the spec columns, ``pmod(xxhash64(...), num_groups)``
+    (default twice the default parallelism) — a fixed group count that is
+    identical across reruns, as the resume ledger needs.
 
     ``only_groups`` restricts the build to the listed group ids (the
-    resume path: rebuild only partitions missing from the ledger).
-    ``order_by`` sorts rows inside each group before the kernel update —
-    needed only for byte-identical reproducibility of the order-sensitive
-    kernels (KLL/t-digest); HLL/CMS/Bloom commute elementwise.
-    """
-    order_by = order_by or []
-    proj, spec_cols = _projected(df, specs, extra=order_by)
-    spec_list = _spec_list(specs, spec_cols)
-
+    resume path: rebuild only partitions missing from the ledger)."""
+    proj, spec_cols = _projected(df, specs, extra=[])
     if method == "map":
-        tagged = proj.withColumn(_GROUP_COL, F.spark_partition_id())
-        if only_groups is not None:
-            tagged = tagged.filter(
-                F.col(_GROUP_COL).isin([int(g) for g in only_groups])
-            )
-
-        def build_stream(batches):
-            state: dict = {}
-            rows: dict = {}
-            times: dict = {}
-            gid = -1
-            buffered: list[pd.DataFrame] | None = [] if order_by else None
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                gid = int(pdf[_GROUP_COL].iloc[0])
-                if buffered is not None:
-                    buffered.append(pdf)
-                    continue
-                for name, make, column, dropna, prehash, sentinel in spec_list:
-                    t0 = time.perf_counter()
-                    if name not in state:
-                        state[name] = make()
-                        rows[name] = 0
-                        times[name] = 0.0
-                    arr = _clean(pdf[column], dropna, sentinel)
-                    _update(state[name], arr, prehash)
-                    rows[name] += len(arr)
-                    times[name] += time.perf_counter() - t0
-            if buffered:
-                pdf = pd.concat(buffered, ignore_index=True).sort_values(
-                    order_by, kind="stable"
-                )
-                for name, make, column, dropna, prehash, sentinel in spec_list:
-                    t0 = time.perf_counter()
-                    state[name] = make()
-                    arr = _clean(pdf[column], dropna, sentinel)
-                    rows[name] = len(arr)
-                    _update(state[name], arr, prehash)
-                    times[name] = time.perf_counter() - t0
-            if state:
-                yield pd.DataFrame(
-                    {
-                        "group_id": [gid] * len(state),
-                        "sketch_name": list(state),
-                        "row_count": [rows[n] for n in state],
-                        "sketch": [state[n].serialize() for n in state],
-                        "wall_time_s": [times[n] for n in state],
-                    }
-                )
-
-        return tagged.mapInPandas(build_stream, schema=LINEAGE_SCHEMA)
-
-    # method == "group"
-    if num_groups is None:
-        num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-    if group_expr is None:
-        # deterministic uniform content-hash grouping: perfect balance for
-        # order-insensitive sketches, identical across reruns (resume);
-        # salted_group_id is the conv-anchored alternative
-        group_expr = F.pmod(F.xxhash64(*sorted(set(spec_cols) | set(order_by))), F.lit(num_groups)).cast("int")
-    tagged = proj.withColumn(_GROUP_COL, group_expr)
+        gid = F.spark_partition_id()
+    else:
+        if num_groups is None:
+            num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
+        gid = F.pmod(F.xxhash64(*sorted(set(spec_cols))), F.lit(num_groups)).cast("int")
+    tagged = proj.withColumn(_GROUP_COL, gid)
     if only_groups is not None:
         tagged = tagged.filter(F.col(_GROUP_COL).isin([int(g) for g in only_groups]))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        gid = int(pdf[_GROUP_COL].iloc[0]) if len(pdf) else -1
-        if order_by:
-            pdf = pdf.sort_values(order_by, kind="stable")
-        out = []
-        for name, make, column, dropna, prehash, sentinel in spec_list:
-            t0 = time.perf_counter()
-            kernel = make()
-            arr = _clean(pdf[column], dropna, sentinel)
-            _update(kernel, arr, prehash)
-            out.append(
-                (gid, name, len(arr), kernel.serialize(), time.perf_counter() - t0)
-            )
-        return pd.DataFrame(
-            out,
-            columns=["group_id", "sketch_name", "row_count", "sketch", "wall_time_s"],
-        )
-
-    return tagged.groupBy(_GROUP_COL).applyInPandas(build, schema=LINEAGE_SCHEMA)
+    fold_key = _build_fold(specs, spec_cols)
+    if method == "map":
+        fold = _fold_runs([_GROUP_COL], _PARTIAL_TAIL, fold_key)
+        out = tagged.mapInPandas(fold, schema=f"{_GROUP_COL} int, {_PARTIAL_TAIL}")
+    else:
+        out = _sorted_fold(tagged, [_GROUP_COL], [], _PARTIAL_TAIL, fold_key)
+    return out.withColumnRenamed(_GROUP_COL, "group_id")
 
 
 def tree_merge(
-    lineage: DataFrame,
-    specs: list[SketchSpec],
-    fanout: int = 16,
-    driver_threshold: int = 64,
-    n_states: int | None = None,
+    lineage: DataFrame, specs: list[SketchSpec], n_states: int | None = None
 ) -> dict[str, object]:
-    """Stage 2: grouped tree merge with the given fanout until the number
-    of partial states per sketch is <= driver_threshold, then a final
-    driver-side fold.  Returns {sketch_name: kernel}."""
-    deser = {s.name: _deserializer(s) for s in specs}
+    """Stage 2: merge the lineage's partial states into one kernel per
+    sketch -> {sketch_name: kernel}.
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sort by source group for a deterministic merge order (resume
-        # byte-identity); merge is associative/commutative so the estimate
-        # is invariant either way
-        pdf = pdf.sort_values("group_id", kind="stable")
-        name = pdf["sketch_name"].iloc[0]
-        de = deser[name]
-        kernels = [de(b) for b in pdf["sketch"]]
-        merged = reduce(type(kernels[0]).merge, kernels)
-        return pd.DataFrame(
-            {
-                "group_id": [int(pdf["group_id"].iloc[0])],
-                "sketch_name": [name],
-                "row_count": [int(pdf["row_count"].sum())],
-                "sketch": [merged.serialize()],
-                "wall_time_s": [float(pdf["wall_time_s"].sum())],
-            }
-        )
-
-    persisted = None
+    ``n_states`` bounds the states per sketch; by default the lineage's
+    partition count, which bounds a map build's group ids without running
+    a job.  Up to 64 states merge on the driver in ``group_id`` order.
+    Above that, one ``merge_partials`` step first folds them into 64
+    buckets (``group_id % 64``, in ``group_id`` order).  The merge order
+    is fixed either way, so a resumed ledger merges to the same bytes."""
     if n_states is None:
-        # Upper bound on distinct group ids without running a job: the
-        # map build's group id is spark_partition_id, so the lineage has
-        # at most one group per input partition.  When that bound already
-        # fits under driver_threshold the tree loop cannot run for ANY
-        # actual count <= bound, so the counting job (and the persist
-        # that backed it) is pure overhead — the single collect below
-        # then consumes the build exactly once, fully pipelined.
-        try:
-            bound = lineage.rdd.getNumPartitions()
-        except Exception:
-            bound = None
-        if bound is not None and bound <= driver_threshold:
-            n_states = bound
-        else:
-            # the lineage is tiny (G x n_specs rows); persist so the
-            # count does not recompute the whole build
-            persisted = lineage = lineage.persist()
-            n_states = lineage.select(
-                F.countDistinct("group_id").alias("g")
-            ).collect()[0]["g"]
-    current = lineage
-    while n_states > driver_threshold:
-        n_next = max(1, (n_states + fanout - 1) // fanout)
-        current = (
-            current.withColumn(
-                "__bucket__", F.pmod(F.col("group_id"), F.lit(n_next)).cast("int")
-            )
-            .groupBy("__bucket__", "sketch_name")
-            .applyInPandas(merge_group, schema=LINEAGE_SCHEMA)
-        )
-        n_states = n_next
+        n_states = lineage.rdd.getNumPartitions()
+    if n_states > _DRIVER_STATES:
+        bucket = F.pmod(F.col("group_id"), F.lit(_DRIVER_STATES))
+        lineage = merge_partials(
+            lineage.withColumn(_GROUP_COL, bucket), specs, [_GROUP_COL], "group_id"
+        ).withColumnRenamed(_GROUP_COL, "group_id")
 
-    rows = sorted(
-        current.collect(), key=lambda r: (r["sketch_name"], r["group_id"])
-    )
-    if persisted is not None:
-        persisted.unpersist()
+    deser = {s.name: _deserializer(s) for s in specs}
     out: dict[str, object] = {}
-    for row in rows:
+    for row in sorted(lineage.collect(), key=lambda r: (r["sketch_name"], r["group_id"])):
         k = deser[row["sketch_name"]](bytes(row["sketch"]))
-        if row["sketch_name"] in out:
-            out[row["sketch_name"]] = type(k).merge(out[row["sketch_name"]], k)
-        else:
-            out[row["sketch_name"]] = k
+        name = row["sketch_name"]
+        out[name] = type(k).merge(out[name], k) if name in out else k
     return out
 
 
 def sketch_aggregate(
-    df: DataFrame,
-    specs: list[SketchSpec],
-    num_groups: int | None = None,
-    group_expr=None,
-    fanout: int = 16,
-    method: str = "map",
+    df: DataFrame, specs: list[SketchSpec], method: str = "map"
 ) -> dict[str, object]:
     """build_sketches + tree_merge in one call -> {name: kernel}."""
-    if method == "group" and num_groups is None:
+    num_groups = None
+    if method == "group":
         num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-    lineage = build_sketches(
-        df, specs, num_groups=num_groups, group_expr=group_expr, method=method
-    )
-    n_states = num_groups if method == "group" else None
-    return tree_merge(lineage, specs, fanout=fanout, n_states=n_states)
+    lineage = build_sketches(df, specs, num_groups=num_groups, method=method)
+    return tree_merge(lineage, specs, n_states=num_groups)
 
 
 def _deserializer(spec: SketchSpec):

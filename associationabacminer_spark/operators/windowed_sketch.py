@@ -13,9 +13,9 @@ touching rows again (the hypertable-rollup pattern).
 
 Every stage is a sorted-stream fold (``agg.build_partials`` /
 ``agg.merge_partials``): one exchange on the key, a sort within each
-partition, and one ``mapInPandas`` that folds runs of equal keys from
-the Arrow batches.  Memory is one key's states plus one batch, and no
-group is ever materialized as a pandas frame.
+partition, and one ``mapInPandas`` that hands each run of equal keys to
+the kernels in one update.  Memory is one key's spec columns plus one
+Arrow batch, and no group is ever materialized as a pandas frame.
 """
 
 from __future__ import annotations
@@ -85,9 +85,9 @@ def windowed_sketch_partials(
     work — VERDICT.md round 1, scale-killer #1).  Instead the key is
     (window, salt) — ``salts`` partial sketches per window, each bounded
     at ~1/salts of the window — and a second stage merges the fixed-size
-    partials per window.  The fold streams the key-sorted rows: one
-    key's kernels are live at a time, and no group is ever materialized
-    as a pandas frame.  The window reaches the fold as two scalar
+    partials per window.  The fold streams the key-sorted rows and
+    holds one key's spec columns at a time (the salt bounds that key),
+    never a group's pandas frame.  The window reaches the fold as two scalar
     timestamp columns; a struct column would cross Arrow as one Python
     object per row.  The salt is a deterministic content hash, and the
     merge folds in salt order, so the result is bit-reproducible across

@@ -15,8 +15,8 @@ Resume = read the ledger, diff the present group ids against the
 expected set, rebuild only the missing groups (a filter on the
 deterministic group expression — Catalyst prunes everything else), and
 re-merge.  Because the group assignment is a deterministic content hash
-and merge order is sorted, a resumed run reproduces the estimates of an
-uninterrupted run exactly.
+and merge order is sorted, a resumed run reproduces the merged sketch
+bytes of an uninterrupted run exactly.
 """
 
 from __future__ import annotations
@@ -59,9 +59,6 @@ def run_with_lineage(
     ledger_path: str,
     num_groups: int,
     run_id: str = "run-0",
-    group_expr=None,
-    order_by=None,
-    fanout: int = 16,
     metrics_out: dict | None = None,
 ) -> dict[str, object]:
     """Build (or resume) the sketch set, checkpointing per-group lineage.
@@ -98,8 +95,6 @@ def run_with_lineage(
             df,
             specs,
             num_groups=num_groups,
-            group_expr=group_expr,
-            order_by=order_by,
             method="group",  # stable content-hash group ids for the ledger
         ).withColumn("run_id", F.lit(run_id))
         _write(lineage, "overwrite")
@@ -114,12 +109,10 @@ def run_with_lineage(
                 df,
                 specs,
                 num_groups=num_groups,
-                group_expr=group_expr,
                 only_groups=missing,
-                order_by=order_by,
                 method="group",
             ).withColumn("run_id", F.lit(run_id))
             _write(delta, "append")
 
     all_build = spark.read.parquet(build_path).drop("run_id")
-    return tree_merge(all_build, specs, fanout=fanout, n_states=num_groups)
+    return tree_merge(all_build, specs, n_states=num_groups)

@@ -47,7 +47,6 @@ def streaming_sketch_build(
     stream: DataFrame,
     specs,
     state: dict,
-    num_groups: int = 16,
 ):
     """foreachBatch sink that folds every micro-batch into ``state``
     ({sketch_name: kernel}) via the batch harness.  Returns the function
@@ -62,7 +61,7 @@ def streaming_sketch_build(
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        partial = sketch_aggregate(batch_df, specs, num_groups=num_groups)
+        partial = sketch_aggregate(batch_df, specs)
         for name, kernel in partial.items():
             if name in state:
                 state[name] = type(kernel).merge(state[name], kernel)

@@ -519,7 +519,6 @@ class TestStreaming:
             stream,
             [SketchSpec("hll", HyperLogLog, "user_id", kernel_cls=HyperLogLog)],
             state,
-            num_groups=8,
         )
         q = stream.writeStream.foreachBatch(fold).start()
         try:

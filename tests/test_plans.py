@@ -381,3 +381,46 @@ class TestSortedFoldPlans:
             assert "FlatMapGroupsInPandas" not in nodes, name
             assert nodes.count("MapInPandas") == folds, (name, nodes)
             assert nodes.count("Exchange") == folds, (name, nodes)
+
+    def test_group_build_budget(self, spark):
+        """The ledger's group build is one keyed fold: one exchange on the
+        group id, one ``MapInPandas``, no per-group pandas frame."""
+        from associationabacminer_spark.operators.agg import SketchSpec, build_sketches
+        from associationabacminer_spark.sketch import HyperLogLog
+
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        specs = [SketchSpec("hll_user", HyperLogLog, "user_id",
+                            kernel_cls=HyperLogLog, prehash=True)]
+        nodes = self._nodes(build_sketches(ev, specs, num_groups=8, method="group"))
+        assert "FlatMapGroupsInPandas" not in nodes, nodes
+        assert nodes.count("MapInPandas") == 1, nodes
+        assert nodes.count("Exchange") == 1, nodes
+
+    def test_tree_merge_over_96_states(self, spark, monkeypatch):
+        """Above 64 states the merge is one keyed fold into 64 buckets,
+        not a per-group pandas merge."""
+        from associationabacminer_spark.operators.agg import (
+            SketchSpec,
+            build_sketches,
+            tree_merge,
+        )
+        from associationabacminer_spark.sketch import HyperLogLog
+
+        ev = spark.read.parquet(f"{SF}/events.parquet").repartition(96)
+        specs = [SketchSpec("hll_user", HyperLogLog, "user_id",
+                            kernel_cls=HyperLogLog, prehash=True)]
+        collected = []
+        cls = type(ev)  # the session's DataFrame implementation
+        collect = cls.collect
+
+        def spy(df):
+            collected.append(self._nodes(df))
+            return collect(df)
+
+        monkeypatch.setattr(cls, "collect", spy)
+        merged = tree_merge(build_sketches(ev, specs, method="map"), specs, n_states=96)
+        assert merged["hll_user"].estimate() > 0
+        (nodes,) = collected
+        assert "FlatMapGroupsInPandas" not in nodes, nodes
+        # the map build's fold and the bucket merge's fold
+        assert nodes.count("MapInPandas") == 2, nodes
