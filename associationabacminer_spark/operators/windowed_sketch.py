@@ -191,7 +191,8 @@ def run_windowed_with_lineage(
             .drop("__ws__", "__salt__")
         )
 
-    if todo.limit(1).count() > 0:
+    # a fresh build needs no probe: an empty input writes an empty ledger
+    if existing is None or todo.limit(1).count() > 0:
         partials = windowed_sketch_partials(
             todo, specs, ts_col, width, width, salts, salt_cols
         )
@@ -199,7 +200,8 @@ def run_windowed_with_lineage(
             partials,
             name="windowed-lineage",
             lineage_rows=F.count(F.lit(1)),
-            rows_processed=F.sum("row_count"),
+            # the sum over no rows is null
+            rows_processed=F.coalesce(F.sum("row_count"), F.lit(0)),
         )
         partials.write.mode("append" if existing is not None else "overwrite").parquet(
             build_path

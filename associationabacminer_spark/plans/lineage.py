@@ -99,10 +99,8 @@ def run_with_lineage(
         ).withColumn("run_id", F.lit(run_id))
         _write(lineage, "overwrite")
     else:
-        present = {
-            r["group_id"]
-            for r in existing.select("group_id").distinct().collect()
-        }
+        # one job: the ledger holds at most num_groups * len(specs) rows
+        present = {r["group_id"] for r in existing.select("group_id").collect()}
         missing = sorted(set(range(num_groups)) - present)
         if missing:
             delta = build_sketches(

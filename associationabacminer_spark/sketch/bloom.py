@@ -119,9 +119,14 @@ class BloomFilter:
         smaller.  Partial per-partition states are mostly-zero bit arrays;
         sparse encoding shrinks the shuffle payload of the tree merge by
         orders of magnitude at high partition counts (the 100 TB path)."""
-        set_bits = self._set_bit_positions()
-        dense_size = len(self.words) * 8
-        if len(set_bits) * 8 < dense_size:
+        nz = np.flatnonzero(self.words)
+        # bit j of a word is bit j % 8 of its little-endian byte j // 8
+        bits = np.unpackbits(
+            self.words[nz].astype("<u8").view(np.uint8), bitorder="little"
+        )
+        if np.count_nonzero(bits) < len(self.words):  # 8 bytes per position vs per word
+            idx = np.flatnonzero(bits)
+            set_bits = (nz[idx >> 6] << 6) | (idx & 63)
             head = _MAGIC + struct.pack(
                 "<qIqBq", self.m, self.k, self.n_inserted, 1, len(set_bits)
             )
@@ -130,16 +135,6 @@ class BloomFilter:
             "<qIqBq", self.m, self.k, self.n_inserted, 0, len(self.words)
         )
         return head + self.words.astype("<u8").tobytes()
-
-    def _set_bit_positions(self) -> np.ndarray:
-        nz = np.flatnonzero(self.words)
-        if len(nz) == 0:
-            return np.empty(0, dtype=np.int64)
-        bits = (
-            self.words[nz][:, None] >> np.arange(64, dtype=np.uint64)[None, :]
-        ) & np.uint64(1)
-        word_idx, bit_idx = np.nonzero(bits)
-        return (nz[word_idx].astype(np.int64) << 6) | bit_idx.astype(np.int64)
 
     @staticmethod
     def deserialize(data: bytes) -> "BloomFilter":

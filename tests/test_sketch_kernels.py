@@ -181,6 +181,38 @@ class TestBloom:
         assert (bf2.words == bf.words).all()
         assert bf2.contains(np.arange(100)).all()
 
+    def test_serialize_bytes_match_shift_matrix_encoding(self):
+        """``serialize()`` bytes equal the encoding built from the
+        (non-zero words x 64) shift matrix: sparse set-bit positions when
+        they take fewer bytes than the words, else the raw words."""
+        import struct
+
+        def reference(bf):
+            nz = np.flatnonzero(bf.words)
+            if len(nz) == 0:
+                pos = np.empty(0, dtype=np.int64)
+            else:
+                bits = (
+                    bf.words[nz][:, None] >> np.arange(64, dtype=np.uint64)[None, :]
+                ) & np.uint64(1)
+                word_idx, bit_idx = np.nonzero(bits)
+                pos = (nz[word_idx].astype(np.int64) << 6) | bit_idx.astype(np.int64)
+            if len(pos) * 8 < len(bf.words) * 8:
+                mode, payload = (1, len(pos)), pos.astype("<i8").tobytes()
+            else:
+                mode, payload = (0, len(bf.words)), bf.words.astype("<u8").tobytes()
+            head = struct.pack("<qIqBq", bf.m, bf.k, bf.n_inserted, *mode)
+            return b"BLM1" + head + payload
+
+        modes = []
+        for n in (0, 300, 5_000):  # empty, sparse, dense
+            bf = BloomFilter.from_capacity(20_000, 0.01).update_batch(np.arange(n))
+            blob = bf.serialize()
+            assert blob == reference(bf), n
+            assert (BloomFilter.deserialize(blob).words == bf.words).all()
+            modes.append(blob[24])
+        assert modes == [1, 1, 0]
+
 
 # ---------------------------------------------------------------- KLL
 class TestKLL:

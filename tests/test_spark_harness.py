@@ -440,6 +440,26 @@ class TestWindowedResume:
         run_windowed_with_lineage(ev, specs, ledger, "ts", "1 day", metrics_out=m3)
         assert m3["rows_processed"] == 0
 
+    def test_fresh_build_over_empty_input(self, spark, tmp_path):
+        from associationabacminer_spark.operators.agg import SketchSpec
+        from associationabacminer_spark.operators.windowed_sketch import (
+            run_windowed_with_lineage,
+        )
+        from associationabacminer_spark.sketch import HyperLogLog
+
+        empty = spark.createDataFrame([], "ts timestamp, user_id long")
+        specs = [
+            SketchSpec(
+                "hll_user", HyperLogLog, "user_id", kernel_cls=HyperLogLog, prehash=True
+            )
+        ]
+        m: dict = {}
+        merged = run_windowed_with_lineage(
+            empty, specs, str(tmp_path / "wledger"), "ts", "1 day", metrics_out=m
+        )
+        assert merged.collect() == []
+        assert m["rows_processed"] == 0
+
 
 class TestSortedStreamFold:
     """The window and group builds fold key-sorted Arrow batches run by
@@ -974,3 +994,90 @@ class TestMisraGriesThroughHarness:
         a = {r["group"]: bytes(r["sketch"]) for r in states.collect()}
         b = {r["group"]: bytes(r["sketch"]) for r in again.collect()}
         assert a == b
+
+
+class TestWorkerDaemon:
+    """Python workers fork from ``worker_daemon``, whose guard stops every
+    task's ``importlib.invalidate_caches()`` from re-reading unchanged zips
+    (pyspark.zip, the spark-core jar) on CPython < 3.13."""
+
+    def test_session_names_the_daemon(self, spark):
+        import os
+
+        import associationabacminer_spark
+
+        assert (
+            spark.conf.get("spark.python.daemon.module")
+            == "associationabacminer_spark.worker_daemon"
+        )
+        root = os.path.dirname(os.path.dirname(associationabacminer_spark.__file__))
+        assert spark.conf.get("spark.executorEnv.PYTHONPATH") == root
+
+    def test_task_rereads_no_archive(self, spark):
+        def count_reads(batches):
+            import importlib
+            import zipimport
+
+            import pandas as pd
+
+            reads = []
+            read_directory = zipimport._read_directory
+
+            def counting(archive):
+                reads.append(archive)
+                return read_directory(archive)
+
+            zipimport._read_directory = counting
+            try:
+                importlib.invalidate_caches()
+            finally:
+                zipimport._read_directory = read_directory
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"reads": [len(reads)]})
+
+        rows = spark.range(100).coalesce(1).mapInPandas(count_reads, "reads long").collect()
+        assert [r["reads"] for r in rows] == [0]
+
+    def test_guard_rereads_only_changed_zip(self, tmp_path):
+        import os
+        import subprocess
+        import sys
+
+        import associationabacminer_spark
+
+        script = """
+import importlib, sys, zipfile, zipimport
+from associationabacminer_spark.worker_daemon import install_zip_guard
+
+install_zip_guard()
+path = sys.argv[1]
+with zipfile.ZipFile(path, "w") as z:
+    z.writestr("zg_first.py", "X = 1")
+sys.path.insert(0, path)
+import zg_first
+importlib.invalidate_caches()  # an importer's first call reads its archive
+
+reads = []
+read_directory = zipimport._read_directory
+zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+importlib.invalidate_caches()
+unchanged = len(reads)
+with zipfile.ZipFile(path, "a") as z:
+    z.writestr("zg_second.py", "Y = 2")
+importlib.invalidate_caches()
+import zg_second
+print(unchanged, len(reads), zg_first.X + zg_second.Y)
+"""
+        root = os.path.dirname(os.path.dirname(associationabacminer_spark.__file__))
+        out = subprocess.run(
+            [sys.executable, "-c", script, str(tmp_path / "mods.zip")],
+            env=dict(os.environ, PYTHONPATH=root),
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.split()
+        unchanged, after_change, total = (int(v) for v in out)
+        assert total == 3  # the module added to the rewritten zip imports
+        if sys.version_info < (3, 13):  # 3.13+ re-reads lazily, unguarded
+            assert (unchanged, after_change) == (0, 1)
