@@ -8,11 +8,10 @@ This formalizes the reference's hand-rolled partial-aggregation shape —
 largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-135)
 — as an idiomatic Spark pipeline:
 
-    stage 1 (build):  map:   rows tagged with spark_partition_id and
-                             folded where they are (no exchange)
-                      group: rows keyed on a content hash of the spec
-                             columns, repartitioned and sorted by it
-                             (``build_partials``)
+    stage 1 (build):  rows tagged with spark_partition_id and folded
+                      where they are (no exchange); the resume ledger
+                      instead keys ``build_partials`` on ``group_id``, a
+                      content hash of the spec columns
                       -> lineage rows (group_id, sketch_name, row_count,
                          sketch binary, wall_time_s)
     stage 2 (merge):  a driver-side fold in group_id order; above 64
@@ -91,12 +90,11 @@ class SketchSpec:
         return self.factory(**self.params) if self.params else self.factory()
 
 
-def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
-    """Project exactly the columns the build needs, pre-hashing key
+def _spec_inputs(specs: list[SketchSpec]) -> tuple[dict[str, object], list[str]]:
+    """The build's input expression per column name, pre-hashing key
     columns JVM-side for ``prehash`` specs (null keys stay null so
-    ``dropna`` still works).  Returns (projected_df, per-spec input
-    column names)."""
-    cols: dict[str, object] = {c: F.col(c) for c in extra}
+    ``dropna`` still works), and each spec's input column name."""
+    cols: dict[str, object] = {}
     spec_cols: list[str] = []
     for s in specs:
         if s.prehash:
@@ -110,8 +108,28 @@ def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
         else:
             cols[s.column] = F.col(s.column)
             spec_cols.append(s.column)
+    return cols, spec_cols
+
+
+def _projected(df: DataFrame, specs: list[SketchSpec], extra: list[str]):
+    """Project exactly the columns the build needs (``extra`` first, then
+    the spec inputs).  Returns (projected_df, per-spec input column
+    names)."""
+    inputs, spec_cols = _spec_inputs(specs)
+    cols = {**{c: F.col(c) for c in extra}, **inputs}
     proj = df.select(*[v.alias(k) for k, v in cols.items()])
     return proj, spec_cols
+
+
+def group_id(specs: list[SketchSpec], num_groups: int):
+    """The resume ledger's group key: ``pmod(xxhash64(...), num_groups)``
+    over the build's spec inputs in name order — a deterministic content
+    hash, so a rerun assigns every row the same group, and a uniform one,
+    so a hot value cannot skew the groups' exchange."""
+    inputs, _ = _spec_inputs(specs)
+    return F.pmod(
+        F.xxhash64(*[inputs[c] for c in sorted(inputs)]), F.lit(num_groups)
+    ).cast("int")
 
 
 def _clean(arr, dropna: bool, sentinel):
@@ -258,44 +276,25 @@ def merge_partials(
 
 
 def build_sketches(
-    df: DataFrame,
-    specs: list[SketchSpec],
-    num_groups: int | None = None,
-    only_groups: list[int] | None = None,
-    method: str = "map",
+    df: DataFrame, specs: list[SketchSpec], method: str = "map"
 ) -> DataFrame:
     """Stage 1: one pass over the data builds every spec's sketch per
-    group; returns the lineage DataFrame (LINEAGE_SCHEMA).
+    input partition; returns the lineage DataFrame (LINEAGE_SCHEMA).
 
-    ``method='map'`` (default): the run fold applied in place, with group
-    id = spark_partition_id — ZERO extra shuffle, one run per input
-    partition.  This is the treeAggregate shape and the 100 TB default.
-    Deterministic for a fixed input + partitioning (resume contract).
-
-    ``method='group'``: the keyed fold of ``build_partials`` on a
-    deterministic content hash of the spec columns, ``pmod(xxhash64(...), num_groups)``
-    (default twice the default parallelism) — a fixed group count that is
-    identical across reruns, as the resume ledger needs.
-
-    ``only_groups`` restricts the build to the listed group ids (the
-    resume path: rebuild only partitions missing from the ledger)."""
+    The run fold is applied in place, with group id = spark_partition_id
+    — ZERO extra shuffle, one run per input partition.  This is the
+    treeAggregate shape and the 100 TB default.  Deterministic for a fixed
+    input + partitioning.  ``method`` accepts only ``"map"``; the resume
+    ledger's keyed build is ``build_partials`` over ``group_id``."""
+    if method != "map":
+        raise ValueError(f"unknown build method {method!r}; only 'map'")
     proj, spec_cols = _projected(df, specs, extra=[])
-    if method == "map":
-        gid = F.spark_partition_id()
-    else:
-        if num_groups is None:
-            num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-        gid = F.pmod(F.xxhash64(*sorted(set(spec_cols))), F.lit(num_groups)).cast("int")
-    tagged = proj.withColumn(_GROUP_COL, gid)
-    if only_groups is not None:
-        tagged = tagged.filter(F.col(_GROUP_COL).isin([int(g) for g in only_groups]))
-    fold_key = _build_fold(specs, spec_cols)
-    if method == "map":
-        fold = _fold_runs([_GROUP_COL], _PARTIAL_TAIL, fold_key)
-        out = tagged.mapInPandas(fold, schema=f"{_GROUP_COL} int, {_PARTIAL_TAIL}")
-    else:
-        out = _sorted_fold(tagged, [_GROUP_COL], [], _PARTIAL_TAIL, fold_key)
-    return out.withColumnRenamed(_GROUP_COL, "group_id")
+    fold = _fold_runs([_GROUP_COL], _PARTIAL_TAIL, _build_fold(specs, spec_cols))
+    return (
+        proj.withColumn(_GROUP_COL, F.spark_partition_id())
+        .mapInPandas(fold, schema=f"{_GROUP_COL} int, {_PARTIAL_TAIL}")
+        .withColumnRenamed(_GROUP_COL, "group_id")
+    )
 
 
 def tree_merge(
@@ -331,11 +330,7 @@ def sketch_aggregate(
     df: DataFrame, specs: list[SketchSpec], method: str = "map"
 ) -> dict[str, object]:
     """build_sketches + tree_merge in one call -> {name: kernel}."""
-    num_groups = None
-    if method == "group":
-        num_groups = df.sparkSession.sparkContext.defaultParallelism * 2
-    lineage = build_sketches(df, specs, num_groups=num_groups, method=method)
-    return tree_merge(lineage, specs, n_states=num_groups)
+    return tree_merge(build_sketches(df, specs, method=method), specs)
 
 
 def _deserializer(spec: SketchSpec):

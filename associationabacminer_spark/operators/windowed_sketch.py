@@ -30,13 +30,14 @@ WINDOW_LINEAGE_SCHEMA = (
     "row_count long, sketch binary, wall_time_s double"
 )
 _TAIL = ("row_count", "sketch", "wall_time_s")
+_KEYS = ["window_start", "window_end", "salt"]
+# the windowed ledger's column order (salt after sketch_name)
+_LEDGER_COLUMNS = ["window_start", "window_end", "sketch_name", "salt", *_TAIL]
 
 
 def salt_expr(specs, salts: int, salt_cols: list[str] | None = None):
-    """THE salt shared by the partial builds and the resume anti-join —
-    one definition so a future change cannot desynchronize them (the
-    ledger's (window, salt) keys must match what a resumed run
-    recomputes).
+    """The salt of the windowed and grouped partial builds: a content
+    hash, so a resumed run recomputes the ledger's (window, salt) keys.
 
     With no ``salt_cols`` this hashes the spec columns only:
     deterministic across any input partitioning, which keeps merges
@@ -87,25 +88,28 @@ def windowed_sketch_partials(
     at ~1/salts of the window — and a second stage merges the fixed-size
     partials per window.  The fold streams the key-sorted rows and
     holds one key's spec columns at a time (the salt bounds that key),
-    never a group's pandas frame.  The window reaches the fold as two scalar
-    timestamp columns; a struct column would cross Arrow as one Python
-    object per row.  The salt is a deterministic content hash, and the
-    merge folds in salt order, so the result is bit-reproducible across
-    any input partitioning.
+    never a group's pandas frame.  The salt is a deterministic content
+    hash, and the merge folds in salt order, so the result is
+    bit-reproducible across any input partitioning.
 
     ``salt_cols`` defaults to ``[ts_col]`` — the always-present
     high-cardinality column — so one hot VALUE no longer collapses onto
     a single salt by default; pass an explicit list to override."""
+    keyed = _window_keyed(df, specs, ts_col, width, slide, salts, salt_cols)
+    return build_partials(keyed, specs, _KEYS).select(*_LEDGER_COLUMNS)
+
+
+def _window_keyed(df, specs, ts_col, width, slide, salts, salt_cols):
+    """THE (window, salt) keys of the partial builds and the resumed
+    ledger: ``window_start, window_end, salt`` plus the spec columns.
+    The window reaches the fold as two scalar timestamp columns; a struct
+    column would cross Arrow as one Python object per row."""
     salt = salt_expr(specs, salts, salt_cols if salt_cols is not None else [ts_col])
-    keyed = df.withColumn("__w__", F.window(ts_col, width, slide)).select(
+    return df.withColumn("__w__", F.window(ts_col, width, slide)).select(
         F.col("__w__.start").alias("window_start"),
         F.col("__w__.end").alias("window_end"),
         salt.alias("salt"),
         *dict.fromkeys(s.column for s in specs),
-    )
-    # the windowed ledger's column order (salt after sketch_name)
-    return build_partials(keyed, specs, ["window_start", "window_end", "salt"]).select(
-        "window_start", "window_end", "sketch_name", "salt", *_TAIL
     )
 
 
@@ -150,10 +154,13 @@ def run_windowed_with_lineage(
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
     """Resumable TUMBLING-window sketch build: (window, salt) partials
-    checkpoint to a parquet ledger; a resumed run anti-joins the input
-    against the ledger's present (window_start, salt) keys and rebuilds
-    ONLY the missing partials — the windowed twin of
-    plans/lineage.run_with_lineage (X6/X7).
+    checkpoint to a parquet ledger; a resumed run rebuilds ONLY the keys
+    the ledger lacks (``plans.lineage.resume_partials``, the loop behind
+    ``run_with_lineage`` too).
+
+    Same-input contract: a key in the ledger counts as complete.  A
+    ledger cut mid-window and resumed over more rows keeps that window's
+    stale partials; cut on window boundaries, it resumes byte for byte.
 
     Tumbling only (width == slide): each row belongs to exactly one
     window, so input pruning by anti-join is sound.  For sliding windows
@@ -163,55 +170,17 @@ def run_windowed_with_lineage(
     Returns the merged one-row-per-(window, sketch) DataFrame."""
     import os
 
-    from associationabacminer_spark.plans.lineage import read_if_present
-    from associationabacminer_spark.plans.metrics import observed
+    from associationabacminer_spark.plans.lineage import resume_partials
 
-    spark = df.sparkSession
-    build_path = os.path.join(ledger_path, "windowed_build")
-    existing = read_if_present(spark, build_path)
-
-    todo = df
-    if existing is not None:
-        present = existing.select("window_start", "salt").distinct()
-        keyed = df.withColumn(
-            "__ws__", F.window(ts_col, width)["start"]
-        ).withColumn(
-            "__salt__",
-            # MUST mirror windowed_sketch_partials' defaulting or a
-            # resumed run would recompute different (window, salt) keys
-            salt_expr(specs, salts, salt_cols if salt_cols is not None else [ts_col]),
-        )
-        todo = (
-            keyed.join(
-                F.broadcast(present),
-                (keyed["__ws__"] == present["window_start"])
-                & (keyed["__salt__"] == present["salt"]),
-                "left_anti",
-            )
-            .drop("__ws__", "__salt__")
-        )
-
-    # a fresh build needs no probe: an empty input writes an empty ledger
-    if existing is None or todo.limit(1).count() > 0:
-        partials = windowed_sketch_partials(
-            todo, specs, ts_col, width, width, salts, salt_cols
-        )
-        partials, obs = observed(
-            partials,
-            name="windowed-lineage",
-            lineage_rows=F.count(F.lit(1)),
-            # the sum over no rows is null
-            rows_processed=F.coalesce(F.sum("row_count"), F.lit(0)),
-        )
-        partials.write.mode("append" if existing is not None else "overwrite").parquet(
-            build_path
-        )
-        if metrics_out is not None:
-            metrics_out.update(obs.get)
-    elif metrics_out is not None:
-        metrics_out.update({"lineage_rows": 0, "rows_processed": 0})
-
-    return _merge_window_partials(spark.read.parquet(build_path), specs)
+    ledger = resume_partials(
+        _window_keyed(df, specs, ts_col, width, width, salts, salt_cols),
+        specs,
+        _KEYS,
+        os.path.join(ledger_path, "windowed_build"),
+        _LEDGER_COLUMNS,
+        metrics_out,
+    )
+    return _merge_window_partials(ledger, specs)
 
 
 def grouped_sketch_states(

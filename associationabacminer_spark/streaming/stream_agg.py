@@ -4,8 +4,10 @@ The reference has no streaming at all — its 'windows' are reprocessed
 batch jobs from a Mongo queue (SURVEY.md §2.9 W1).  Here the same
 semantics run incrementally: watermarked sliding event-time windows, and
 a ``foreachBatch`` sketch builder that folds each micro-batch into the
-mergeable kernels (exactly-once per epoch id is the caller's concern;
-sketch merge idempotence makes at-least-once safe for HLL/Bloom).
+mergeable kernels.  A query restarted from its checkpoint replays its
+last uncommitted epoch; the sketch builder folds each epoch id once, so
+the replay cannot double-count CMS, KLL or t-digest (HLL and Bloom
+merges are idempotent anyway).
 """
 
 from __future__ import annotations
@@ -55,11 +57,15 @@ def streaming_sketch_build(
     Mergeable sketches make incremental aggregation trivial: each epoch
     builds partial sketches distributed, then merges into the running
     state on the driver — the streaming analog of the two-stage tree.
+    An epoch id already folded by this function is skipped, so a replay
+    (a query restarted in the same driver) leaves ``state`` unchanged.
     """
     from associationabacminer_spark.operators.agg import sketch_aggregate
 
+    folded: set[int] = set()
+
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        if epoch_id in folded or batch_df.isEmpty():
             return
         partial = sketch_aggregate(batch_df, specs)
         for name, kernel in partial.items():
@@ -67,6 +73,7 @@ def streaming_sketch_build(
                 state[name] = type(kernel).merge(state[name], kernel)
             else:
                 state[name] = kernel
+        folded.add(epoch_id)  # only once merged: a failed epoch retries
 
     return fold
 

@@ -529,6 +529,25 @@ class TestStreaming:
         est = state["hll"].estimate()
         assert abs(est - exact) <= max(1.0, 3 * state["hll"].relative_error * exact)
 
+    def test_replayed_epoch_folds_once(self, spark, sf_dir):
+        """A query restarted from its checkpoint replays its last
+        uncommitted epoch: the sketch fold must not count it twice."""
+        from associationabacminer_spark.operators.agg import SketchSpec
+        from associationabacminer_spark.sketch import CountMinSketch
+        from associationabacminer_spark.streaming import streaming_sketch_build
+
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        state: dict = {}
+        fold = streaming_sketch_build(
+            ev,
+            [SketchSpec("cms", CountMinSketch, "event_type", kernel_cls=CountMinSketch,
+                        prehash=True)],
+            state,
+        )
+        fold(ev, 0)
+        fold(ev, 0)
+        assert state["cms"].total == ev.count()
+
 
     def test_foreach_batch_binned_quantiles_match_batch_operator(
         self, spark, tmp_path

@@ -385,13 +385,18 @@ class TestSortedFoldPlans:
     def test_group_build_budget(self, spark):
         """The ledger's group build is one keyed fold: one exchange on the
         group id, one ``MapInPandas``, no per-group pandas frame."""
-        from associationabacminer_spark.operators.agg import SketchSpec, build_sketches
+        from associationabacminer_spark.operators.agg import (
+            SketchSpec,
+            build_partials,
+            group_id,
+        )
         from associationabacminer_spark.sketch import HyperLogLog
 
         ev = spark.read.parquet(f"{SF}/events.parquet")
         specs = [SketchSpec("hll_user", HyperLogLog, "user_id",
                             kernel_cls=HyperLogLog, prehash=True)]
-        nodes = self._nodes(build_sketches(ev, specs, num_groups=8, method="group"))
+        keyed = ev.withColumn("group_id", group_id(specs, 8))
+        nodes = self._nodes(build_partials(keyed, specs, ["group_id"]))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert nodes.count("MapInPandas") == 1, nodes
         assert nodes.count("Exchange") == 1, nodes

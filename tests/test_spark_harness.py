@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 
 import numpy as np
 import pytest
@@ -211,13 +212,10 @@ class TestResume:
                 prepared, specs, tmp + "/full", num_groups=32, run_id="r1"
             )
 
-            # simulate executor loss: build a partial ledger holding only
-            # half the groups, then resume
+            # simulate executor loss: a partial ledger holding only half
+            # the groups, then resume
             partial_path = tmp + "/partial"
-            lineage = build_sketches(prepared, specs, num_groups=32, method="group")
-            kept = lineage.filter(F.col("group_id") < 16).withColumn(
-                "run_id", F.lit("r1")
-            )
+            kept = spark.read.parquet(tmp + "/full/build").filter(F.col("group_id") < 16)
             kept.write.mode("overwrite").parquet(partial_path + "/build")
 
             resumed = run_with_lineage(
@@ -384,11 +382,11 @@ class TestLineageMetrics:
         assert m["rows_processed"] == n
         assert m["lineage_rows"] == 4  # groups x 1 sketch
         assert m["wall_time_s"] > 0
-        # idempotent re-run: ledger complete -> no build -> no new metrics
+        # idempotent re-run: ledger complete -> nothing folded
         m2: dict = {}
         run_with_lineage(ev, specs, str(tmp_path / "ledger"), num_groups=4,
                          metrics_out=m2)
-        assert m2 == {}
+        assert m2["rows_processed"] == 0 and m2["lineage_rows"] == 0
 
 
 class TestWindowedResume:
@@ -440,6 +438,50 @@ class TestWindowedResume:
         run_windowed_with_lineage(ev, specs, ledger, "ts", "1 day", metrics_out=m3)
         assert m3["rows_processed"] == 0
 
+    def test_resume_over_whole_days_is_byte_identical(self, spark, sf_dir, tmp_path):
+        """Same-input contract: a ledger cut on a window boundary, resumed
+        over the full input, merges to the bytes of a fresh build for
+        every kernel, and folds exactly the rows after the cut."""
+        from associationabacminer_spark.operators.windowed_sketch import (
+            run_windowed_with_lineage,
+        )
+
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        specs = [
+            SketchSpec("hll_user", HyperLogLog, "user_id", kernel_cls=HyperLogLog,
+                       prehash=True),
+            SketchSpec("cms_type", lambda: CountMinSketch(width=512, depth=4),
+                       "event_type", kernel_cls=CountMinSketch, prehash=True),
+            SketchSpec("kll_value", lambda: KLL(k=64), "value", kernel_cls=KLL),
+            SketchSpec("td_value", lambda: TDigest(delta=50), "value",
+                       kernel_cls=TDigest),
+            SketchSpec("bloom_user", lambda: BloomFilter.from_capacity(2_000, 0.01),
+                       "user_id", kernel_cls=BloomFilter, prehash=True),
+        ]
+        last = ev.agg(F.max("ts")).collect()[0][0]
+        cut = F.date_trunc("day", F.lit(last)) - F.expr("INTERVAL 5 DAYS")
+        ledger = str(tmp_path / "wledger")
+        run_windowed_with_lineage(ev.filter(F.col("ts") < cut), specs, ledger, "ts", "1 day")
+        m: dict = {}
+        resumed = run_windowed_with_lineage(ev, specs, ledger, "ts", "1 day",
+                                            metrics_out=m).collect()
+        # every spec folds every row after the cut (no nulls to drop)
+        assert m["rows_processed"] == len(specs) * ev.filter(F.col("ts") >= cut).count()
+        fresh = run_windowed_with_lineage(
+            ev, specs, str(tmp_path / "fresh"), "ts", "1 day"
+        ).collect()
+
+        def states(rows):
+            return {
+                (r["window_start"], r["sketch_name"]): (r["row_count"], bytes(r["sketch"]))
+                for r in rows
+            }
+
+        assert len(fresh) == 30 * len(specs)
+        assert states(resumed) == states(fresh)
+
     def test_fresh_build_over_empty_input(self, spark, tmp_path):
         from associationabacminer_spark.operators.agg import SketchSpec
         from associationabacminer_spark.operators.windowed_sketch import (
@@ -459,6 +501,62 @@ class TestWindowedResume:
         )
         assert merged.collect() == []
         assert m["rows_processed"] == 0
+
+
+def _jobs(spark, fn) -> int:
+    """The Spark jobs ``fn()`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestLedgerJobBudget:
+    """A resume over a partial ledger runs at most one job more than a
+    fresh build of the same input: the broadcast of the ledger's keys.
+    Reading a ledger with its declared schema runs no footer job."""
+
+    @staticmethod
+    def _events(spark, sf_dir):
+        return spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+
+    @staticmethod
+    def _specs():
+        return [SketchSpec("hll_user", HyperLogLog, "user_id",
+                           kernel_cls=HyperLogLog, prehash=True)]
+
+    def test_group_ledger_resume_budget(self, spark, sf_dir, tmp_path):
+        ev, specs = self._events(spark, sf_dir), self._specs()
+        full, partial = str(tmp_path / "full"), str(tmp_path / "partial")
+        fresh = _jobs(spark, lambda: run_with_lineage(ev, specs, full, num_groups=8))
+        spark.read.parquet(full + "/build").filter(F.col("group_id") < 4).write.parquet(
+            partial + "/build"
+        )
+        resume = _jobs(spark, lambda: run_with_lineage(ev, specs, partial, num_groups=8))
+        assert resume <= fresh + 1, (fresh, resume)
+
+    def test_windowed_ledger_resume_budget(self, spark, sf_dir, tmp_path):
+        from associationabacminer_spark.operators.windowed_sketch import (
+            run_windowed_with_lineage,
+        )
+
+        ev, specs = self._events(spark, sf_dir), self._specs()
+        full, partial = str(tmp_path / "full"), str(tmp_path / "partial")
+
+        def build(df, path):
+            return lambda: run_windowed_with_lineage(df, specs, path, "ts", "1 day").collect()
+
+        fresh = _jobs(spark, build(ev, full))
+        last = ev.agg(F.max("ts")).collect()[0][0]
+        build(ev.filter(F.col("ts") < F.lit(last) - F.expr("INTERVAL 5 DAYS")), partial)()
+        resume = _jobs(spark, build(ev, partial))
+        assert resume <= fresh + 1, (fresh, resume)
 
 
 class TestSortedStreamFold:
@@ -869,10 +967,8 @@ class TestLedgerOrdering:
             specs = [
                 SketchSpec("hll_conv", HyperLogLog, "conv_id", kernel_cls=HyperLogLog)
             ]
-            lineage = build_sketches(prepared, specs, num_groups=32, method="group")
-            kept = lineage.filter(F.col("group_id") < 16).withColumn(
-                "run_id", F.lit("r1")
-            )
+            run_with_lineage(prepared, specs, tmp + "/fresh", num_groups=32, run_id="r1")
+            kept = spark.read.parquet(tmp + "/fresh/build").filter(F.col("group_id") < 16)
             kept.write.mode("overwrite").parquet(tmp + "/build")
 
             run_with_lineage(prepared, specs, tmp, num_groups=32, run_id="r2")
