@@ -45,8 +45,11 @@ def _arrow_cols(df: DataFrame, *cols: str) -> list[np.ndarray]:
     tbl = df.toArrow()
     return [tbl.column(c).to_numpy(zero_copy_only=False) for c in cols]
 
-def hll_register_table(df: DataFrame, col: str, p: int = 14) -> DataFrame:
-    """(idx, rho) register table via pure SQL — <= 2^p rows."""
+def hll_register_table(
+    df: DataFrame, col: str, p: int = 14, group_cols=()
+) -> DataFrame:
+    """(group_cols..., idx, rho) register table via pure SQL — <= 2^p
+    rows per group."""
     h = F.xxhash64(col)
     idx = F.shiftrightunsigned(h, 64 - p)
     rest = h.bitwiseAND(F.lit((1 << (64 - p)) - 1))
@@ -56,8 +59,8 @@ def hll_register_table(df: DataFrame, col: str, p: int = 14) -> DataFrame:
     )
     return (
         df.filter(F.col(col).isNotNull())
-        .select(idx.alias("idx"), rho.cast("int").alias("rho"))
-        .groupBy("idx")
+        .select(*group_cols, idx.alias("idx"), rho.cast("int").alias("rho"))
+        .groupBy(*group_cols, "idx")
         .agg(F.max("rho").alias("rho"))
     )
 
@@ -127,23 +130,73 @@ def kll_from_sql(df: DataFrame, col: str, k: int = 200) -> KLL:
     return out
 
 
+def log_bin(c, rel_width: float):
+    """Symmetric-log bin index ``signum(c)·floor(log1p(|c|)/rel_width)``
+    of a double column.  Odd and increasing in ``c``, so bin order is
+    value order.  Bin k > 0 spans ``[expm1(k·w), expm1((k+1)·w))``, a
+    width of ``expm1(w)·(1 + lower edge)``; negative bins mirror it, and
+    bin 0 spans ``(-expm1(w), expm1(w))``, both signs."""
+    return (
+        F.signum(c) * F.floor(F.log1p(F.abs(c)) / F.lit(float(rel_width)))
+    ).cast("long")
+
+
+def log_bins(
+    df: DataFrame, group_cols, col: str, rel_width: float = 5e-4
+) -> DataFrame:
+    """(group_cols..., __bin, __cnt, __sum): the occupied ``log_bin``
+    table of ``col`` per group, NULL/NaN dropped — one map-side combined
+    hash aggregation; rows out = occupied bins (~ ln(max/min)/rel_width
+    per group), not input rows.  Every SQL quantile path reads it."""
+    c = F.col(col).cast("double")
+    return (
+        df.filter(c.isNotNull() & ~F.isnan(c))
+        .groupBy(*group_cols, log_bin(c, rel_width).alias("__bin"))
+        .agg(F.count("*").alias("__cnt"), F.sum(c).alias("__sum"))
+    )
+
+
+def _cumulative(bins: DataFrame, group_cols) -> DataFrame:
+    """``log_bins`` rows plus ``__cum`` (the group's count up to and
+    including the bin) and ``__tot`` (the group's count).  Both windows
+    run over the log-bounded bin table, never input rows."""
+    from pyspark.sql import Window
+
+    run = Window.partitionBy(*group_cols).orderBy("__bin")
+    return bins.withColumn("__cum", F.sum("__cnt").over(run)).withColumn(
+        "__tot", F.sum("__cnt").over(Window.partitionBy(*group_cols))
+    )
+
+
+def _quantile_alias(q: float) -> str:
+    return "p" + ("%g" % (q * 100)).replace(".", "_")
+
+
+def bin_quantiles(bins: DataFrame, group_cols, qs) -> DataFrame:
+    """(group_cols..., p50, ...) from a ``log_bins`` table: for each q,
+    the in-bin mean of the first bin whose cumulative count reaches rank
+    ``ceil(q·n)``.  That bin holds the exact rank-``ceil(q·n)`` value x,
+    so the answer is within one bin's width of it:
+    ``|est − x| ≤ expm1(rel_width)·(1 + |x|)``, or ``2·expm1(rel_width)``
+    in the zero bin — a relative value error, not a rank error."""
+    v = F.col("__sum") / F.col("__cnt")
+    return _cumulative(bins, group_cols).groupBy(*group_cols).agg(
+        *[
+            F.min(
+                F.when(F.col("__cum") >= F.ceil(F.lit(float(q)) * F.col("__tot")), v)
+            ).alias(_quantile_alias(q))
+            for q in qs
+        ]
+    )
+
+
 def tdigest_bin_table(
     df: DataFrame, col: str, rel_width: float = 5e-4
 ) -> DataFrame:
-    """(bin mean, count) table for a CONTINUOUS non-negative column:
-    symmetric-log binning at relative width ``rel_width``, then per-bin
-    exact mean + count — map-side combined, rows out = occupied bins
-    (~ ln(max/min)/rel_width), not input rows."""
-    c = F.col(col).cast("double")
-    b = (
-        F.signum(c)
-        * F.floor(F.log1p(F.abs(c)) / F.lit(float(rel_width)))
-    ).cast("long")
-    return (
-        df.filter(c.isNotNull() & ~F.isnan(c))
-        .groupBy(b.alias("bin"))
-        .agg(F.count("*").alias("cnt"), F.sum(c).alias("s"))
-        .select((F.col("s") / F.col("cnt")).alias("v"), "cnt")
+    """(bin mean, count) table of a CONTINUOUS column: ``log_bins`` at
+    relative width ``rel_width``, exact mean + count per occupied bin."""
+    return log_bins(df, [], col, rel_width).select(
+        (F.col("__sum") / F.col("__cnt")).alias("v"), F.col("__cnt").alias("cnt")
     )
 
 
@@ -456,18 +509,7 @@ def hll_estimate_by_group(
     same corrections) across batch, windowed, and resumed builds."""
     m = float(1 << p)
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    h = F.xxhash64(col)
-    idx = F.shiftrightunsigned(h, 64 - p)
-    rest = h.bitwiseAND(F.lit((1 << (64 - p)) - 1))
-    rho = F.when(rest == 0, F.lit(64 - p + 1)).otherwise(
-        F.lit(64 - p) - F.floor(F.log2(rest.cast("double")))
-    )
-    regs = (
-        df.filter(F.col(col).isNotNull())
-        .select(*group_cols, idx.alias("idx"), rho.cast("int").alias("rho"))
-        .groupBy(*group_cols, "idx")
-        .agg(F.max("rho").alias("rho"))
-    )
+    regs = hll_register_table(df, col, p, group_cols)
     agg = regs.groupBy(*group_cols).agg(
         F.count("*").alias("nz"),
         F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s"),
@@ -498,10 +540,6 @@ def mg_from_sql(df: DataFrame, col: str, k: int = 256) -> "MisraGries":
         )
     return mg
 
-def _quantile_alias(q: float) -> str:
-    return "p" + ("%g" % (q * 100)).replace(".", "_")
-
-
 def quantiles_by_group(
     df: DataFrame,
     group_cols: list[str],
@@ -510,15 +548,13 @@ def quantiles_by_group(
     rel_width: float = 5e-4,
 ) -> DataFrame:
     """(group_cols..., p50, p90, ...): per-group approximate quantiles
-    from the symmetric-log-binned histogram (``tdigest_bin_table``'s
-    binning, per group), computed ENTIRELY JVM-side — no Python, no
-    collect, no sort of raw rows.  One hash aggregation collapses the
-    input to (groups, bin) centroids (state per group = occupied bins,
-    ~ ln(max/min)/rel_width), then window cum-sums over that tiny table
-    select, for each q, the first bin whose cumulative count reaches
-    rank ceil(q*n).  The returned value is that bin's exact in-bin mean,
-    so the answer is within one bin's value width (~ (1+|v|)*rel_width)
-    of the exact discrete quantile — and when every distinct value
+    computed ENTIRELY JVM-side — no Python, no collect, no sort of raw
+    rows.  ``log_bins`` collapses the input to (groups, bin) centroids
+    (state per group = occupied bins, ~ ln(max/min)/rel_width) and
+    ``bin_quantiles`` selects, for each q, the first bin whose cumulative
+    count reaches rank ceil(q*n).  The returned value is that bin's exact
+    in-bin mean, within one bin's width of the exact discrete quantile
+    (``bin_quantiles`` states the bound) — and when every distinct value
     occupies its own bin (integer-valued columns below ~1/rel_width) it
     IS the exact discrete quantile, which is what the oracled q72 pins.
 
@@ -527,38 +563,7 @@ def quantiles_by_group(
     (heavy hitters): p95-per-service over 100 TB without
     percentile_approx's per-group QuantileSummaries state or a global
     sort."""
-    from pyspark.sql import Window
-
-    c = F.col(col).cast("double")
-    b = (
-        F.signum(c) * F.floor(F.log1p(F.abs(c)) / F.lit(float(rel_width)))
-    ).cast("long")
-    bins = (
-        df.filter(c.isNotNull() & ~F.isnan(c))
-        .groupBy(*group_cols, b.alias("__bin"))
-        .agg(F.count("*").alias("__cnt"), F.sum(c).alias("__sum"))
-        .select(
-            *group_cols, (F.col("__sum") / F.col("__cnt")).alias("__v"), "__cnt"
-        )
-    )
-    # bins are disjoint value intervals, so ordering by the in-bin mean
-    # equals ordering by bin index; both windows run over the already
-    # log-bounded bin table, not input rows
-    run = Window.partitionBy(*group_cols).orderBy("__v")
-    allw = Window.partitionBy(*group_cols)
-    cum = bins.withColumn("__cum", F.sum("__cnt").over(run)).withColumn(
-        "__tot", F.sum("__cnt").over(allw)
-    )
-    aggs = [
-        F.min(
-            F.when(
-                F.col("__cum") >= F.ceil(F.lit(float(q)) * F.col("__tot")),
-                F.col("__v"),
-            )
-        ).alias(_quantile_alias(q))
-        for q in qs
-    ]
-    return cum.groupBy(*group_cols).agg(*aggs)
+    return bin_quantiles(log_bins(df, group_cols, col, rel_width), group_cols, qs)
 
 
 def percentile_by_group(
@@ -575,14 +580,14 @@ def percentile_by_group(
     that ``percent_rank() OVER (PARTITION BY g ORDER BY v)`` costs at
     100 TB.
 
-    Plan: one hash aggregation collapses the input to (group, bin)
-    counts over the same symlog bins as ``quantiles_by_group`` (state =
-    occupied bins per group, ~ln(max/min)/rel_width, never rows); a
+    Plan: ``log_bins`` collapses the input to (group, bin) counts (state
+    = occupied bins per group, ~ln(max/min)/rel_width, never rows); a
     window cum-sum over that tiny table yields each bin's
-    count-strictly-below; the bin table is then broadcast back onto the
-    fact rows (bin recomputed map-side, no fact-side shuffle).  Total:
-    ONE Exchange over slim (group, bin) pairs vs the window's full-data
-    Exchange + per-group sort.
+    count-strictly-below; the bin table is then joined back onto the
+    fact rows (``log_bin`` recomputed map-side, no fact-side shuffle
+    when the planner broadcasts the bin table).  Total: ONE Exchange over
+    slim (group, bin) pairs vs the window's full-data Exchange +
+    per-group sort.
 
     ``out_col`` = (# group rows with a strictly smaller bin) /
     (group_count - 1), i.e. exactly SQL ``percent_rank`` whenever every
@@ -593,21 +598,12 @@ def percentile_by_group(
     lower percentile — an error of at most one bin's mass.  Rows with
     NULL/NaN ``col`` are excluded (mirror the filter in any oracle).
     Single-row groups get 0.0, matching percent_rank."""
-    from pyspark.sql import Window
-
     c = F.col(col).cast("double")
-    b = (
-        F.signum(c) * F.floor(F.log1p(F.abs(c)) / F.lit(float(rel_width)))
-    ).cast("long")
-    # bin index is monotone in value (symlog is odd + increasing), so
-    # ordering / cum-summing by __bin == ordering by value
-    facts = df.filter(c.isNotNull() & ~F.isnan(c)).withColumn("__bin", b)
-    bins = facts.groupBy(*group_cols, "__bin").agg(F.count("*").alias("__cnt"))
-    run = Window.partitionBy(*group_cols).orderBy("__bin")
-    allw = Window.partitionBy(*group_cols)
-    ranked = bins.withColumn(
-        "__below", F.sum("__cnt").over(run) - F.col("__cnt")
-    ).withColumn("__tot", F.sum("__cnt").over(allw))
+    facts = df.filter(c.isNotNull() & ~F.isnan(c)).withColumn(
+        "__bin", log_bin(c, rel_width)
+    )
+    below = (F.col("__cum") - F.col("__cnt")).alias("__below")
+    ranked = _cumulative(log_bins(df, group_cols, col, rel_width), group_cols)
     pct = F.when(
         F.col("__tot") > 1, F.col("__below") / (F.col("__tot") - F.lit(1))
     ).otherwise(F.lit(0.0))
@@ -617,7 +613,7 @@ def percentile_by_group(
     # planner decide from its size estimate instead of forcing it
     return (
         facts.join(
-            ranked.select(*group_cols, "__bin", "__below", "__tot"),
+            ranked.select(*group_cols, "__bin", below, "__tot"),
             [*group_cols, "__bin"],
         )
         .withColumn(out_col, pct)

@@ -5,9 +5,9 @@ batch jobs from a Mongo queue (SURVEY.md §2.9 W1).  Here the same
 semantics run incrementally: watermarked sliding event-time windows, and
 a ``foreachBatch`` sketch builder that folds each micro-batch into the
 mergeable kernels.  A query restarted from its checkpoint replays its
-last uncommitted epoch; the sketch builder folds each epoch id once, so
-the replay cannot double-count CMS, KLL or t-digest (HLL and Bloom
-merges are idempotent anyway).
+last uncommitted epoch; the sketch builder and the binned histogram
+fold each epoch id once, so the replay cannot double-count CMS, KLL,
+t-digest or bin counts (HLL and Bloom merges are idempotent anyway).
 """
 
 from __future__ import annotations
@@ -84,39 +84,27 @@ def streaming_binned_histogram(
     state: dict,
     rel_width: float = 5e-4,
 ):
-    """foreachBatch sink folding each micro-batch's (group, bin)
-    centroid table into ``state`` ({group_tuple: {bin: [count, sum]}})
-    — the streaming twin of ``operators.sql_sketch.quantiles_by_group``.
-    Each batch's reduction runs JVM-side (the same symmetric-log
-    binning); only the occupied-bin table crosses to the driver, so
-    state stays at groups x occupied bins regardless of stream length,
-    and bin (count, sum) pairs are additive, so at-least-once epochs
-    only ever need the caller's epoch-id dedup, never a rebuild.
-    Quantiles are read at any time via ``quantiles_from_binned_state``
-    and equal the batch operator on the union of batches (exactly, for
-    integral columns; up to float summation order otherwise)."""
+    """foreachBatch sink folding each micro-batch's
+    ``operators.sql_sketch.log_bins`` table into ``state``
+    ({group_tuple: {bin: (count, sum)}}) — the streaming twin of
+    ``quantiles_by_group``.  Each batch's reduction is one JVM-side
+    query; only the occupied-bin table crosses to the driver, so state
+    stays at groups x occupied bins regardless of stream length.  Bin
+    (count, sum) pairs are additive, and an epoch id already folded is
+    skipped, so a replayed epoch leaves ``state`` unchanged.  Quantiles
+    are read at any time via ``quantiles_from_binned_state``."""
+    from associationabacminer_spark.operators.sql_sketch import log_bins
+
+    folded: set[int] = set()
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        if epoch_id in folded:
             return
-        c = F.col(col).cast("double")
-        b = (
-            F.signum(c) * F.floor(F.log1p(F.abs(c)) / F.lit(float(rel_width)))
-        ).cast("long")
-        rows = (
-            batch_df.filter(c.isNotNull() & ~F.isnan(c))
-            .groupBy(*group_cols, b.alias("__bin"))
-            .agg(F.count("*").alias("__cnt"), F.sum(c).alias("__sum"))
-            .collect()
-        )
-        for r in rows:
+        for r in log_bins(batch_df, group_cols, col, rel_width).collect():
             bins = state.setdefault(tuple(r[g] for g in group_cols), {})
-            cur = bins.get(r["__bin"])
-            if cur is None:
-                bins[r["__bin"]] = [r["__cnt"], r["__sum"]]
-            else:
-                cur[0] += r["__cnt"]
-                cur[1] += r["__sum"]
+            cnt, s = bins.get(r["__bin"], (0, 0.0))
+            bins[r["__bin"]] = (cnt + r["__cnt"], s + r["__sum"])
+        folded.add(epoch_id)  # only once merged: a failed epoch retries
 
     return fold
 
@@ -125,29 +113,28 @@ def quantiles_from_binned_state(
     state: dict, qs: tuple = (0.5, 0.9, 0.99)
 ) -> dict:
     """{group_tuple: {"p50": v, ...}} from a ``streaming_binned_histogram``
-    state — the identical rank-ceil(q*n) in-bin-mean selection as the
-    batch operator (bin means sort like bin indexes: disjoint value
-    intervals)."""
-    import math
+    state.  The state becomes a (__g, __bin, __cnt, __sum) frame on the
+    active session, read by the batch operator's own selection
+    (``sql_sketch.bin_quantiles``) in one Spark query, so the result
+    equals ``quantiles_by_group`` on the union of the batches (exactly,
+    for integral columns; up to float summation order otherwise)."""
+    from pyspark.sql import SparkSession
 
-    from associationabacminer_spark.operators.sql_sketch import _quantile_alias
+    from associationabacminer_spark.operators.sql_sketch import bin_quantiles
 
+    groups = list(state)
+    rows = [
+        (g, b, cnt, s)
+        for g, bins in enumerate(state.values())
+        for b, (cnt, s) in bins.items()
+    ]
+    bins = SparkSession.active().createDataFrame(
+        rows, "__g int, __bin long, __cnt long, __sum double"
+    )
     out = {}
-    for g, bins in state.items():
-        items = sorted((s / cnt, cnt) for cnt, s in bins.values())
-        total = sum(c for _, c in items)
-        res = {}
-        for q in qs:
-            rank = math.ceil(float(q) * total)
-            cum = 0
-            val = items[-1][0] if items else None
-            for v, cnt in items:
-                cum += cnt
-                if cum >= rank:
-                    val = v
-                    break
-            res[_quantile_alias(q)] = val
-        out[g] = res
+    for r in bin_quantiles(bins, ["__g"], qs).collect():
+        res = r.asDict()
+        out[groups[res.pop("__g")]] = res
     return out
 
 

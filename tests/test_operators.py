@@ -531,10 +531,14 @@ class TestStreaming:
 
     def test_replayed_epoch_folds_once(self, spark, sf_dir):
         """A query restarted from its checkpoint replays its last
-        uncommitted epoch: the sketch fold must not count it twice."""
+        uncommitted epoch: neither the sketch fold nor the binned
+        histogram may count it twice."""
         from associationabacminer_spark.operators.agg import SketchSpec
         from associationabacminer_spark.sketch import CountMinSketch
-        from associationabacminer_spark.streaming import streaming_sketch_build
+        from associationabacminer_spark.streaming import (
+            streaming_binned_histogram,
+            streaming_sketch_build,
+        )
 
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         state: dict = {}
@@ -547,6 +551,11 @@ class TestStreaming:
         fold(ev, 0)
         fold(ev, 0)
         assert state["cms"].total == ev.count()
+        binned: dict = {}
+        fold = streaming_binned_histogram(["event_type"], "value", binned)
+        fold(ev, 0)
+        fold(ev, 0)
+        assert sum(c for bins in binned.values() for c, _ in bins.values()) == ev.count()
 
 
     def test_foreach_batch_binned_quantiles_match_batch_operator(

@@ -429,3 +429,33 @@ class TestSortedFoldPlans:
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         # the map build's fold and the bucket merge's fold
         assert nodes.count("MapInPandas") == 2, nodes
+
+
+class TestQuantilePlans:
+    """The log-binned quantile family and the per-group HLL stay JVM-side
+    with fixed exchange budgets: one per hash aggregation, one for the
+    group windows, and a broadcast of the bin table back onto the facts."""
+
+    def test_exchange_budgets(self, spark):
+        from associationabacminer_spark.operators.sql_sketch import (
+            hll_estimate_by_group,
+            percentile_by_group,
+            quantiles_by_group,
+            tdigest_bin_table,
+        )
+
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        budgets = {
+            "tdigest_bin_table": (tdigest_bin_table(ev, "value"), 1, 0),
+            "quantiles_by_group": (
+                quantiles_by_group(ev, ["event_type"], "value"), 2, 0),
+            "percentile_by_group": (
+                percentile_by_group(ev, ["event_type"], "value"), 2, 1),
+            "hll_estimate_by_group": (
+                hll_estimate_by_group(ev, ["event_type"], "user_id"), 2, 0),
+        }
+        for name, (df, exchanges, broadcasts) in budgets.items():
+            nodes = TestSortedFoldPlans._nodes(df)
+            assert not any("Python" in n for n in nodes), (name, nodes)
+            assert nodes.count("Exchange") == exchanges, (name, nodes)
+            assert nodes.count("BroadcastExchange") == broadcasts, (name, nodes)

@@ -724,9 +724,12 @@ class TestQuantilesByGroup:
                 assert have == vs[math.ceil(q * n) - 1], (g, q)
 
     def test_continuous_within_bin_width_and_no_python(self, spark):
-        """Continuous values: the result sits within one bin's value
-        width of the exact discrete quantile (rank is exact, the value
-        snaps to the in-bin mean); the plan is pure Catalyst."""
+        """Continuous values: the selected bin holds the exact discrete
+        quantile x (rank is exact, the value snaps to the in-bin mean), so
+        the result is within one bin's width of it: expm1(w)*(1+|x|), or
+        2*expm1(w) in the zero bin, which spans both signs.  Checked on
+        positive values and on signed values with exact zeros; the plan
+        is pure Catalyst."""
         import math
 
         import numpy as np
@@ -736,22 +739,31 @@ class TestQuantilesByGroup:
         )
 
         rng = np.random.default_rng(11)
-        vals = rng.lognormal(mean=3.0, sigma=1.2, size=4000)
-        df = spark.createDataFrame(
-            [(int(i % 2), float(v)) for i, v in enumerate(vals)],
-            "g int, v double",
-        )
+        positive = rng.lognormal(mean=3.0, sigma=1.2, size=4000)
+        # dense enough that bins wider than rel_width break the bound
+        signed = rng.uniform(-1.0, 1.0, size=4000)
+        signed[rng.random(4000) < 0.2] = 0.0
         w = 1e-3
-        out = quantiles_by_group(df, ["g"], "v", (0.5, 0.95), rel_width=w)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan  # no BatchEvalPython/ArrowEvalPython
-        got = {r["g"]: (r["p50"], r["p95"]) for r in out.collect()}
-        for g in (0, 1):
-            vs = sorted(v for i, v in enumerate(vals) if i % 2 == g)
-            n = len(vs)
-            for q, have in zip((0.5, 0.95), got[g]):
-                exact = vs[math.ceil(q * n) - 1]
-                assert abs(have - exact) <= 2.0 * w * (1.0 + exact), (g, q)
+        qs = (0.05, 0.5, 0.95)
+        for vals in (positive, signed):
+            df = spark.createDataFrame(
+                [(int(i % 2), float(v)) for i, v in enumerate(vals)],
+                "g int, v double",
+            )
+            out = quantiles_by_group(df, ["g"], "v", qs, rel_width=w)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Python" not in plan  # no BatchEvalPython/ArrowEvalPython
+            got = {r["g"]: (r["p5"], r["p50"], r["p95"]) for r in out.collect()}
+            for g in (0, 1):
+                vs = sorted(v for i, v in enumerate(vals) if i % 2 == g)
+                n = len(vs)
+                for q, have in zip(qs, got[g]):
+                    exact = vs[math.ceil(q * n) - 1]
+                    if abs(exact) < math.expm1(w):  # the zero bin
+                        bound = 2.0 * math.expm1(w)
+                    else:
+                        bound = math.expm1(w) * (1.0 + abs(exact))
+                    assert abs(have - exact) <= bound, (g, q, have, exact)
 
 
 class TestPercentileByGroup:
