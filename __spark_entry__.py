@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the full distributed
     sketch suite (HLL distinct, CMS heavy hitters, KLL/t-digest
-    quantiles, Bloom membership) built via the two-stage applyInPandas
-    tree-merge harness, each estimate self-checked against its exact
-    answer and published bound."""
+    quantiles, Bloom membership) built by the sorted-stream fold
+    (mapInPandas partial builds, then a tree merge), each estimate
+    self-checked against its exact answer and published bound."""
     import associationabacminer_spark.queries as Q
 
     sf_dir = "/root/testdata/sf0.001"

@@ -7,9 +7,9 @@ Layout
 - ``sketch/``     pure-numpy mergeable sketch kernels (HLL, CMS, KLL,
                   t-digest, Bloom) — zero Spark dependencies, fully
                   vectorized (no per-row Python).
-- ``operators/``  Spark-side operators: the applyInPandas two-stage
-                  sketch-build/tree-merge harness, dedup, similarity
-                  search, top-k, windowing.
+- ``operators/``  Spark-side operators: the sorted-stream sketch fold
+                  (mapInPandas partial builds, then a tree merge), dedup,
+                  similarity search, top-k, windowing.
 - ``functions/``  scalar column functions (normalization, text analysis,
                   hashing) — built-in ``pyspark.sql.functions`` only,
                   JVM-side / codegen'd.

@@ -18,9 +18,10 @@ largest-dimension chunking (/root/reference/src/model/EnvParamGenerators.py:117-
                       states, first one ``merge_partials`` step into 64
                       buckets.
 
-Every build and merge, here and in ``windowed_sketch``, is one fold
-(``_fold_runs``) over key-sorted Arrow batches that hands each key's
-rows to every kernel in a single ``update_batch`` call.  KLL and
+Every build and merge, here, in ``windowed_sketch`` and in
+``sql_sketch``'s per-group Misra-Gries, is one fold (``_fold_runs``)
+over key-sorted Arrow batches that hands each key's rows to every
+kernel in a single ``update_batch`` call.  KLL and
 t-digest states depend on where compactions happen, so a partial's
 bytes must not depend on where Arrow cut the batches.
 
@@ -204,7 +205,7 @@ def _fold_runs(key_cols: list[str], tail: str, fold_key):
     return fold
 
 
-def _sorted_fold(df: DataFrame, key_cols, order_cols, tail: str, fold_key):
+def sorted_fold(df: DataFrame, key_cols, order_cols, tail: str, fold_key):
     """``repartition(keys).sortWithinPartitions(keys, order)``, then the
     run fold (``_fold_runs``) in one ``mapInPandas`` per partition."""
     keys = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in key_cols)
@@ -251,7 +252,7 @@ def build_partials(
     keys.  Within a key, rows reach the kernels in shuffle arrival order,
     in a single ``update_batch`` call per kernel."""
     proj, spec_cols = _projected(df, specs, extra=list(key_cols))
-    return _sorted_fold(proj, key_cols, [], _PARTIAL_TAIL, _build_fold(specs, spec_cols))
+    return sorted_fold(proj, key_cols, [], _PARTIAL_TAIL, _build_fold(specs, spec_cols))
 
 
 def merge_partials(
@@ -272,7 +273,7 @@ def merge_partials(
         return [(int(cols["row_count"].sum()), merged.serialize(), float(cols["wall_time_s"].sum()))]
 
     proj = states.select(*run_key, order_col, "row_count", "sketch", "wall_time_s")
-    return _sorted_fold(proj, run_key, [order_col], _STATE_TAIL, fold_key)
+    return sorted_fold(proj, run_key, [order_col], _STATE_TAIL, fold_key)
 
 
 def build_sketches(

@@ -1,9 +1,9 @@
 """SQL-reduced sketch builds: let Catalyst/Tungsten do the heavy
 reduction JVM-side, then materialize the kernel from the tiny aggregate.
 
-The pandas-UDAF harness (operators/agg.py) ships every row's key through
-Arrow.  For HLL and CMS the per-row work is algebraic, so it can be
-expressed as pure Spark SQL:
+The Arrow map build (operators/agg.py, one ``mapInPandas`` fold) ships
+every row's key through Arrow.  For HLL and CMS the per-row work is
+algebraic, so it can be expressed as pure Spark SQL:
 
 - HLL: register index = top p bits of xxhash64(key); rho = rank of the
   highest set bit of the remaining 50 bits.  ``groupBy(idx).max(rho)``
@@ -15,13 +15,15 @@ expressed as pure Spark SQL:
   pairs — Arrow transfer proportional to distinct keys, not rows.
 
 Both produce registers numerically identical to the prehashed
-pandas-path kernels (asserted in tests), so estimates and merge
+Arrow-path kernels (asserted in tests), so estimates and merge
 semantics are unchanged; only the physical strategy differs.  This is
 the 'let Catalyst pick the physical plan' option for the 100 TB path
 where even int64-per-row Arrow transfer is the bottleneck.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -271,6 +273,39 @@ def bloom_from_sql(df: DataFrame, col: str, m_bits: int, k: int) -> BloomFilter:
     return out
 
 
+def _mg_by_group(df, group_cols, col, capacity, salt_buckets, tail, emit):
+    """Per-group Misra-Gries in two sorted-stream folds
+    (``agg.sorted_fold``) over the JVM-side (group, key-hash) histogram.
+    The first folds each (group, salt) run into one kernel; the second
+    merges a group's partials in sorted-blob order (Spark's binary order
+    is unsigned lexicographic, so the bytes do not depend on task
+    scheduling) and returns ``emit(merged_kernel)``: the group's output
+    rows, shaped by the ``tail`` DDL fields."""
+    from associationabacminer_spark.operators.agg import sorted_fold
+    from associationabacminer_spark.sketch.misragries import MisraGries
+
+    cnts = (
+        df.filter(F.col(col).isNotNull())
+        .groupBy(*group_cols, F.xxhash64(col).alias("__kh"))
+        .agg(F.count("*").alias("__cnt"))
+        .withColumn("__salt", F.pmod(F.col("__kh"), F.lit(salt_buckets)))
+    )
+
+    def build(key, cols):
+        mg = MisraGries(capacity)
+        mg.update_batch(cols["__kh"], counts=cols["__cnt"], prehashed=True)
+        return [(mg.serialize(),)]
+
+    def merge(key, cols):
+        parts = map(MisraGries.deserialize, map(bytes, cols["state"]))
+        return emit(reduce(MisraGries.merge, parts))
+
+    partials = sorted_fold(cnts, [*group_cols, "__salt"], [], "state binary", build)
+    return sorted_fold(
+        partials.select(*group_cols, "state"), list(group_cols), ["state"], tail, merge
+    )
+
+
 def mg_by_group_states(
     df: DataFrame,
     group_cols: list[str],
@@ -281,64 +316,24 @@ def mg_by_group_states(
     """Per-group Misra-Gries heavy-hitter states: (group_cols...,
     state binary), one mergeable MG summary of ``col`` per group.
 
-    SQL-reduced build (the per-group twin of :func:`mg_from_sql`,
-    following the hll_estimate_by_group pattern): the raw rows are first
-    collapsed JVM-side by ``groupBy(groups, xxhash64(col)).count()`` —
-    map-side partial aggregation, whole-stage codegen, Arrow transfer
-    proportional to DISTINCT (group, key) pairs, never rows.  The
-    aggregated histogram is then salted on ``pmod(key_hash,
+    SQL-reduced build (the per-group twin of :func:`mg_from_sql`): the
+    raw rows are first collapsed JVM-side by ``groupBy(groups,
+    xxhash64(col)).count()`` — map-side partial aggregation, whole-stage
+    codegen, Arrow transfer proportional to DISTINCT (group, key) pairs,
+    never rows.  The histogram is salted on ``pmod(key_hash,
     salt_buckets)`` so a hot group's distinct keys spread over
     ``salt_buckets`` bounded kernel builds (MG over exact counts equals
-    the streaming build — mergeable summaries subsume streams, PODS'12),
-    and the per-(group, salt) partials merge per group in sorted-blob
-    order (byte-deterministic regardless of task scheduling).
+    the streaming build — mergeable summaries subsume streams, PODS'12);
+    a second fold merges each group's partials in sorted-blob order, so
+    the state bytes are reproducible.
 
     Each state stores at most ``capacity`` (key-hash, count) pairs; a
     group's merged summary guarantees every key with true frequency
     > n_group/(capacity+1) per partial chain is present, with the exact
     undercount bound tracked in the state (``err``)."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    from associationabacminer_spark.sketch.misragries import MisraGries
-
-    gfields = [df.schema[c] for c in group_cols]
-    out_schema = T.StructType(
-        list(gfields) + [T.StructField("state", T.BinaryType())]
-    )
-    cnts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(*group_cols, F.xxhash64(col).alias("__kh"))
-        .agg(F.count("*").alias("__cnt"))
-        .withColumn("__salt", F.pmod(F.col("__kh"), F.lit(salt_buckets)))
-    )
-
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        mg = MisraGries(capacity)
-        mg.update_batch(
-            pdf["__kh"].to_numpy(),
-            counts=pdf["__cnt"].to_numpy(),
-            prehashed=True,
-        )
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["state"] = [mg.serialize()]
-        return pd.DataFrame(row)
-
-    partials = cnts.groupBy(*group_cols, "__salt").applyInPandas(
-        build, schema=out_schema
-    )
-
-    def merge_states(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        acc = None
-        for blob in sorted(pdf["state"], key=bytes):
-            part = MisraGries.deserialize(bytes(blob))
-            acc = part if acc is None else MisraGries.merge(acc, part)
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["state"] = [acc.serialize()]
-        return pd.DataFrame(row)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge_states, schema=out_schema
+    return _mg_by_group(
+        df, group_cols, col, capacity, salt_buckets, "state binary",
+        lambda mg: [(mg.serialize(),)],
     )
 
 
@@ -356,64 +351,26 @@ def mg_topk_by_group(
     histogram downstream.  ``count_lb`` is the MG lower bound (true
     frequency is within [count_lb, count_lb + err], underestimate-only);
     ranking is by the lower bound with the key hash as a deterministic
-    tiebreak.  Original values are recovered from the hashes via a
-    distinct JVM-side (hash, value) map equi-join."""
-    import pandas as pd
-    import pyspark.sql.types as T
+    tiebreak, emitted by the same fold that merges the states.
+    Original values are recovered by one probe of the corpus's
+    (hash, value) pairs against the broadcast (groups x k)-row top
+    table, then a distinct over the output rows."""
 
-    from associationabacminer_spark.sketch.misragries import MisraGries
-
-    states = mg_by_group_states(df, group_cols, col, capacity, salt_buckets)
-    gfields = [df.schema[c] for c in group_cols]
-    top_schema = T.StructType(
-        list(gfields)
-        + [
-            T.StructField("__kh", T.LongType()),
-            T.StructField("count_lb", T.LongType()),
-            T.StructField("err", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-
-    def explode_topk(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        mg = MisraGries.deserialize(bytes(pdf["state"].iloc[0]))
-        if len(mg.keys) == 0:
-            return pd.DataFrame({f.name: [] for f in top_schema.fields})
+    def topk(mg):
         order = np.lexsort((mg.keys, -mg.counts))[:k]
-        out = {c: [pdf[c].iloc[0]] * len(order) for c in group_cols}
-        out["__kh"] = mg.keys[order].astype(np.int64)
-        out["count_lb"] = mg.counts[order]
-        out["err"] = np.full(len(order), mg.err, dtype=np.int64)
-        out["rank"] = np.arange(1, len(order) + 1, dtype=np.int32)
-        return pd.DataFrame(out)
+        keys, counts = mg.keys[order].astype(np.int64).tolist(), mg.counts[order].tolist()
+        return [(h, c, mg.err, rank) for rank, (h, c) in enumerate(zip(keys, counts), 1)]
 
-    # cache the (groups x k)-row top table: both the broadcast hash set
-    # and the final join consume it, and without the cache each branch
-    # would re-run the whole histogram aggregation
-    top = states.groupBy(*group_cols).applyInPandas(
-        explode_topk, top_schema
-    ).cache()
-    # hash -> value recovery: semi-filter the corpus scan by the (small,
-    # groups x k) top-hash set BEFORE the distinct, so the distinct's
-    # shuffle carries only rows whose value is actually reported — never
-    # the full (hash, value) domain.  broadcast() keeps the filter a
-    # map-side probe.
-    top_hashes = top.select("__kh").distinct()
-    vmap = (
-        df.filter(F.col(col).isNotNull())
-        .select(F.xxhash64(col).alias("__kh"), F.col(col).alias("__val"))
-        .join(F.broadcast(top_hashes), "__kh", "left_semi")
-        .distinct()
+    top = _mg_by_group(
+        df, group_cols, col, capacity, salt_buckets,
+        "__kh long, count_lb long, err long, rank int", topk,
     )
     return (
-        top.join(vmap, "__kh")
-        .select(
-            *group_cols,
-            F.col("__val").alias(col),
-            "count_lb",
-            "err",
-            "rank",
-        )
+        df.filter(F.col(col).isNotNull())
+        .select(F.xxhash64(col).alias("__kh"), F.col(col).alias("__val"))
+        .join(F.broadcast(top), "__kh")
+        .select(*group_cols, F.col("__val").alias(col), "count_lb", "err", "rank")
+        .distinct()
         .orderBy(*group_cols, "rank")
     )
 

@@ -45,11 +45,7 @@ def streaming_window_counts(
     )
 
 
-def streaming_sketch_build(
-    stream: DataFrame,
-    specs,
-    state: dict,
-):
+def streaming_sketch_build(specs, state: dict):
     """foreachBatch sink that folds every micro-batch into ``state``
     ({sketch_name: kernel}) via the batch harness.  Returns the function
     to pass to ``writeStream.foreachBatch``.
@@ -58,14 +54,15 @@ def streaming_sketch_build(
     builds partial sketches distributed, then merges into the running
     state on the driver — the streaming analog of the two-stage tree.
     An epoch id already folded by this function is skipped, so a replay
-    (a query restarted in the same driver) leaves ``state`` unchanged.
+    (a query restarted in the same driver) leaves ``state`` unchanged,
+    and an empty epoch builds no partials, which leaves it unchanged too.
     """
     from associationabacminer_spark.operators.agg import sketch_aggregate
 
     folded: set[int] = set()
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id in folded or batch_df.isEmpty():
+        if epoch_id in folded:
             return
         partial = sketch_aggregate(batch_df, specs)
         for name, kernel in partial.items():
@@ -138,77 +135,6 @@ def quantiles_from_binned_state(
     return out
 
 
-def streaming_conversation_state(
-    stream: DataFrame,
-    conv_col: str = "conv_id",
-    ts_col: str = "ts",
-):
-    """Custom stateful per-conversation tracker via
-    ``applyInPandasWithState`` — the arbitrary-state API the engine uses
-    where watermarked windows can't express the semantics (running
-    per-KEY aggregates that must survive across micro-batches).
-
-    State per conversation: (turns, last_ts_epoch_s, max_gap_s).  Each
-    micro-batch folds its rows in event-time order, chaining the gap
-    computation across batches through the state — the streaming twin of
-    the batch inter-turn-latency window (operators/windows.py W2).
-    Emits one update row per touched conversation per batch
-    (outputMode='update').
-
-    Contract: arrival order must respect event time ACROSS micro-batches
-    per key (in-batch disorder is sorted away).  That holds for
-    append-only time-ordered sources (Kafka per-partition order, file
-    drops by time range); for sources that violate it, use the
-    watermarked window path instead — arbitrary-state late-data repair
-    would need a per-key reorder buffer, which this operator
-    deliberately does not grow."""
-    import pandas as pd
-
-    out_schema = (
-        f"{conv_col} string, turns long, last_ts double, max_gap double"
-    )
-    state_schema = "turns long, last_ts double, max_gap double"
-
-    def update(key, pdfs, state):
-        if state.exists:
-            turns, last_ts, max_gap = state.get
-        else:
-            turns, last_ts, max_gap = 0, None, 0.0
-        for pdf in pdfs:
-            ts = (
-                pd.to_datetime(pdf[ts_col])
-                .astype("int64")
-                .to_numpy()
-                .astype("float64")
-                / 1e9
-            )
-            ts.sort()
-            for t in ts:
-                if last_ts is not None:
-                    gap = t - last_ts
-                    if gap > max_gap:
-                        max_gap = float(gap)
-                last_ts = float(t)
-                turns += 1
-        state.update((turns, last_ts, max_gap))
-        yield pd.DataFrame(
-            {
-                conv_col: [key[0]],
-                "turns": [turns],
-                "last_ts": [last_ts],
-                "max_gap": [max_gap],
-            }
-        )
-
-    return stream.groupBy(conv_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
-
-
 def streaming_dedup(
     stream: DataFrame,
     key_cols: list[str],
@@ -224,18 +150,4 @@ def streaming_dedup(
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         key_cols
-    )
-
-
-def streaming_content_dedup(
-    stream: DataFrame,
-    text_col: str,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Content-hash variant: dedup on md5(text) so byte-identical
-    payloads collapse regardless of id."""
-    keyed = stream.withColumn("__digest__", F.md5(F.col(text_col)))
-    return streaming_dedup(keyed, ["__digest__"], ts_col, watermark).drop(
-        "__digest__"
     )

@@ -9,7 +9,8 @@ Usage:
 
 Builds the full five-sketch suite (HLL conv_id, CMS tool, KLL text_len,
 t-digest inter-turn latency, Bloom conv_id) over the transcript table via
-the two-stage applyInPandas tree merge, and reports turns/sec.
+the sorted-stream fold (mapInPandas partial builds, then a tree merge),
+and reports turns/sec.
 """
 
 from __future__ import annotations

@@ -516,7 +516,6 @@ class TestStreaming:
         stream = spark.readStream.schema(ev.schema).parquet(src)
         state: dict = {}
         fold = streaming_sketch_build(
-            stream,
             [SketchSpec("hll", HyperLogLog, "user_id", kernel_cls=HyperLogLog)],
             state,
         )
@@ -532,7 +531,8 @@ class TestStreaming:
     def test_replayed_epoch_folds_once(self, spark, sf_dir):
         """A query restarted from its checkpoint replays its last
         uncommitted epoch: neither the sketch fold nor the binned
-        histogram may count it twice."""
+        histogram may count it twice, and an empty epoch leaves the
+        sketch state's bytes unchanged."""
         from associationabacminer_spark.operators.agg import SketchSpec
         from associationabacminer_spark.sketch import CountMinSketch
         from associationabacminer_spark.streaming import (
@@ -543,7 +543,6 @@ class TestStreaming:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         state: dict = {}
         fold = streaming_sketch_build(
-            ev,
             [SketchSpec("cms", CountMinSketch, "event_type", kernel_cls=CountMinSketch,
                         prehash=True)],
             state,
@@ -551,6 +550,9 @@ class TestStreaming:
         fold(ev, 0)
         fold(ev, 0)
         assert state["cms"].total == ev.count()
+        before = state["cms"].serialize()
+        fold(ev.limit(0), 1)
+        assert state["cms"].serialize() == before
         binned: dict = {}
         fold = streaming_binned_histogram(["event_type"], "value", binned)
         fold(ev, 0)
@@ -1088,83 +1090,6 @@ class TestIvfTopk:
             ).collect()
         }
         assert full == bf
-
-
-class TestStatefulStreaming:
-    def test_conversation_state_matches_batch(self, spark, tmp_path):
-        """applyInPandasWithState per-conv tracker: after draining the
-        stream, turns and max inter-turn gap must equal the batch
-        groupBy/window answers."""
-        from pyspark.sql import Window as W
-
-        from associationabacminer_spark.streaming.stream_agg import (
-            streaming_conversation_state,
-        )
-
-        ev = (
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-            .select(
-                F.col("user_id").cast("string").alias("conv_id"),
-                F.col("ts").cast("timestamp").alias("ts"),
-            )
-            .filter(F.col("conv_id").cast("long") < 30)
-        )
-        src = str(tmp_path / "conv-src")
-        # two time-ranged files written SEQUENTIALLY (distinct mtimes) so
-        # the file source delivers them oldest-first: at least one
-        # micro-batch boundary exercises cross-batch state while arrival
-        # order respects event time (the operator's documented contract)
-        import time as _time
-
-        ev2 = ev.withColumn("ts_d", F.col("ts").cast("double"))
-        median = ev2.approxQuantile("ts_d", [0.5], 0.0)[0]
-        ev2.filter(F.col("ts_d") <= median).drop("ts_d").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _time.sleep(1.2)
-        ev2.filter(F.col("ts_d") > median).drop("ts_d").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        stream = spark.readStream.schema(ev.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
-        q = (
-            streaming_conversation_state(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("convstate")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # memory sink in update mode appends every update row; keep the
-        # last row per conv (max turns)
-        got = {
-            r["conv_id"]: r
-            for r in spark.sql(
-                "SELECT * FROM (SELECT *, ROW_NUMBER() OVER "
-                "(PARTITION BY conv_id ORDER BY turns DESC) AS rn "
-                "FROM convstate) WHERE rn = 1"
-            ).collect()
-        }
-        w = W.partitionBy("conv_id").orderBy("ts")
-        batch = {
-            r["conv_id"]: r
-            for r in ev.withColumn(
-                "gap",
-                F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w),
-            )
-            .groupBy("conv_id")
-            .agg(F.count("*").alias("turns"), F.max("gap").alias("max_gap"))
-            .collect()
-        }
-        assert set(got) == set(batch)
-        for cid, b in batch.items():
-            assert got[cid]["turns"] == b["turns"], cid
-            if b["max_gap"] is not None:
-                assert abs(got[cid]["max_gap"] - b["max_gap"]) < 1e-6, cid
 
 
 class TestShingleDfCap:
@@ -1731,8 +1656,9 @@ class TestMgByGroup:
 
     def test_build_is_sql_reduced(self, spark):
         """Plan shape: the JVM hash aggregate (groups, key-hash count)
-        sits BELOW every FlatMapGroupsInPandas — Python sees distinct
-        (group, key) pairs, never raw rows."""
+        sits BELOW every MapInPandas fold and no per-group pandas frame
+        is built — Python sees distinct (group, key) pairs, never raw
+        rows."""
         from associationabacminer_spark.operators.sql_sketch import (
             mg_by_group_states,
         )
@@ -1742,9 +1668,9 @@ class TestMgByGroup:
         )
         plan = mg_by_group_states(df, ["grp"], "key")._jdf.queryExecution(
         ).executedPlan().toString()
-        assert "FlatMapGroupsInPandas" in plan
-        first_py = plan.index("FlatMapGroupsInPandas")
-        assert "HashAggregate" in plan[first_py:]  # the count runs below
+        assert "FlatMapGroupsInPandas" not in plan
+        last_py = plan.rindex("MapInPandas")
+        assert "HashAggregate" in plan[last_py:]  # the count runs below
         assert "xxhash64" in plan
 
 
@@ -1808,9 +1734,7 @@ class TestDiversitySample:
 
 class TestStreamingDedup:
     def test_duplicates_dropped_within_watermark(self, spark, tmp_path):
-        from associationabacminer_spark.streaming.stream_agg import (
-            streaming_content_dedup,
-        )
+        from associationabacminer_spark.streaming.stream_agg import streaming_dedup
 
         rows = [
             (1, "alpha", "2024-01-01 10:00:00"),
@@ -1825,7 +1749,7 @@ class TestStreamingDedup:
         src = str(tmp_path / "dedup-src")
         df.write.mode("overwrite").parquet(src)
         stream = spark.readStream.schema(df.schema).parquet(src)
-        out = streaming_content_dedup(stream, "text", "ts", watermark="10 minutes")
+        out = streaming_dedup(stream, ["text"], "ts", watermark="10 minutes")
         q = (
             out.writeStream.outputMode("append")
             .format("memory")

@@ -430,6 +430,23 @@ class TestSortedFoldPlans:
         # the map build's fold and the bucket merge's fold
         assert nodes.count("MapInPandas") == 2, nodes
 
+    def test_mg_by_group_budget(self, spark):
+        """Per-group Misra-Gries is two keyed folds over the JVM-side
+        (group, key-hash) histogram: the histogram's exchange, then one
+        exchange and one ``MapInPandas`` per fold; q51 reads its top
+        table once, through a broadcast, and caches nothing."""
+        from associationabacminer_spark.operators.sql_sketch import mg_by_group_states
+
+        ev = spark.read.parquet(f"{SF}/events.parquet")
+        nodes = self._nodes(mg_by_group_states(ev, ["event_type"], "user_id"))
+        assert "FlatMapGroupsInPandas" not in nodes, nodes
+        assert nodes.count("MapInPandas") == 2, nodes
+        assert nodes.count("Exchange") == 3, nodes
+        nodes = self._nodes(Q.QUERIES["q51_mg_topk_by_group"](spark, SF))
+        assert "FlatMapGroupsInPandas" not in nodes, nodes
+        assert "InMemoryTableScan" not in nodes, nodes
+        assert nodes.count("BroadcastExchange") == 1, nodes
+
 
 class TestQuantilePlans:
     """The log-binned quantile family and the per-group HLL stay JVM-side
