@@ -1,5 +1,5 @@
 """Text-analysis column functions for large-scale training-data pipelines:
-language ID, quality scoring, token counting, document fingerprinting.
+language ID, token counting, document fingerprinting.
 
 All built-in ``pyspark.sql.functions`` — JVM-side, codegen'd; designed so
 each has an exact ANSI-SQL twin for the DuckDB oracle.  (The reference has
@@ -26,31 +26,6 @@ def punct_ratio(text: Column | str) -> Column:
     n = F.length(t)
     punct = F.length(F.regexp_replace(t, r"[^.,;:!?'\"()-]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
-
-
-_STOPWORDS = (
-    "the", "of", "and", "to", "in", "is", "a", "for", "it", "that", "on", "with",
-)
-
-
-def stopword_ratio(text: Column | str, stopwords=_STOPWORDS) -> Column:
-    """Fraction of whitespace tokens that are (lowercase) stopwords."""
-    t = text if isinstance(text, Column) else F.col(text)
-    toks = F.split(F.trim(F.lower(t)), r"\s+")
-    hits = F.size(F.filter(toks, lambda w: w.isin(*stopwords)))
-    total = F.size(toks)
-    return F.when(F.trim(t) == "", F.lit(0.0)).otherwise(hits / total)
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword presence
-    + moderate punctuation (the usual pre-training quality gate shape)."""
-    t = text if isinstance(text, Column) else F.col(text)
-    n_tok = token_count(t)
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 5000), F.lit(0.4)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_ratio(t) >= 0.01, F.lit(0.3)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(t) <= 0.2, F.lit(0.3)).otherwise(F.lit(0.0))
-    return (len_ok + stop_ok + punct_ok).cast("double")
 
 
 # language-ID: tiny per-language marker vocabularies; score = marker hits.

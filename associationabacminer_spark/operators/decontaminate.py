@@ -135,25 +135,6 @@ def decontaminate(
     return test.join(hits, id_col, "left_anti")
 
 
-def decontaminate_train(
-    train: DataFrame,
-    eval_set: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 13,
-    max_shingle_df: int | None = None,
-    bloom_fpp: float | str | None = "auto",
-) -> DataFrame:
-    """The GPT-3 direction: TRAIN rows with no long-n-gram overlap
-    against the evaluation set (the reference-shingle side here is
-    ``eval_set``).  Provided because ``decontaminate(a, b)`` filters its
-    SECOND argument — call-site argument swaps are silent and this
-    wrapper makes the common intent unmistakable."""
-    return decontaminate(
-        eval_set, train, text_col, id_col, n, max_shingle_df, bloom_fpp
-    )
-
-
 def source_overlap_matrix(
     df: DataFrame,
     text_col: str,

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines: exact content-hash
-dedup, canonical-fingerprint dedup, n-gram Jaccard near-dup, MinHash+LSH,
-SimHash, and embedding-cosine near-dup.
+dedup, n-gram Jaccard/containment near-dup, MinHash+LSH, SimHash,
+winnowing, and span/paragraph-level duplicate removal.
 
 Reference analog: the 'unique logs' index — one doc per distinct content,
 keyed by sha1-of-sorted-json
@@ -8,21 +8,19 @@ keyed by sha1-of-sorted-json
 here is expressed with built-in DataFrame ops (no Python UDFs); the
 MinHash family uses ``xxhash64`` so signatures are computed JVM-side.
 
-Scale notes: exact/fingerprint dedup is one hash-partitioned groupBy on
-the digest (uniform key — no skew).  MinHash-LSH replaces the O(n^2)
-pair join with an equi-join on hashed band buckets; brute-force
-Jaccard/cosine pair joins are provided as small-scale oracles only.
+Scale notes: exact dedup is one hash-partitioned groupBy on the digest
+(uniform key — no skew).  MinHash-LSH replaces the O(n^2) pair join
+with an equi-join on hashed band buckets.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from associationabacminer_spark.functions.text import (
-    fingerprint,
     word_ngram_hash_arrays,
     word_ngrams,
 )
@@ -63,19 +61,6 @@ def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             F.sort_array(F.collect_list(id_col)).alias("ids"),
         )
         .filter(F.col("n_copies") > 1)
-    )
-
-
-def fingerprint_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Near-dup groups under the canonical fingerprint (lowercase, strip
-    punctuation, sorted unique tokens)."""
-    return (
-        df.groupBy(fingerprint(F.col(text_col)).alias("fp"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sort_array(F.collect_list(id_col)).alias("ids"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -943,125 +928,6 @@ def _span_islands(
         .withColumn("island", F.sum("brk").over(w))
         .drop("prev_s", "brk")
     )
-
-
-def duplicated_span_witnesses(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """``duplicated_spans`` plus an ``is_witness`` flag implementing the
-    keep-one policy: a span is a WITNESS iff it is the minimal
-    (id, span_start) occurrence of at least one of its duplicated
-    k-windows.  Scrubbing only non-witness spans then guarantees every
-    duplicated substring keeps >= 1 intact occurrence (its minimal
-    span survives whole) — the Lee et al. all-but-one direction,
-    conservatively: a witness span may preserve extra copies of windows
-    whose own witness is elsewhere.
-
-    One extra aggregate over the witness candidates: per fp, min of the
-    (id, span_start) struct (lexicographic struct min — portable), then
-    a semi-join flag onto the span table.  No pair join, no closure."""
-    isl = _span_islands(df, text_col, id_col, k, min_count)
-    spans = (
-        isl.groupBy(id_col, "island")
-        .agg(
-            F.min("s").cast("long").alias("span_start"),
-            (F.max("s") + k).cast("long").alias("span_end"),
-            F.count("*").alias("n_windows"),
-        )
-    )
-    tagged = isl.join(spans, [id_col, "island"]).select(
-        "fp", F.col(id_col), "span_start"
-    )
-    witnesses = (
-        tagged.groupBy("fp")
-        .agg(F.min(F.struct(F.col(id_col), F.col("span_start"))).alias("w"))
-        .select(
-            F.col("w")[id_col].alias(id_col),
-            F.col("w")["span_start"].alias("span_start"),
-        )
-        .distinct()
-    )
-    flagged = spans.drop("island").join(
-        witnesses.withColumn("is_witness", F.lit(True)),
-        [id_col, "span_start"],
-        "left",
-    )
-    return flagged.withColumn(
-        "is_witness", F.coalesce(F.col("is_witness"), F.lit(False))
-    )
-
-
-def scrub_duplicated_spans(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    min_count: int = 2,
-    spans: DataFrame | None = None,
-    keep_one: bool = False,
-) -> DataFrame:
-    """Remove duplicated spans from the corpus: every token inside a
-    ``duplicated_spans`` interval is dropped and the remainder rejoined
-    with single spaces (tokens outside spans keep their relative order).
-    Two policies:
-
-    * ``keep_one=False`` (default): remove EVERY occurrence of a
-      duplicated span — boilerplate-scrub semantics.
-    * ``keep_one=True``: the Lee et al. all-but-one direction — witness
-      spans (``duplicated_span_witnesses``) are exempt, so every
-      duplicated substring keeps at least one intact occurrence.
-
-    The span table is collect_list'ed per doc (bounded: spans per doc
-    <= n_tokens / k) and joined back broadcast-or-shuffle by doc id; the
-    token filter is a Catalyst two-arg ``F.filter`` lambda — no Python
-    UDF.  Returns ``df`` with ``text_col`` replaced by the scrubbed text
-    (docs with no duplicated spans pass through byte-identical apart
-    from tokenization-normalized whitespace ONLY inside scrubbed docs —
-    untouched docs keep their original text column verbatim)."""
-    if spans is None:
-        if keep_one:
-            spans = duplicated_span_witnesses(
-                df, text_col, id_col, k=k, min_count=min_count
-            ).filter(~F.col("is_witness"))
-        else:
-            spans = duplicated_spans(df, text_col, id_col, k=k, min_count=min_count)
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("__spans__")
-    )
-    joined = df.join(per_doc, id_col, "left")
-    # reconstruct from the ORIGINAL-case tokens: span indices were
-    # computed on lowercased tokens, but lowercasing never changes
-    # whitespace token boundaries, so positions map 1:1 — survivors keep
-    # their original casing
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    kept = F.filter(
-        toks,
-        lambda t, i: ~F.exists(
-            F.col("__spans__"),
-            lambda sp: (i >= sp["span_start"]) & (i < sp["span_end"]),
-        ),
-    )
-    scrubbed = F.when(
-        F.col("__spans__").isNull(), F.col(text_col)
-    ).otherwise(F.array_join(kept, " "))
-    return joined.withColumn(text_col, scrubbed).drop("__spans__")
-
-
-def paragraph_frequencies(
-    df: DataFrame, text_col: str, id_col: str, sep: str = r"\n+"
-) -> DataFrame:
-    """(hpar, n_occ) corpus-wide occurrence counts of paragraph hashes —
-    the count table behind ``scrub_common_paragraphs``.  Paragraphs are
-    the ``sep``-regex splits of ``text_col``, trimmed; splits that trim
-    to '' (separator runs at the edges) are not paragraphs.  The key is
-    ``xxhash64`` of the trimmed paragraph (8 B through the one shuffle,
-    never the string — slim-before-shuffle), uniform, skew-free."""
-    paras = _paragraph_rows(df, text_col, id_col, sep)
-    return paras.groupBy("hpar").agg(F.count("*").alias("n_occ"))
 
 
 def _paragraph_rows(

@@ -70,12 +70,3 @@ def pack_sequences(
             (F.col("prev") % budget).alias("offset"),
         )
     )
-
-
-def pack_stats(packed: DataFrame, budget: int = 2048) -> DataFrame:
-    """(pack_id, n_docs, used_tokens): fill diagnostics per pack, counting
-    straddling tokens toward the pack where the document starts."""
-    return packed.groupBy("pack_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("used_tokens"),
-    )

@@ -281,26 +281,6 @@ def ivf_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t).
-    Exact all-pairs form — the correctness baseline for
-    ``embedding_near_dup_pairs_banded``, O(n^2); never the scale path."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
-
-
 def embedding_near_dup_pairs_banded(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -544,7 +544,10 @@ def percentile_by_group(
     fact rows (``log_bin`` recomputed map-side, no fact-side shuffle
     when the planner broadcasts the bin table).  Total: ONE Exchange over
     slim (group, bin) pairs vs the window's full-data Exchange +
-    per-group sort.
+    per-group sort.  The price is a second read of ``df``: the fact side
+    and the ``log_bins`` side each scan it (two scans in the plan,
+    budgeted in ``tests/test_plans.py``), so cache an expensive input
+    (a join, a UDF) before calling.
 
     ``out_col`` = (# group rows with a strictly smaller bin) /
     (group_count - 1), i.e. exactly SQL ``percent_rank`` whenever every

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from associationabacminer_spark.functions.normalize import arn_resource_type
+
 
 def value_crosstab(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Co-occurrence counts (E5 functional-dependency mining input,
@@ -117,12 +119,10 @@ def multi_resource_type_counts(df: DataFrame, arns_col: str) -> DataFrame:
     """E8: events-with-multiple-resources-of-same-type counting
     (/root/reference/src/experiment/MultipleResourceCounter.py:14-33).
     ``arns_col`` is an array<string> of ARNs; the resource type is
-    parsed per element with the N10 codec (arn.split(':')[5].split('/')[0],
-    EventNormalizerNg.py:77).  Pure Catalyst (transform/array_distinct) —
-    one pass, one 1-row aggregate, no Python in the row path."""
-    types = F.transform(
-        F.col(arns_col), lambda a: F.split(F.split(a, ":")[5], "/")[0]
-    )
+    parsed per element with the N10 codec (``normalize.arn_resource_type``).
+    Pure Catalyst (transform/array_distinct) — one pass, one 1-row
+    aggregate, no Python in the row path."""
+    types = F.transform(F.col(arns_col), arn_resource_type)
     n_res = F.size(F.col(arns_col))
     n_types = F.size(F.array_distinct(types))
     return df.select(

@@ -11,7 +11,6 @@ bound-verified in tests/ instead.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3766,7 +3765,9 @@ def q9k(spark, sf_dir):
     percent_rank from a (source, symlog-bin) histogram — one slim
     Exchange + a broadcast join back, never a per-group sort of raw rows
     — exact on integral scores below ~1/rel_width (n_chars here), which
-    the window-function oracle pins hash-green."""
+    the window-function oracle pins hash-green.  The documents scan runs
+    twice (once per join side); a plain parquet read is cheap enough
+    not to cache."""
     from associationabacminer_spark.operators.sql_sketch import (
         percentile_by_group,
     )

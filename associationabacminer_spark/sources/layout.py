@@ -41,34 +41,6 @@ def write_range_sorted(
     writer.parquet(path)
 
 
-def file_ranges(path: str, column: str) -> list[tuple]:
-    """(min, max) of ``column`` per parquet file — the statistics the
-    scanner prunes with; used by tests to PROVE disjointness rather than
-    assume it."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(_glob.glob(f"{path}/**/*.parquet", recursive=True)):
-        md = pq.ParquetFile(f).metadata
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.num_columns)
-                if md.row_group(rg).column(i).path_in_schema == column
-            )
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if lo is not None:
-            out.append((lo, hi))
-    return out
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -1,7 +1,7 @@
 """The flagship transcript sketch suite: the five north-star sketches over
 the input_hint table, with the measured at-scale plan shape
 (slim-before-shuffle, JVM-side key hashing, zero-shuffle map build).
-Shared by bench.py, bench/sketch_job.py and tests."""
+Shared by bench.py, perfbench and tests."""
 
 from __future__ import annotations
 
@@ -66,9 +66,9 @@ def transcript_specs(bloom_capacity: int = 2_000_000) -> list[SketchSpec]:
 
 def sql_sketch_suite(df: DataFrame, prepared: DataFrame, warm: bool = True):
     """The five-sketch FULL-SQL build (every kernel reduced JVM-side;
-    zero Python in the row path), shared by bench.py and
-    bench/sketch_job.py so the headline and scaling benchmarks can never
-    desynchronize.  Returns (sketches dict, seconds of the timed build).
+    zero Python in the row path), shared by bench.py and perfbench so the
+    two benchmarks can never desynchronize.  Returns (sketches dict,
+    seconds of the timed build).
 
     ``warm`` pre-runs every pipeline on a 100k slice so whole-stage
     codegen/JIT compile (a per-pipeline constant) stays out of the timed

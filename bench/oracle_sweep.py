@@ -10,7 +10,6 @@ Prints one line per oracled query (ok/FAIL) and a final tally; exit code
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 

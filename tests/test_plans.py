@@ -5,6 +5,8 @@ stray Python in JVM-only pipelines."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,16 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def _exec_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _nodes(df) -> list[str]:
+    """Operator names of the executed plan, one per tree line."""
+    tree = _exec_plan(df)
+    return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", tree, re.M)]
 
 
 class TestPlanShapes:
@@ -262,14 +274,10 @@ class TestScalePlans:
 
 
 class TestRound3QueryPlans:
-    @staticmethod
-    def _exec_plan(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_cube_is_one_expand_one_scan(self, spark):
         """q97: all four grouping-set levels from ONE scan + Expand +
         hash aggregate — not a union of per-level rescans."""
-        plan = self._exec_plan(Q.QUERIES["q97_cube_grouping_sets"](spark, SF))
+        plan = _exec_plan(Q.QUERIES["q97_cube_grouping_sets"](spark, SF))
         assert plan.count("Expand") == 1
         assert plan.count("Scan parquet") == 1
         assert "Union" not in plan
@@ -277,24 +285,20 @@ class TestRound3QueryPlans:
     def test_mad_broadcasts_median_table(self, spark):
         """q99: the per-group median table is broadcast back — no
         shuffle of the fact side for the residual join."""
-        plan = self._exec_plan(Q.QUERIES["q99_robust_stats_mad"](spark, SF))
+        plan = _exec_plan(Q.QUERIES["q99_robust_stats_mad"](spark, SF))
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
     def test_rolling_avg_window_is_partitioned(self, spark):
         """q98: the window must be keyed by user_id (never a global
         single-partition sort)."""
-        plan = self._exec_plan(Q.QUERIES["q98_rolling_avg"](spark, SF))
+        plan = _exec_plan(Q.QUERIES["q98_rolling_avg"](spark, SF))
         assert "Window" in plan
         window_line = plan.split("Window")[1].split("\n")[0]
         assert "windowspecdefinition(user_id" in window_line
 
 
 class TestRound5QueryPlans:
-    @staticmethod
-    def _exec_plan(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_decontaminate_bloom_prefilter_in_plan(self, spark):
         """q42 (round 5): the test-side shingle stream passes through the
         broadcast-Bloom probe (MapInPandas with the JVM-computed probe
@@ -313,21 +317,21 @@ class TestRound5QueryPlans:
             train, test, "text", "doc_id", n=5, max_shingle_df=2,
             bloom_fpp=0.01,
         )
-        plan = self._exec_plan(with_bloom)
+        plan = _exec_plan(with_bloom)
         assert "MapInPandas" in plan
         assert "xxhash64" in plan.lower()
         without = contaminated_ids(
             train, test, "text", "doc_id", n=5, max_shingle_df=2,
             bloom_fpp=None,
         )
-        assert "MapInPandas" not in self._exec_plan(without)
+        assert "MapInPandas" not in _exec_plan(without)
         # the "auto" default gates on Catalyst's test-side size estimate:
         # lean at test scale (below BLOOM_AUTO_MIN_BYTES), prefiltered
         # when the threshold drops beneath the estimate
         auto_small = contaminated_ids(
             train, test, "text", "doc_id", n=5, max_shingle_df=2
         )
-        assert "MapInPandas" not in self._exec_plan(auto_small)
+        assert "MapInPandas" not in _exec_plan(auto_small)
         est = D._plan_size_bytes(test)
         assert est is not None and est > 0
         old = D.BLOOM_AUTO_MIN_BYTES
@@ -336,7 +340,7 @@ class TestRound5QueryPlans:
             auto_big = contaminated_ids(
                 train, test, "text", "doc_id", n=5, max_shingle_df=2
             )
-            assert "MapInPandas" in self._exec_plan(auto_big)
+            assert "MapInPandas" in _exec_plan(auto_big)
         finally:
             D.BLOOM_AUTO_MIN_BYTES = old
 
@@ -345,13 +349,6 @@ class TestSortedFoldPlans:
     """Window and group sketch builds are sorted-stream folds: one
     ``MapInPandas`` per fold stage, each after its own key exchange, and
     never a per-group ``FlatMapGroupsInPandas``."""
-
-    @staticmethod
-    def _nodes(df) -> list[str]:
-        import re
-
-        tree = df._jdf.queryExecution().executedPlan().toString()
-        return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", tree, re.M)]
 
     def test_fold_stage_budget(self, spark):
         from associationabacminer_spark.operators.agg import SketchSpec
@@ -377,7 +374,7 @@ class TestSortedFoldPlans:
             "grouped": (grouped_sketch_states(ev, "event_type", specs, salts=4), 2),
         }
         for name, (df, folds) in stages.items():
-            nodes = self._nodes(df)
+            nodes = _nodes(df)
             assert "FlatMapGroupsInPandas" not in nodes, name
             assert nodes.count("MapInPandas") == folds, (name, nodes)
             assert nodes.count("Exchange") == folds, (name, nodes)
@@ -396,7 +393,7 @@ class TestSortedFoldPlans:
         specs = [SketchSpec("hll_user", HyperLogLog, "user_id",
                             kernel_cls=HyperLogLog, prehash=True)]
         keyed = ev.withColumn("group_id", group_id(specs, 8))
-        nodes = self._nodes(build_partials(keyed, specs, ["group_id"]))
+        nodes = _nodes(build_partials(keyed, specs, ["group_id"]))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert nodes.count("MapInPandas") == 1, nodes
         assert nodes.count("Exchange") == 1, nodes
@@ -419,7 +416,7 @@ class TestSortedFoldPlans:
         collect = cls.collect
 
         def spy(df):
-            collected.append(self._nodes(df))
+            collected.append(_nodes(df))
             return collect(df)
 
         monkeypatch.setattr(cls, "collect", spy)
@@ -438,11 +435,11 @@ class TestSortedFoldPlans:
         from associationabacminer_spark.operators.sql_sketch import mg_by_group_states
 
         ev = spark.read.parquet(f"{SF}/events.parquet")
-        nodes = self._nodes(mg_by_group_states(ev, ["event_type"], "user_id"))
+        nodes = _nodes(mg_by_group_states(ev, ["event_type"], "user_id"))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert nodes.count("MapInPandas") == 2, nodes
         assert nodes.count("Exchange") == 3, nodes
-        nodes = self._nodes(Q.QUERIES["q51_mg_topk_by_group"](spark, SF))
+        nodes = _nodes(Q.QUERIES["q51_mg_topk_by_group"](spark, SF))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert "InMemoryTableScan" not in nodes, nodes
         assert nodes.count("BroadcastExchange") == 1, nodes
@@ -451,7 +448,9 @@ class TestSortedFoldPlans:
 class TestQuantilePlans:
     """The log-binned quantile family and the per-group HLL stay JVM-side
     with fixed exchange budgets: one per hash aggregation, one for the
-    group windows, and a broadcast of the bin table back onto the facts."""
+    group windows, and a broadcast of the bin table back onto the facts.
+    Only ``percentile_by_group`` reads its input twice (fact side and
+    bin side)."""
 
     def test_exchange_budgets(self, spark):
         from associationabacminer_spark.operators.sql_sketch import (
@@ -463,16 +462,17 @@ class TestQuantilePlans:
 
         ev = spark.read.parquet(f"{SF}/events.parquet")
         budgets = {
-            "tdigest_bin_table": (tdigest_bin_table(ev, "value"), 1, 0),
+            "tdigest_bin_table": (tdigest_bin_table(ev, "value"), 1, 0, 1),
             "quantiles_by_group": (
-                quantiles_by_group(ev, ["event_type"], "value"), 2, 0),
+                quantiles_by_group(ev, ["event_type"], "value"), 2, 0, 1),
             "percentile_by_group": (
-                percentile_by_group(ev, ["event_type"], "value"), 2, 1),
+                percentile_by_group(ev, ["event_type"], "value"), 2, 1, 2),
             "hll_estimate_by_group": (
-                hll_estimate_by_group(ev, ["event_type"], "user_id"), 2, 0),
+                hll_estimate_by_group(ev, ["event_type"], "user_id"), 2, 0, 1),
         }
-        for name, (df, exchanges, broadcasts) in budgets.items():
-            nodes = TestSortedFoldPlans._nodes(df)
+        for name, (df, exchanges, broadcasts, scans) in budgets.items():
+            nodes = _nodes(df)
             assert not any("Python" in n for n in nodes), (name, nodes)
             assert nodes.count("Exchange") == exchanges, (name, nodes)
             assert nodes.count("BroadcastExchange") == broadcasts, (name, nodes)
+            assert nodes.count("FileScan") == scans, (name, nodes)

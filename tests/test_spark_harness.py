@@ -18,7 +18,6 @@ from associationabacminer_spark.operators.agg import (
     SketchSpec,
     build_sketches,
     sketch_aggregate,
-    tree_merge,
 )
 from associationabacminer_spark.plans.lineage import run_with_lineage
 from associationabacminer_spark.sketch import (
@@ -894,13 +893,10 @@ class TestGroupedSketchStates:
 
 
 class TestRangeSortedLayout:
-    def test_output_files_have_disjoint_ranges(self, spark, tmp_path):
+    def test_output_files_have_disjoint_ranges(self, spark, tmp_path, file_ranges):
         """The written files' parquet min/max statistics must form
         non-overlapping ts ranges — the property pruning relies on."""
-        from associationabacminer_spark.sources.layout import (
-            file_ranges,
-            write_range_sorted,
-        )
+        from associationabacminer_spark.sources.layout import write_range_sorted
 
         ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
         dst = str(tmp_path / "sorted-events")
@@ -912,11 +908,9 @@ class TestRangeSortedLayout:
         for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
             assert hi_a <= lo_b, (hi_a, lo_b)
 
-    def test_unsorted_write_overlaps(self, spark, tmp_path):
+    def test_unsorted_write_overlaps(self, spark, tmp_path, file_ranges):
         """Control: a hash-repartitioned write has overlapping ranges —
         the test above isn't vacuously true."""
-        from associationabacminer_spark.sources.layout import file_ranges
-
         ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
         dst = str(tmp_path / "hashed-events")
         ev.repartition(8).write.mode("overwrite").parquet(dst)
