@@ -23,14 +23,16 @@ def hour_bin_simple(ts: Column | str, buckets: int) -> Column:
     return F.floor(F.hour(ts) / F.lit(step)).cast("int")
 
 
-def hour_bin_bounds(ts: Column | str, bounds: list[int]) -> Column:
-    """N1 'eqf/eqw-k' binning via precomputed bucket upper bounds
-    (lookup tables at ConfigurableEventNormalizer.py:39-56; in this
-    engine the bounds come from a KLL sketch instead of offline sorts)."""
-    h = F.hour(ts)
+def bin_by_bounds(col: Column | str, bounds: list) -> Column:
+    """N1 'eqf/eqw-k' binning via bucket upper bounds: the index of the
+    first bound the value is below, else ``len(bounds)`` (nulls land in
+    the last bin).  Hour binning passes ``F.hour(ts)`` (lookup tables
+    at ConfigurableEventNormalizer.py:39-56); in this engine the bounds
+    come from a KLL sketch instead of offline sorts."""
+    c = F.col(col) if isinstance(col, str) else col
     expr = F.lit(len(bounds))
     for i, b in reversed(list(enumerate(bounds))):
-        expr = F.when(h < F.lit(b), F.lit(i)).otherwise(expr)
+        expr = F.when(c < F.lit(b), F.lit(i)).otherwise(expr)
     return expr.cast("int")
 
 

@@ -111,56 +111,47 @@ def bind_once(expr: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
-def word_ngram_hashes(text: Column | str, n: int = 3) -> Column:
-    """Distinct xxhash64 word-n-gram hashes per row — the hashed twin of
-    ``array_distinct(transform(word_ngrams(..), xxhash64))`` that never
-    builds an n-gram STRING: tokens are hashed once and a shingle hash
-    is xxhash64 over the n consecutive token hashes (the
-    minhash_signatures_oph technique — profiled there, string shingle
-    construction dominated the stage, not hashing).  Shingle equality
-    is unchanged up to 64-bit collisions, which every consumer here
-    already accepts (they hashed the strings before).
+def word_ngram_hash_chain(text: Column | str, n: int = 3) -> Column:
+    """xxhash64 word-n-gram hashes per row, in token order with
+    duplicates — the one token-hash n-gram chain.  No n-gram STRING is
+    built: tokens are hashed once and a shingle hash is xxhash64 over n
+    consecutive token hashes (string shingle construction, not hashing,
+    dominated the profiled MinHash stage).  Equal to ``xxhash64`` of the
+    n-long token-hash slice, so at n = k it is the k-window fingerprint.
 
-    The token and token-hash arrays are pinned with :func:`bind_once` —
-    chained projections are NOT enough (a downstream explode lets the
-    optimizer collapse them and re-evaluate the token hashing once per
-    n-gram index: the O(tokens^2) trap documented in
-    minhash_signatures_oph, measured 5x the stage here).  Short texts
-    (< n tokens) fall back to one whole-text shingle, mirroring
-    ``word_ngrams`` semantics."""
+    Both arrays are pinned with :func:`bind_once`: with chained
+    projections a downstream explode lets the optimizer re-evaluate the
+    token hashing once per n-gram index (O(tokens^2), measured 2.5-5x
+    the stage).  Texts of < n tokens give one whole-text shingle, as in
+    ``word_ngrams``."""
     t = text if isinstance(text, Column) else F.col(text)
     toks_expr = F.split(F.trim(F.lower(t)), r"\s+")
 
-    def with_toks(toks):
-        th_expr = F.transform(toks, lambda x: F.xxhash64(x))
-
-        def with_th(th):
-            k = F.size(th) - (n - 1)
-            idx = F.sequence(F.lit(0), F.greatest(k - F.lit(1), F.lit(0)))
-            return F.when(
-                k <= 0, F.array(F.xxhash64(F.array_join(toks, " ")))
-            ).otherwise(
-                F.transform(
-                    idx,
-                    lambda i: F.xxhash64(
-                        *[F.element_at(th, i + j + 1) for j in range(n)]
-                    ),
-                )
+    def with_th(toks, th):
+        k = F.size(th) - (n - 1)
+        idx = F.sequence(F.lit(0), F.greatest(k - F.lit(1), F.lit(0)))
+        return F.when(
+            k <= 0, F.array(F.xxhash64(F.array_join(toks, " ")))
+        ).otherwise(
+            F.transform(
+                idx,
+                lambda i: F.xxhash64(*[F.element_at(th, i + j + 1) for j in range(n)]),
             )
+        )
 
-        return bind_once(th_expr, with_th)
-
-    return F.array_distinct(bind_once(toks_expr, with_toks))
-
-
-def word_ngram_hash_arrays(
-    df, text_col: str, keep_cols: list, n: int, out: str = "sh_arr"
-):
-    """DataFrame wrapper over :func:`word_ngram_hashes`:
-    ``keep_cols`` + ``out`` array column of distinct hashed n-grams."""
-    return df.select(
-        *keep_cols, word_ngram_hashes(F.col(text_col), n).alias(out)
+    return bind_once(
+        toks_expr,
+        lambda toks: bind_once(
+            F.transform(toks, lambda x: F.xxhash64(x)), lambda th: with_th(toks, th)
+        ),
     )
+
+
+def word_ngram_hashes(text: Column | str, n: int = 3) -> Column:
+    """Distinct xxhash64 word-n-gram hashes per row — the hashed twin of
+    ``array_distinct(transform(word_ngrams(..), xxhash64))``, built on
+    :func:`word_ngram_hash_chain`."""
+    return F.array_distinct(word_ngram_hash_chain(text, n))
 
 
 def repetition_ratio(text: Column | str) -> Column:

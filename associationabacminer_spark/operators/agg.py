@@ -38,7 +38,7 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 from typing import Callable
 
@@ -82,19 +82,14 @@ class SketchSpec:
     factory: Callable[[], object]  # () -> kernel with update_batch/merge/serde
     column: str
     kernel_cls: type = None  # type: ignore[assignment]
-    dropna: bool = True
     prehash: bool = False
     null_value: int | None = None  # sentinel-encoded NULL for int64 key cols
-    params: dict = field(default_factory=dict)
-
-    def make(self):
-        return self.factory(**self.params) if self.params else self.factory()
 
 
 def _spec_inputs(specs: list[SketchSpec]) -> tuple[dict[str, object], list[str]]:
     """The build's input expression per column name, pre-hashing key
-    columns JVM-side for ``prehash`` specs (null keys stay null so
-    ``dropna`` still works), and each spec's input column name."""
+    columns JVM-side for ``prehash`` specs (null keys become the sentinel
+    the build drops), and each spec's input column name."""
     cols: dict[str, object] = {}
     spec_cols: list[str] = []
     for s in specs:
@@ -133,14 +128,12 @@ def group_id(specs: list[SketchSpec], num_groups: int):
     ).cast("int")
 
 
-def _clean(arr, dropna: bool, sentinel):
+def _clean(arr, sentinel):
     """Numpy array with nulls removed: sentinel filter for int64 key
-    columns (kept int64 across Arrow), dropna otherwise."""
+    columns (kept int64 across Arrow), ``pd.isna`` otherwise."""
     if sentinel is not None:
         return arr[arr != sentinel]
-    if dropna:
-        return arr[~pd.isna(arr)]
-    return arr
+    return arr[~pd.isna(arr)]
 
 
 def _update(kernel, arr, prehash: bool) -> None:
@@ -220,16 +213,16 @@ def _build_fold(specs: list[SketchSpec], spec_cols: list[str]):
     """``fold_key`` that builds one fresh kernel per spec from a key's
     rows: (sketch_name, row_count, sketch, wall_time_s) per spec."""
     spec_list = [  # picklable into the Python workers
-        (s.name, s.make, c, s.dropna, s.prehash, NULL_SENTINEL if s.prehash else s.null_value)
+        (s.name, s.factory, c, s.prehash, NULL_SENTINEL if s.prehash else s.null_value)
         for s, c in zip(specs, spec_cols)
     ]
 
     def fold_key(key, cols):
         out = []
-        for name, make, column, dropna, prehash, sentinel in spec_list:
+        for name, make, column, prehash, sentinel in spec_list:
             t0 = time.perf_counter()
             kernel = make()
-            arr = _clean(cols[column], dropna, sentinel)
+            arr = _clean(cols[column], sentinel)
             _update(kernel, arr, prehash)
             secs = time.perf_counter() - t0
             out.append((name, len(arr), kernel.serialize(), secs))
@@ -337,5 +330,5 @@ def sketch_aggregate(
 def _deserializer(spec: SketchSpec):
     cls = spec.kernel_cls
     if cls is None:
-        cls = type(spec.make())
+        cls = type(spec.factory())
     return cls.deserialize

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from associationabacminer_spark.functions.text import word_ngram_hash_arrays
+from associationabacminer_spark.functions.text import word_ngram_hashes
 
 # "auto" engages the Bloom prefilter only when Catalyst's size estimate
 # of the probe (test) side is at least this many bytes.  Measured
@@ -49,12 +49,12 @@ def _shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     distinct and the train/test equi-join shuffle 8 bytes per shingle
     instead of ~6n bytes.  A 64-bit collision could flag one clean doc
     (P ~ |shingles|^2 / 2^64); acceptable for a contamination screen.
-    Round 6: hashes come from the token-hash chain
-    (``word_ngram_hash_arrays``) — no n-gram string is ever built."""
-    arr = word_ngram_hash_arrays(
-        df.select(F.col(id_col).alias("doc"), text_col), text_col, ["doc"], n
+    Hashes come from the token-hash chain (``word_ngram_hashes``) — no
+    n-gram string is ever built."""
+    return df.select(
+        F.col(id_col).alias("doc"),
+        F.explode(word_ngram_hashes(F.col(text_col), n)).alias("sh"),
     )
-    return arr.select("doc", F.explode("sh_arr").alias("sh"))
 
 
 def contaminated_ids(
@@ -168,12 +168,10 @@ def source_overlap_matrix(
     # shingles carry the source directly (no doc-key join — the doc id
     # is irrelevant to the matrix, so it never enters a shuffle); hashed
     # via the token-hash chain, no n-gram string allocation
-    sh_src = word_ngram_hash_arrays(
-        df.select(F.col(source_col).alias("src"), text_col),
-        text_col,
-        ["src"],
-        n,
-    ).select("src", F.explode("sh_arr").alias("sh"))
+    sh_src = df.select(
+        F.col(source_col).alias("src"),
+        F.explode(word_ngram_hashes(F.col(text_col), n)).alias("sh"),
+    )
     sets = sh_src.groupBy("sh").agg(
         F.array_sort(F.collect_set("src")).alias("__srcs__")
     )

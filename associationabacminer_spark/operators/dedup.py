@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from associationabacminer_spark.functions.text import (
-    word_ngram_hash_arrays,
+    bind_once,
+    word_ngram_hash_chain,
+    word_ngram_hashes,
     word_ngrams,
 )
 
@@ -64,6 +66,98 @@ def duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _drop_hot(exploded: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """The hot-key cap: drop rows whose ``key`` occurs in more than
+    ``max_df`` rows (None keeps all) — a key shared by 10^6 documents
+    otherwise emits 10^12 pairs in the self equi-join that follows."""
+    if max_df is None:
+        return exploded
+    hot = (
+        exploded.groupBy(key)
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > max_df)
+        .select(key)
+    )
+    return exploded.join(F.broadcast(hot), key, "left_anti")
+
+
+def _scored(
+    cands: DataFrame,
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    name: str,
+    denominator,
+) -> DataFrame:
+    """(id_a, id_b, ``name``) for candidate pairs scoring >= threshold,
+    score = |A∩B| / ``denominator(A, B)`` EXACTLY from the full hashed
+    shingle arrays (``word_ngram_hashes``: 8-byte longs, the same counts
+    up to 64-bit collisions), so candidate pruning never corrupts a
+    reported value.  Arrays are built only for docs that appear in a
+    pair: the semi-join runs on the raw rows first (Catalyst does not
+    push it below the shingle projection), and at low dup rates the
+    candidate set is orders of magnitude smaller than the corpus."""
+    cand_ids = (
+        cands.select(F.col("id_a").alias("doc_id"))
+        .union(cands.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
+    shc = (
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+        .join(cand_ids, "doc_id", "left_semi")
+        .select("doc_id", word_ngram_hashes(F.col("__text"), n).alias("shingles"))
+    )
+    sa = shc.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    sb = shc.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    score = F.size(F.array_intersect("sh_a", "sh_b")) / denominator(
+        F.col("sh_a"), F.col("sh_b")
+    )
+    return (
+        cands.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(name, score)
+        .filter(F.col(name) >= threshold)
+        .select("id_a", "id_b", F.round(name, 6).alias(name))
+    )
+
+
+def _jaccard_denominator(a, b):
+    return F.size(F.array_union(a, b))
+
+
+def _ngram_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    max_shingle_df: int | None,
+    name: str,
+    denominator,
+) -> DataFrame:
+    """Shingles -> capped shingle equi-join for candidates (id_a < id_b,
+    never a cross join) -> :func:`_scored`."""
+    exploded = _drop_hot(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(word_ngram_hashes(F.col(text_col), n)).alias("sh"),
+        ),
+        "sh",
+        max_shingle_df,
+    )
+    a = exploded.select(F.col("doc_id").alias("id_a"), "sh")
+    b = exploded.select(F.col("doc_id").alias("id_b"), "sh")
+    cands = (
+        a.join(b, "sh")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return _scored(cands, df, text_col, id_col, n, threshold, name, denominator)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -75,66 +169,20 @@ def ngram_jaccard_pairs(
     """n-gram Jaccard similar pairs (id_a < id_b, jaccard >= t).
 
     Candidates come from the shingle equi-join (far below a cross join);
-    the jaccard itself is then computed EXACTLY from the full shingle
-    arrays, so candidate pruning can never corrupt a reported value.
+    the jaccard itself is then computed EXACTLY from the full hashed
+    shingle arrays (:func:`_scored`), so candidate pruning can never
+    corrupt a reported value.
 
     ``max_shingle_df`` caps candidate generation: shingles appearing in
-    more than that many documents are dropped from the join keys (a
-    stop-shingle shared by 10^6 docs otherwise emits 10^12 candidate
-    pairs — the 100-TB killer).  A pair is missed only if ALL its shared
+    more than that many documents are dropped from the join keys
+    (:func:`_drop_hot`).  A pair is missed only if ALL its shared
     shingles are above the cap; at jaccard >= t a pair shares >=
     t/(1+t) * max(|A|,|B|) distinct shingles, so a cap above the hot
     tail leaves real near-dups multiple surviving join keys.  None (the
-    default, for the oracle path) disables the cap.
-
-    Round 6: shingles are xxhash64 longs from the token-hash chain
-    (``word_ngram_hash_arrays``) — no n-gram string is built, the join
-    and the array intersect/union compare 8-byte longs (same counts up
-    to 64-bit collisions, the documented decontaminate/LSH trade), and
-    the exact arrays are rebuilt only for docs that appear in a
-    candidate pair."""
-    sh = word_ngram_hash_arrays(
-        df.select(F.col(id_col).alias("doc_id"), text_col),
-        text_col,
-        ["doc_id"],
-        n,
-        out="shingles",
-    )
-    exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    if max_shingle_df is not None:
-        hot = (
-            exploded.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-        )
-        exploded = exploded.join(F.broadcast(hot), "sh", "left_anti")
-    a = exploded.select(F.col("doc_id").alias("id_a"), "sh")
-    b = exploded.select(F.col("doc_id").alias("id_b"), "sh")
-    cands = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    shc = sh.join(cand_ids, "doc_id", "left_semi")
-    sa = shc.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = shc.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    default, for the oracle path) disables the cap."""
+    return _ngram_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df,
+        "jaccard", _jaccard_denominator,
     )
 
 
@@ -155,69 +203,26 @@ def ngram_containment_pairs(
     snippets, quote-tweets, boilerplate-wrapped articles); a
     Jaccard-thresholded dedup keeps both copies forever.
 
-    Candidate generation is the same shingle equi-join as
-    :func:`ngram_jaccard_pairs` (never a cross join) with the identical
-    ``max_shingle_df`` hot-shingle cap, and the containment is then
-    computed EXACTLY from the full shingle arrays, so pruning cannot
-    corrupt a reported value.  The cap's miss bound is STRONGER here
-    than for Jaccard: at containment >= t the pair shares >= t * |small|
-    distinct shingles — a fraction of the SMALL side, so even extreme
-    size asymmetry leaves the pair t-proportionally many surviving join
-    keys.  (MinHash-LSH banding, by contrast, cannot target containment
-    at all: P[slot agrees] estimates J, which asymmetry drives to 0 —
-    the reason this operator exists beside minhash_lsh_dedup rather
-    than as a re-check mode of it.)
+    Candidate generation and exact scoring are those of
+    :func:`ngram_jaccard_pairs`, with the identical ``max_shingle_df``
+    hot-shingle cap; only the denominator differs.  The cap's miss bound
+    is STRONGER here than for Jaccard: at containment >= t the pair
+    shares >= t * |small| distinct shingles — a fraction of the SMALL
+    side, so even extreme size asymmetry leaves the pair
+    t-proportionally many surviving join keys.  (MinHash-LSH banding,
+    by contrast, cannot target containment at all: P[slot agrees]
+    estimates J, which asymmetry drives to 0 — the reason this operator
+    exists beside minhash_lsh_dedup rather than as a re-check mode of
+    it.)
 
     Default note: like :func:`ngram_jaccard_pairs`, ``max_shingle_df``
     defaults to ``None`` (exact parity, the oracle path) whereas
     :func:`minhash_lsh_dedup` defaults its analogous hot-bucket cap
     ``max_bucket_size`` to 4096 — at corpus scale pass an explicit cap
-    here too (the q9m query and the COOKBOOK recipes use 3-4096).
-
-    Round 6: hashed shingles + candidate-only array rebuild, exactly as
-    in :func:`ngram_jaccard_pairs` (same collision trade)."""
-    sh = word_ngram_hash_arrays(
-        df.select(F.col(id_col).alias("doc_id"), text_col),
-        text_col,
-        ["doc_id"],
-        n,
-        out="shingles",
-    )
-    exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
-    if max_shingle_df is not None:
-        hot = (
-            exploded.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-        )
-        exploded = exploded.join(F.broadcast(hot), "sh", "left_anti")
-    a = exploded.select(F.col("doc_id").alias("id_a"), "sh")
-    b = exploded.select(F.col("doc_id").alias("id_b"), "sh")
-    cands = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    shc = sh.join(cand_ids, "doc_id", "left_semi")
-    sa = shc.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = shc.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.least(F.size("sh_a"), F.size("sh_b")),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", F.round("containment", 6).alias("containment"))
+    here too (the q9m query and the COOKBOOK recipes use 3-4096)."""
+    return _ngram_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df,
+        "containment", lambda a, b: F.least(F.size(a), F.size(b)),
     )
 
 
@@ -235,8 +240,6 @@ def minhash_signatures(
     shuffle at 59M docs — to compute byte-identical values; the round-4
     rewrite removed it.  Docs with no shingles are dropped, matching the
     old explode semantics.)"""
-    from associationabacminer_spark.functions.text import bind_once
-
     shingled = df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(word_ngrams(F.col(text_col), n)).alias("shingles"),
@@ -313,17 +316,8 @@ def minhash_signatures_oph(
     if densify not in ("minrehash", "optimal"):
         raise ValueError("densify must be 'minrehash' or 'optimal'")
     shift = 64 - int(num_buckets).bit_length() + 1  # top log2(nb) bits
-    # Shingle IDENTITY is hash-based here: hash each token once, then a
-    # shingle hash is xxhash64 over the n consecutive token hashes — no
-    # n-gram string is ever sliced/joined/allocated (profiled: string
-    # shingle construction, not hashing, dominated the classic stage).
-    # Duplicate shingles are NOT deduped: min is idempotent, so
-    # array_distinct would be pure cost.  Short texts (< n tokens) fall
-    # back to one whole-text shingle, mirroring word_ngrams semantics.
-    # (Chained projections keep `toks`/`th` as bound attributes — inlining
-    # them as raw expressions re-evaluates the token-hash array once PER
-    # INDEX inside the transform lambda, an O(tokens^2) trap measured at
-    # 2.5x the whole stage.)
+    # The chain, not word_ngram_hashes: duplicate shingles are NOT
+    # deduped — min is idempotent, so array_distinct would be pure cost.
     # Null/empty docs are dropped HERE, on the raw base column: a narrow
     # predicate on the scan (pushdown-safe, no expression re-evaluation —
     # unlike a size(hs) filter, see below).  Without it every empty doc
@@ -332,34 +326,16 @@ def minhash_signatures_oph(
     # only by the bucket cap.  Empty docs have no shingles, hence no
     # meaningful Jaccard; excluding them matches the exact re-check,
     # which would score them 0/0 anyway.
-    tokd = df.filter(
-        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-    ).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("toks"),
-    )
-    thd = tokd.select(
-        "doc_id",
-        "toks",
-        F.transform("toks", lambda t: F.xxhash64(t)).alias("th"),
-    )
-    k = F.size(F.col("th")) - (n - 1)
-    idx = F.sequence(F.lit(0), F.greatest(k - F.lit(1), F.lit(0)))
-    ngram_hashes = F.when(
-        k <= 0, F.array(F.xxhash64(F.array_join(F.col("toks"), " ")))
-    ).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.xxhash64(
-                *[F.element_at(F.col("th"), i + j + 1) for j in range(n)]
-            ),
-        )
-    )
     # NB: no DataFrame-level `size(hs) > 0` filter — predicate pushdown
     # slides it below the projections and re-evaluates the whole shingle
     # pipeline once per row just to test emptiness (measured 2x the
     # stage); null/empty rows are skipped inside the scatter instead.
-    hashed = thd.select("doc_id", ngram_hashes.alias("hs"))
+    hashed = df.filter(
+        F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
+    ).select(
+        F.col(id_col).alias("doc_id"),
+        word_ngram_hash_chain(F.col(text_col), n).alias("hs"),
+    )
 
     def scatter(batches):
         import numpy as np
@@ -532,6 +508,19 @@ def lsh_candidate_pairs(
     )
 
 
+def band_width(num_perm: int, bands: int) -> int:
+    """Signature slots per LSH band (``rows_per_band``).  ``bands`` must
+    divide ``num_perm``: a non-divisible split would silently exclude
+    the tail signature slots from every band key, weakening candidate
+    recall with no diagnostic."""
+    if num_perm % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_perm ({num_perm}) — "
+            "tail signature slots would silently drop out of every band"
+        )
+    return num_perm // bands
+
+
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str,
@@ -560,7 +549,7 @@ def minhash_lsh_dedup(
     ``None`` to disable the hot-bucket cap and recover exact candidate
     parity with an uncapped banding (at the cost of the B(B-1)/2 pair
     bomb on pathological buckets)."""
-    rows_per_band = num_perm // bands
+    rows_per_band = band_width(num_perm, bands)
     if method == "oph":
         sigs = minhash_signatures_oph(df, text_col, id_col, num_buckets=num_perm, n=n)
     else:
@@ -568,15 +557,6 @@ def minhash_lsh_dedup(
     cands = lsh_candidate_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band, max_bucket_size=max_bucket_size
     )
-    # exact re-check: build shingle arrays ONLY for docs that appear in a
-    # candidate pair (semi-join first) — string n-gram construction over
-    # the whole corpus costs as much as a full signature pass, and at low
-    # dup rates the candidate set is orders of magnitude smaller.
-    # Round-5: the arrays carry xxhash64 of each shingle, not the string
-    # — the candidate joins shuffle ~8 B per shingle instead of ~6n and
-    # the intersect/union compare longs, with the same Jaccard up to a
-    # 2^-64 per-pair collision (the decontaminate module's documented
-    # trade, dedup.py re-check edition).
     return exact_jaccard_recheck(
         df, cands, text_col, id_col, n=n, threshold=threshold
     )
@@ -590,43 +570,13 @@ def exact_jaccard_recheck(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact-Jaccard verification of candidate (id_a, id_b) pairs: build
-    hashed shingle arrays ONLY for docs appearing in a pair (semi-join
-    first — string n-gram construction over the whole corpus costs as
-    much as a full signature pass) and keep pairs at or above
-    ``threshold``.  Factored out of :func:`minhash_lsh_dedup` so the
-    incremental-ingest path (operators/ingest.py) re-checks its
-    within-batch candidates without recomputing signatures."""
-    cand_ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .union(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    # Round 6: the hashed arrays come from the token-hash chain
-    # (word_ngram_hash_arrays) — n-gram strings are never built, the
-    # same equality structure up to 64-bit collisions
-    sh = word_ngram_hash_arrays(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("__text"),
-        ).join(cand_ids, "doc_id", "left_semi"),
-        "__text",
-        ["doc_id"],
-        n,
-        out="shingles",
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    """Exact-Jaccard verification of candidate (id_a, id_b) pairs, the
+    scoring step of :func:`ngram_jaccard_pairs` (:func:`_scored`):
+    hashed shingle arrays are built only for docs appearing in a pair.
+    Shared by :func:`minhash_lsh_dedup` and the incremental-ingest path
+    (operators/ingest.py)."""
+    return _scored(
+        cands, df, text_col, id_col, n, threshold, "jaccard", _jaccard_denominator
     )
 
 
@@ -776,9 +726,8 @@ def winnow_overlap_pairs(
     Same candidate-then-exact shape as the other dedup paths — never an
     all-pairs join.
 
-    ``max_print_df`` caps the join fan-out the same way
-    ``ngram_jaccard_pairs``'s shingle cap does: a boilerplate print
-    shared by 10^6 docs otherwise emits ~10^12 candidate rows.  Capped
+    ``max_print_df`` caps the join fan-out with the n-gram operators'
+    hot-key cap (:func:`_drop_hot`).  Capped
     prints are excluded from the join, the overlap numerator, AND the
     per-doc denominators (counts are recomputed after the exclusion), so
     the coefficient is the true overlap over non-boilerplate prints and
@@ -786,14 +735,7 @@ def winnow_overlap_pairs(
     exploded = fp_df.filter(F.size("prints") > 0).select(
         "doc_id", F.explode("prints").alias("p")
     )
-    if max_print_df is not None:
-        hot = (
-            exploded.groupBy("p")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_print_df)
-            .select("p")
-        )
-        exploded = exploded.join(F.broadcast(hot), "p", "left_anti")
+    exploded = _drop_hot(exploded, "p", max_print_df)
     a = exploded.select(F.col("doc_id").alias("id_a"), "p")
     b = exploded.select(F.col("doc_id").alias("id_b"), "p")
     common = (
@@ -818,33 +760,17 @@ def winnow_overlap_pairs(
 def _window_fingerprint_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """(id, s, fp) rows: one xxhash64 fingerprint per k-token window of
     ``text_col`` (whitespace tokens, lowercased), with its 0-based token
-    start ``s``.  Hashes are composed from per-token hashes — no window
-    strings are ever materialized (the same string-free trick as the LSH
-    bucket key): fp[i] = xxhash64 of the slice of token hashes, one JVM
-    hash per window over 8-byte longs.  Docs shorter than k tokens
-    produce no rows.
-
-    The token-hash array is pinned with ``bind_once`` — chained
-    projections alone are NOT enough: the posexplode Generate lets the
-    optimizer collapse them and re-evaluate the split + per-token
-    hashing once PER WINDOW, the O(tokens^2) Catalyst trap
-    `minhash_signatures_oph` documents (round-6 plan audit: the chained
-    form still carried 4 copies of the split under the Generate; a
-    NamedLambdaVariable cannot be inlined)."""
-    from associationabacminer_spark.functions.text import bind_once
-
-    tokd = df.select(
+    start ``s`` — the hashed k-gram chain (``word_ngram_hash_chain`` at
+    n = k) posexploded, so no window string is ever materialized and the
+    token arrays stay pinned by its ``bind_once``.  Docs shorter than k
+    tokens produce no rows: the filter on the raw column drops them
+    before the chain's whole-text fallback could fire."""
+    return df.filter(
+        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")) >= k
+    ).select(
         F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__toks__"),
-    ).filter(F.size("__toks__") >= k)
-    fps = bind_once(
-        F.transform("__toks__", lambda t: F.xxhash64(t)),
-        lambda th: F.transform(
-            F.sequence(F.lit(0), F.size(th) - k),
-            lambda i: F.xxhash64(F.slice(th, i + 1, k)),
-        ),
+        F.posexplode(word_ngram_hash_chain(F.col(text_col), k)).alias("s", "fp"),
     )
-    return tokd.select(id_col, F.posexplode(fps).alias("s", "fp"))
 
 
 def duplicated_spans(
@@ -868,7 +794,7 @@ def duplicated_spans(
     generalized below row granularity.
 
     Pure Catalyst, three shuffles, all on bounded keys:
-      1. per-row window fingerprints (``_window_fingerprints``) →
+      1. per-row window fingerprints (``_window_fingerprint_rows``) →
          posexplode to (id, start, fp) — one 8-byte long per window, no
          window strings.
       2. duplicated fingerprints: hash groupBy on fp (uniform 64-bit
@@ -1013,7 +939,7 @@ def scrub_common_paragraphs(
     passthrough = [c for c in df.columns if c != text_col]
     # chained projection: bind the split array and the drop list as
     # attributes so they evaluate once per row (the transform-inlining
-    # trap minhash_signatures_oph documents)
+    # trap text.bind_once documents)
     bound = out.select(
         *passthrough,
         # coalesce: a NULL text would propagate through split ->

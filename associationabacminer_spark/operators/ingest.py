@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from associationabacminer_spark.operators.dedup import (
     band_hash_table,
+    band_width,
     exact_dedup,
     exact_jaccard_recheck,
     lsh_candidate_pairs,
@@ -98,11 +99,7 @@ def dedup_store_build(
     text get an exact digest but no signature (no shingles, no
     meaningful Jaccard — mirrors minhash_signatures_oph's narrow
     base-column filter)."""
-    if num_perm % bands:
-        raise ValueError(
-            f"bands ({bands}) must divide num_perm ({num_perm}) — "
-            "tail signature slots would silently drop out of every band"
-        )
+    rows_per_band = band_width(num_perm, bands)
     exact = df.select(F.md5(F.col(text_col)).alias("digest")).distinct()
     # persist: ``sigs`` and ``bands`` are two store tables derived from
     # the same OPH map — without it a consumer touching both (the ingest
@@ -113,7 +110,7 @@ def dedup_store_build(
     return {
         "exact": exact,
         "sigs": sigs,
-        "bands": band_hash_table(sigs, bands=bands, rows_per_band=num_perm // bands),
+        "bands": band_hash_table(sigs, bands=bands, rows_per_band=rows_per_band),
     }
 
 
@@ -183,16 +180,7 @@ def incremental_ingest(
     whole upstream pipeline per branch (the same re-use pattern as the
     components and set-cover loops).  Returns the surviving batch rows
     with their original columns."""
-    if num_perm % bands:
-        # a non-divisible split would silently exclude the tail
-        # signature slots from every band key, weakening candidate
-        # recall with no diagnostic (mirrors the power-of-two check in
-        # minhash_signatures_oph)
-        raise ValueError(
-            f"bands ({bands}) must divide num_perm ({num_perm}) — "
-            "tail signature slots would silently drop out of every band"
-        )
-    rows_per_band = num_perm // bands
+    rows_per_band = band_width(num_perm, bands)
 
     # (1) + (2): exact, within then versus history.  The anti-join key is
     # the same md5 the store records — uniform, unskewed.

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 def _bigram_rows(df: DataFrame, text_col: str, id_col: str | None) -> DataFrame:
     """(id?, hp, hw) hashed bigram rows, one per adjacent token pair.
     The token-hash array is pinned with ``bind_once`` (the
-    transform-inlining trap documented in minhash_signatures_oph;
+    transform-inlining trap documented in text.bind_once;
     round-6 plan audit showed the explode Generate collapsed the old
     chained projections and duplicated the tokenization)."""
     from associationabacminer_spark.functions.text import bind_once

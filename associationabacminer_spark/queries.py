@@ -1491,7 +1491,7 @@ def q55(spark, sf_dir):
     lookup tables computed offline from exact sorts; here the bounds
     come from a streaming mergeable sketch, then binning is a CASE-WHEN
     chain JVM-side).  Self-check: each of the 4 bins holds ~25%."""
-    from associationabacminer_spark.functions.normalize import hour_bin_bounds
+    from associationabacminer_spark.functions.normalize import bin_by_bounds
     from associationabacminer_spark.operators.agg import SketchSpec, sketch_aggregate
     from associationabacminer_spark.sketch import KLL
 
@@ -1503,14 +1503,7 @@ def q55(spark, sf_dir):
     )
     kll = ks["kll"]
     bounds = [float(kll.quantile(q)) for q in (0.25, 0.5, 0.75)]
-    v = F.col("value")
-    bin_expr = (
-        F.when(v < bounds[0], 0)
-        .when(v < bounds[1], 1)
-        .when(v < bounds[2], 2)
-        .otherwise(3)
-    )
-    counts = ev.groupBy(bin_expr.alias("bin")).agg(F.count("*").alias("cnt")).collect()
+    counts = ev.groupBy(bin_by_bounds("value", bounds).alias("bin")).agg(F.count("*").alias("cnt")).collect()
     n = ev.count()
     tol = 2 * kll.rank_error + 0.01
     rows = [

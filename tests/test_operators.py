@@ -48,6 +48,25 @@ class TestDedup:
         got = {(r["id_a"], r["id_b"]) for r in pairs}
         assert (0, 1) in got and (2, 3) in got
 
+    def test_recheck_agrees_with_jaccard_pairs(self, docs):
+        """The LSH re-check and the n-gram pair operator score pairs the
+        same way: over every candidate pair the shingle join finds, the
+        re-check at threshold 0 returns the same rows and values."""
+        pairs = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.0)
+        rechecked = dedup.exact_jaccard_recheck(
+            docs, pairs.select("id_a", "id_b"), "text", "doc_id", n=3, threshold=0.0
+        )
+        expect = sorted(tuple(r) for r in pairs.collect())
+        assert sorted(tuple(r) for r in rechecked.collect()) == expect
+        assert len(expect) > 3 and any(0 < j < 1 for _, _, j in expect)
+
+    def test_lsh_bands_must_divide_num_perm(self, docs):
+        # 30 = 8 * 3 + 6: six signature slots would sit in no band
+        with pytest.raises(ValueError, match="divide"):
+            dedup.minhash_lsh_dedup(
+                docs, "text", "doc_id", num_perm=30, bands=8, method="classic"
+            )
+
     def test_containment_catches_quote_jaccard_misses(self, spark):
         """A short doc embedded verbatim in a long page: containment = 1
         while Jaccard ~ |quote|/|page| stays below any useful threshold —
@@ -379,11 +398,14 @@ class TestFunctions:
             N.weekday("ts").alias("wd"),
             N.is_weekend("ts").alias("we"),
             N.hour_bin_simple("ts", 4).alias("hb"),
+            N.bin_by_bounds(F.hour("ts"), [6, 13, 20]).alias("hbb"),
         ).collect()
         assert [r["verb"] for r in out] == ["Create", "Read", "Delete"]
         assert [r["wd"] for r in out] == [5, 0, 2]
         assert [r["we"] for r in out] == [True, False, False]
         assert [r["hb"] for r in out] == [2, 0, 3]
+        # hour 13 is not below bound 13: bins are [0,6) [6,13) [13,20) [20,24)
+        assert [r["hbb"] for r in out] == [2, 0, 3]
 
     def test_ip_and_arn(self, spark):
         df = spark.createDataFrame(
