@@ -219,9 +219,9 @@ def _build_fold(specs: list[SketchSpec], spec_cols: list[str]):
 
     def fold_key(key, cols):
         out = []
-        for name, make, column, prehash, sentinel in spec_list:
+        for name, factory, column, prehash, sentinel in spec_list:
             t0 = time.perf_counter()
-            kernel = make()
+            kernel = factory()
             arr = _clean(cols[column], sentinel)
             _update(kernel, arr, prehash)
             secs = time.perf_counter() - t0

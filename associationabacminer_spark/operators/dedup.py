@@ -727,15 +727,16 @@ def winnow_overlap_pairs(
     all-pairs join.
 
     ``max_print_df`` caps the join fan-out with the n-gram operators'
-    hot-key cap (:func:`_drop_hot`).  Capped
-    prints are excluded from the join, the overlap numerator, AND the
-    per-doc denominators (counts are recomputed after the exclusion), so
-    the coefficient is the true overlap over non-boilerplate prints and
-    a pair is missed only if all its shared prints are boilerplate."""
-    exploded = fp_df.filter(F.size("prints") > 0).select(
-        "doc_id", F.explode("prints").alias("p")
+    hot-key cap (:func:`_drop_hot`).  Capped prints are excluded from
+    the join, the overlap numerator, AND the per-doc denominators
+    (counts are recomputed after the exclusion), so the coefficient is
+    the true overlap over non-boilerplate prints and a pair is missed
+    only if all its shared prints are boilerplate."""
+    exploded = _drop_hot(
+        fp_df.filter(F.size("prints") > 0).select("doc_id", F.explode("prints").alias("p")),
+        "p",
+        max_print_df,
     )
-    exploded = _drop_hot(exploded, "p", max_print_df)
     a = exploded.select(F.col("doc_id").alias("id_a"), "p")
     b = exploded.select(F.col("doc_id").alias("id_b"), "p")
     common = (
