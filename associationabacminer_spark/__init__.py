@@ -15,9 +15,7 @@ Layout
                   JVM-side / codegen'd.
 - ``sources/``    table loaders + the deterministic transcript synthesizer
                   (the ``input_hint`` table shape).
-- ``plans/``      lineage/checkpoint ledger, sliding-window job planner.
-- ``streaming/``  Structured Streaming variants (windowed counts,
-                  foreachBatch sketch build).
+- ``plans/``      lineage/checkpoint ledger and its observed metrics.
 """
 
 __version__ = "0.1.0"

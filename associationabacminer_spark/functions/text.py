@@ -123,7 +123,9 @@ def word_ngram_hash_chain(text: Column | str, n: int = 3) -> Column:
     projections a downstream explode lets the optimizer re-evaluate the
     token hashing once per n-gram index (O(tokens^2), measured 2.5-5x
     the stage).  Texts of < n tokens give one whole-text shingle, as in
-    ``word_ngrams``."""
+    ``word_ngrams``.  A NULL text gives NULL, so it has no shingles and
+    pairs with nothing (without the guard every NULL text hashed to one
+    shared constant shingle)."""
     t = text if isinstance(text, Column) else F.col(text)
     toks_expr = F.split(F.trim(F.lower(t)), r"\s+")
 
@@ -139,10 +141,13 @@ def word_ngram_hash_chain(text: Column | str, n: int = 3) -> Column:
             )
         )
 
-    return bind_once(
-        toks_expr,
-        lambda toks: bind_once(
-            F.transform(toks, lambda x: F.xxhash64(x)), lambda th: with_th(toks, th)
+    return F.when(
+        t.isNotNull(),
+        bind_once(
+            toks_expr,
+            lambda toks: bind_once(
+                F.transform(toks, lambda x: F.xxhash64(x)), lambda th: with_th(toks, th)
+            ),
         ),
     )
 

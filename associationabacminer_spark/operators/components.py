@@ -158,27 +158,14 @@ def assign_components(
     )
 
 
-def near_dedup_keep_roots(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Rows of ``df`` surviving near-dup closure: transitively close the
-    candidate ``pairs`` (columns src, dst) and keep one representative —
-    the minimum id — per duplicate group.  The shared keep-the-roots
-    idiom used by the curation job, the e2e test, and COOKBOOK recipe 1."""
-    comp = assign_components(df, pairs, id_col)
-    keep = comp.filter(F.col(id_col) == F.col("component")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
-
-
 def near_dedup_keep_best(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
     score_col: str,
-    higher_is_better: bool = True,
 ) -> DataFrame:
     """Quality-aware survivor selection: close the candidate ``pairs``
-    into duplicate groups and keep, per group, the member with the BEST
+    into duplicate groups and keep, per group, the member with the HIGHEST
     ``score_col`` (ties broken by minimum id) — the RefinedWeb/FineWeb
     policy of retaining the highest-quality copy instead of an
     arbitrary root.  (The reference's dedup keeps first-seen —
@@ -190,9 +177,7 @@ def near_dedup_keep_best(
     boilerplate cluster reduces before the shuffle; deliberately NOT a
     row_number window, which would sort every group on one task."""
     comp = assign_components(df, pairs, id_col)
-    ord_key = F.col(score_col).cast("double")
-    if higher_is_better:
-        ord_key = -ord_key
+    ord_key = -F.col(score_col).cast("double")
     # null scores always lose (they'd otherwise win or lose depending
     # on struct null-ordering); a group that is ALL null-scored still
     # keeps exactly one member via the id tie-break

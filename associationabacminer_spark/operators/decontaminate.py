@@ -7,8 +7,8 @@ Reference analog: the anti-join deletion pattern (J2,
 across two corpora instead of within one.
 
 Plan shape: explode both sides to (shingle, id), equi-join on the
-shingle, distinct the hit ids, then left_anti / left_semi against the
-test table — no pair join of documents ever exists.  A document-frequency
+shingle, distinct the hit ids (a caller left_anti-joins them to keep the
+clean test rows) — no pair join of documents ever exists.  A document-frequency
 cap on the TRAIN side drops boilerplate shingles that would fan out the
 join (a shingle in 10^6 train docs produces 10^6 join rows per test hit
 while adding no signal — any genuinely contaminated pair shares many
@@ -117,22 +117,6 @@ def contaminated_ids(
         .select(F.col("doc").alias(id_col))
         .distinct()
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    test: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 13,
-    max_shingle_df: int | None = None,
-    bloom_fpp: float | str | None = "auto",
-) -> DataFrame:
-    """Test rows with NO long-n-gram overlap against train."""
-    hits = contaminated_ids(
-        train, test, text_col, id_col, n, max_shingle_df, bloom_fpp
-    )
-    return test.join(hits, id_col, "left_anti")
 
 
 def source_overlap_matrix(

@@ -878,9 +878,7 @@ def scrub_common_paragraphs(
     text_col: str,
     id_col: str,
     min_df: int = 2,
-    keep_one: bool = False,
     sep: str = r"\n+",
-    rebuild_sep: str = "\n",
 ) -> DataFrame:
     """Corpus-wide duplicate-paragraph (boilerplate) removal — the
     paragraph-hash dedup step of CCNet (Wenzek et al. 2020) and
@@ -889,12 +887,7 @@ def scrub_common_paragraphs(
     at a granularity doc-level dedup can't see and span-level dedup
     (``duplicated_spans``) only catches when they are long enough.  A
     paragraph whose corpus occurrence count >= ``min_df`` is scrubbed:
-
-    * ``keep_one=False`` (default): every occurrence dropped — the CCNet
-      boilerplate-removal semantics.
-    * ``keep_one=True``: the minimal (id, pos) occurrence survives (one
-      witness per distinct paragraph — all-but-one dedup), via one extra
-      struct-min on the same aggregate, no pair join.
+    every occurrence dropped — the CCNet boilerplate-removal semantics.
 
     Scale shape (two shuffles, both slim): (1) paragraph rows explode
     map-side and hash-aggregate on the 8-byte ``xxhash64`` key —
@@ -910,29 +903,19 @@ def scrub_common_paragraphs(
     every hashed-key path in this module.
 
     Returns one row per input doc: (id_col, text_col = rebuilt text of
-    trimmed surviving paragraphs joined by ``rebuild_sep``, n_paras,
+    trimmed surviving paragraphs joined by newlines, n_paras,
     n_scrubbed).  Docs whose every paragraph is scrubbed (or that had
     none) come back with '' — filter on ``text_col != ''`` to drop
     them, keep them to preserve row alignment."""
     paras = _paragraph_rows(df, text_col, id_col, sep)
-    sid = F.col(id_col).cast("string")
     hot = (
         paras.groupBy("hpar")
-        .agg(
-            F.count("*").alias("n_occ"),
-            F.min(F.struct(sid.alias("i"), F.col("pos").alias("p"))).alias("__wit__"),
-        )
+        .agg(F.count("*").alias("n_occ"))
         .filter(F.col("n_occ") >= min_df)
-        .select("hpar", "__wit__")
+        .select("hpar")
     )
-    j = paras.join(hot, "hpar")  # inner: only boilerplate occurrences
-    scrub = F.lit(True)
-    if keep_one:
-        scrub = ~(
-            (F.col("__wit__.i") == sid) & (F.col("__wit__.p") == F.col("pos"))
-        )
     drops = (
-        j.filter(scrub)
+        paras.join(hot, "hpar")  # inner: only boilerplate occurrences
         .groupBy(id_col)
         .agg(F.collect_list("pos").alias("__drop__"))
     )
@@ -961,7 +944,7 @@ def scrub_common_paragraphs(
     # (col, trim=None), so pyspark would pass (element, index) into it
     # (the two-parameter transform-lambda trap, third sighting)
     rebuilt = F.array_join(
-        F.transform(kept, lambda x: F.trim(x)), rebuild_sep
+        F.transform(kept, lambda x: F.trim(x)), "\n"
     ).alias(text_col)
     cols = [rebuilt if c == text_col else F.col(c) for c in df.columns]
     return bound.select(

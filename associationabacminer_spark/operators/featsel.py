@@ -14,17 +14,12 @@ pure DataFrame aggregations:
 
       L_r = f̃_rᵀ L f̃_r / f̃_rᵀ D f̃_r,   f̃_r = f_r − (f_rᵀD·1)/(1ᵀD·1)
 
-  with f̃ᵀLf̃ = ½·Σ_ij S_ij (f_ri − f_rj)².  Two affinity modes:
-
-  - ``label_col`` (supervised, S_ij = 1 iff same label): the pair term
-    collapses algebraically per class C to n_C·Σf² − (Σf)², so the WHOLE
-    score is one groupBy(class) pass + one global agg — no pair join
-    exists at any scale.  (With this S, ranking by 1−L_r is the Fisher
-    criterion — the paper's §4 connection.)
-  - ``pairs`` (unsupervised, caller-supplied candidate graph): any
-    (src, dst) DataFrame — at scale feed it LSH/IVF candidate pairs from
-    operators.similarity / operators.dedup so the graph is built by
-    equi-joins, never n².  Unit weights; each unordered pair once.
+  with f̃ᵀLf̃ = ½·Σ_ij S_ij (f_ri − f_rj)².  The affinity is supervised,
+  S_ij = 1 iff ``label_col`` matches: the pair term collapses
+  algebraically per class C to n_C·Σf² − (Σf)², so the WHOLE score is
+  one groupBy(class) pass + one global agg — no pair join exists at any
+  scale.  (With this S, ranking by 1−L_r is the Fisher criterion — the
+  paper's §4 connection.)
 
 All math is posexplode + groupBy on (dim) — 64 output rows per ranking,
 JVM-side throughout, no Python in the row path.
@@ -54,76 +49,27 @@ def variance_ranking(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 
 
 def laplacian_score(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str | None = None,
-    pairs: DataFrame | None = None,
+    df: DataFrame, id_col: str, vec_col: str, label_col: str
 ) -> DataFrame:
     """(dim, lap_score) per embedding dimension; smaller = better
     locality preservation (select ascending)."""
-    if (label_col is None) == (pairs is None):
-        raise ValueError("exactly one of label_col / pairs is required")
-    dims = _dims(df, id_col, vec_col)
-
-    if label_col is not None:
-        lab = df.select(F.col(id_col).alias("id"), F.col(label_col).alias("lab"))
-        vals = dims.join(lab, "id")
-        # per (class, dim): n, sum f, sum f^2  ->  pair term & degrees
-        cls = vals.groupBy("lab", "dim").agg(
-            F.count("*").alias("n"),
-            F.sum("val").alias("s1"),
-            F.sum(F.col("val") * F.col("val")).alias("s2"),
-        )
-        per_dim = cls.groupBy("dim").agg(
-            # Σ_C [ n_C Σf² − (Σf)² ]  == Σ_{i<j, same C} (f_i − f_j)²
-            F.sum(F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")).alias("num"),
-            # degree-weighted sums with D_i = (n_C − 1)
-            F.sum((F.col("n") - 1) * F.col("s1")).alias("d1"),
-            F.sum((F.col("n") - 1) * F.col("s2")).alias("d2"),
-            F.sum((F.col("n") - 1) * F.col("n")).alias("dtot"),
-        )
-        return per_dim.select(
-            "dim",
-            F.round(
-                F.col("num")
-                / (F.col("d2") - F.col("d1") * F.col("d1") / F.col("dtot")),
-                6,
-            ).alias("lap_score"),
-        )
-
-    # generic pair path: unit-weight candidate graph
-    und = (
-        pairs.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
+    lab = df.select(F.col(id_col).alias("id"), F.col(label_col).alias("lab"))
+    vals = _dims(df, id_col, vec_col).join(lab, "id")
+    # per (class, dim): n, sum f, sum f^2  ->  pair term & degrees
+    cls = vals.groupBy("lab", "dim").agg(
+        F.count("*").alias("n"),
+        F.sum("val").alias("s1"),
+        F.sum(F.col("val") * F.col("val")).alias("s2"),
     )
-    fa = dims.select(F.col("id").alias("a"), "dim", F.col("val").alias("va"))
-    fb = dims.select(F.col("id").alias("b"), "dim", F.col("val").alias("vb"))
-    num = (
-        und.join(fa, "a")
-        .join(fb, ["b", "dim"])
-        .groupBy("dim")
-        .agg(F.sum(F.pow(F.col("va") - F.col("vb"), 2)).alias("num"))
+    per_dim = cls.groupBy("dim").agg(
+        # Σ_C [ n_C Σf² − (Σf)² ]  == Σ_{i<j, same C} (f_i − f_j)²
+        F.sum(F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")).alias("num"),
+        # degree-weighted sums with D_i = (n_C − 1)
+        F.sum((F.col("n") - 1) * F.col("s1")).alias("d1"),
+        F.sum((F.col("n") - 1) * F.col("s2")).alias("d2"),
+        F.sum((F.col("n") - 1) * F.col("n")).alias("dtot"),
     )
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .union(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("d"))
-    )
-    den = (
-        dims.join(deg, "id")
-        .groupBy("dim")
-        .agg(
-            F.sum(F.col("d") * F.col("val")).alias("d1"),
-            F.sum(F.col("d") * F.col("val") * F.col("val")).alias("d2"),
-            F.sum("d").alias("dtot"),
-        )
-    )
-    return num.join(den, "dim").select(
+    return per_dim.select(
         "dim",
         F.round(
             F.col("num") / (F.col("d2") - F.col("d1") * F.col("d1") / F.col("dtot")),

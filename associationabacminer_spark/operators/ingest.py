@@ -48,14 +48,13 @@ scratch per run (/root/reference/src/model/EnvLogUniverseGenerator.py:84-104)
 re-expression.
 
 Scale notes: every store interaction is an equi-join on a bounded key —
-batch-side band hashes against ``bands`` (write the store parquet
-sorted/bucketed by ``band_hash``, see sources/layout.py, and the probe
-becomes a pruned range read), batch digests against ``exact``.  Hot
-band buckets in the store (shared boilerplate accepted before
-paragraph-scrub policies tightened) are capped at candidate-expansion
-time exactly like lsh_candidate_pairs' ``max_bucket_size``: a window
-count per band_hash on the matched subset only.  Nothing in the ingest
-path scans store rows that share no key with the batch.
+batch-side band hashes against ``bands``, batch digests against
+``exact``.  Hot band buckets in the store (shared boilerplate accepted
+before paragraph-scrub policies tightened) are capped at
+candidate-expansion time exactly like lsh_candidate_pairs'
+``max_bucket_size``: a window count per band_hash on the matched subset
+only.  Nothing in the ingest path scans store rows that share no key
+with the batch.
 """
 
 from __future__ import annotations
@@ -147,8 +146,7 @@ def dedup_store_append(
     """Union a delta (:func:`ingest_delta`) into the store.  Caller
     persists — each table is append-only parquet in practice; ``exact``
     may acquire duplicate digests across appends (seen-set semantics,
-    the anti-join is membership so duplicates only cost bytes; compact
-    with ``distinct()`` on rewrite)."""
+    the anti-join is membership so duplicates only cost bytes)."""
     return {k: store[k].unionByName(delta[k]) for k in ("exact", "sigs", "bands")}
 
 
@@ -315,9 +313,8 @@ def dedup_store_write(
     store: dict[str, DataFrame], store_dir: str, params: dict | None = None
 ) -> None:
     """Append the store tables under ``store_dir/{exact,sigs,bands}``.
-    Append-only by design — an ingest delta never rewrites history; write
-    the band table through sources/layout.py (sorted by band_hash) when
-    probe-side pruning matters.  Pass ``params`` (:func:`store_params`)
+    Append-only by design — an ingest delta never rewrites history.
+    Pass ``params`` (:func:`store_params`)
     to record the signature parameters in ``params.json`` on first write
     and fail fast on a mismatch afterwards; callers composing the
     DataFrame-level API directly own that consistency when omitting it."""
@@ -337,10 +334,10 @@ def dedup_store_read(
     fresh table — any OTHER read failure (corrupt parquet, permissions,
     transient FS error) raises instead of silently reading an empty
     store and re-admitting the whole historical corpus as new.  A
-    leftover ``<table>__old`` with no ``<table>`` (a compaction crash
-    mid-swap) is restored first, completing dedup_store_compact's
-    park-then-swap contract.  ``params`` (optional) validates
-    ``params.json`` as in :func:`dedup_store_write`."""
+    leftover ``<table>__old`` with no ``<table>`` (a rewrite that parked
+    the original and crashed before swapping its replacement in) is
+    restored first.  ``params`` (optional) validates ``params.json`` as
+    in :func:`dedup_store_write`."""
     import os
 
     from pyspark.errors import AnalysisException
@@ -351,8 +348,8 @@ def dedup_store_read(
         dst = f"{store_dir}/{k}"
         old = f"{dst}__old"
         if not os.path.exists(dst) and os.path.exists(old):
-            # compaction parked the original and crashed before swapping
-            # the replacement in — restore rather than read as empty
+            # the original was parked and the replacement never swapped
+            # in — restore rather than read as empty
             os.rename(old, dst)
         try:
             out[k] = spark.read.parquet(dst)
@@ -363,113 +360,3 @@ def dedup_store_read(
                 raise
     return out
 
-
-def streaming_ingest_fold(
-    store_dir: str,
-    sink_dir: str,
-    text_col: str,
-    id_col: str,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    n: int = DEFAULT_NGRAM,
-    threshold: float = 0.5,
-    densify: str = DEFAULT_DENSIFY,
-):
-    """Continuous-crawl ingestion: a ``foreachBatch`` fold that runs
-    :func:`incremental_ingest` on each micro-batch against the persisted
-    store and commits survivors + the store delta.
-
-    ``foreachBatch`` (not stream-static joins) is the correct shape
-    here: the store MUTATES as epochs commit, and Structured Streaming
-    pins a static join side for the life of the query (also: stream-
-    static anti-joins and re-aggregating exploded band rows per doc are
-    unsupported mid-stream).  Each epoch sees every prior epoch's
-    accepted docs — the streaming twin of the batch daily-crawl loop,
-    with the same seen/accepted store semantics.
-
-    Replay safety: an epoch whose ``sink_dir/epoch=<id>/_SUCCESS``
-    already exists is NOT recomputed — its committed survivors are
-    re-read from the sink and only the store delta is (re)appended.
-    Without that guard, a crash after the store delta append but before
-    Structured Streaming commits the epoch offsets would replay the
-    epoch against a store that already contains every batch digest:
-    incremental_ingest returns zero survivors and the overwrite would
-    ERASE the epoch's committed output, unrecoverable because the seen
-    set blocks re-admission.  A replayed delta append may duplicate
-    rows — harmless under seen-set membership semantics and compacted
-    away by ``dedup_store_compact`` (dedup_store_append's documented
-    contract).  The store's ``params.json`` manifest is written on the
-    first epoch and validated on every one."""
-    params = store_params(num_perm=num_perm, bands=bands, n=n, densify=densify)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        sink = f"{sink_dir}/epoch={epoch_id}"
-        if os.path.exists(os.path.join(sink, "_SUCCESS")):
-            # epoch output already committed on a prior attempt: the
-            # survivor set is final — never re-derive it from a store
-            # the prior attempt may already have mutated
-            surv = spark.read.parquet(sink)
-        else:
-            store = dedup_store_read(spark, store_dir, params=params)
-            surv = incremental_ingest(
-                batch_df,
-                store,
-                text_col,
-                id_col,
-                num_perm=num_perm,
-                bands=bands,
-                n=n,
-                threshold=threshold,
-                densify=densify,
-            ).localCheckpoint()
-            surv.write.mode("overwrite").parquet(sink)
-        delta = ingest_delta(
-            batch_df, surv, text_col, id_col,
-            num_perm=num_perm, bands=bands, n=n, densify=densify,
-        )
-        dedup_store_write(delta, store_dir, params=params)
-
-    return fold
-
-
-def dedup_store_compact(spark, store_dir: str) -> None:
-    """Rewrite the store for probe efficiency after many appends:
-    ``exact`` deduplicates to one row per digest (replayed epochs append
-    duplicate digests — harmless for membership, pure bytes), ``sigs``/
-    ``bands`` to one row per key, and the band table is rewritten
-    RANGE-SORTED by ``band_hash`` (sources/layout.py — disjoint per-file
-    min/max, so a batch probe's band-key join prunes whole files instead
-    of scanning every append increment).  Writes to a sibling directory
-    first and swaps via rename — safe on a real filesystem; on an object
-    store, point ingest at the new path instead of renaming."""
-    import os
-    import shutil
-
-    from associationabacminer_spark.sources.layout import write_range_sorted
-
-    store = dedup_store_read(spark, store_dir)
-    tmp = store_dir.rstrip("/") + "__compacting"
-    store["exact"].distinct().write.mode("overwrite").parquet(f"{tmp}/exact")
-    store["sigs"].dropDuplicates(["doc_id"]).write.mode("overwrite").parquet(
-        f"{tmp}/sigs"
-    )
-    write_range_sorted(
-        store["bands"].dropDuplicates(["doc_id", "band_hash"]),
-        f"{tmp}/bands",
-        ["band_hash"],
-    )
-    for k in STORE_TABLES:
-        dst = f"{store_dir}/{k}"
-        old = f"{dst}__old"
-        # park-then-swap: the old table survives until the compacted one
-        # is in place, so a crash mid-swap leaves a recoverable __old
-        # instead of a missing table
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(f"{tmp}/{k}", dst)
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)

@@ -64,37 +64,29 @@ def bigram_lm_scores(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    model_df: DataFrame | None = None,
     add_k: float = 0.5,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Per-doc cross-entropy (nats/token) under an add-k-smoothed bigram
     model: xent = -avg ln P(w_i | w_{i-1}) with
     P(w|p) = (C(p,w) + k) / (C(p) + k*V), where C(p) is the bigram
     CONTEXT count (sum over w of C(p,w) — a doc's last token is not a
-    context) and V the model vocabulary size.  ``model_df=None`` trains
-    on the scored corpus itself (the self-perplexity screen); pass a
-    clean reference corpus for the CCNet filtering setup.  Docs with
+    context) and V the model vocabulary size.  The model is trained on
+    the scored corpus itself (the self-perplexity screen).  Docs with
     fewer than two tokens produce no row.
 
-    Returns (id_col, n_bigrams, xent) with xent rounded to ``round_to``
-    (``None`` = unrounded, for callers composing further arithmetic —
-    ``dsir_logratio``) — the filter use is
-    ``scores.filter(col("xent") < hi)`` or a quantiles_by_group band."""
-    model = model_df if model_df is not None else df
-    bigram, context, v = _train_bigram_model(model, text_col, "")
+    Returns (id_col, n_bigrams, xent) with xent rounded to 6 — the
+    filter use is ``scores.filter(col("xent") < hi)`` or a
+    quantiles_by_group band."""
+    bigram, context, v = _train_bigram_model(df, text_col, "")
     dp = _bigram_rows(df, text_col, id_col)
     scored = (
         dp.join(bigram, ["hp", "hw"], "left")
         .join(context, ["hp"], "left")
         .withColumn("__nll__", _nll("cb", "cu", add_k, v))
     )
-    xent = F.avg("__nll__")
-    if round_to is not None:
-        xent = F.round(xent, round_to)
     return scored.groupBy(id_col).agg(
         F.count("*").alias("n_bigrams"),
-        xent.alias("xent"),
+        F.round(F.avg("__nll__"), 6).alias("xent"),
     )
 
 
@@ -152,7 +144,6 @@ def dsir_logratio(
     id_col: str,
     target_df: DataFrame,
     add_k: float = 0.5,
-    raw_model_df: DataFrame | None = None,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw doc by
@@ -174,22 +165,13 @@ def dsir_logratio(
     tables (four equi-joins on hashed 8-byte token keys; the tables
     broadcast when they fit), and one per-doc aggregate computes both
     cross-entropies together.  Half the corpus scans and shuffles of
-    the naive score-twice-then-join composition, and — because the
-    per-doc join disappears — streamable.
+    the naive score-twice-then-join composition.
 
     Returns (id_col, n_bigrams, xent_raw, xent_target, logw), all
     rounded to 6.  Docs with fewer than two tokens produce no row
-    (they have no bigrams to weigh).
-
-    ``raw_model_df`` freezes the raw-pool model on a separate (batch)
-    corpus instead of ``df`` itself — required when ``df`` is a STREAM
-    (both models must be static; scoring is then four stream-static
-    joins + one streaming aggregate — parity with the batch run tested
-    in TestStreamingQualityScreens)."""
+    (they have no bigrams to weigh)."""
     bt, ct = _bigram_tables(target_df, text_col, "_t")
-    br, cr = _bigram_tables(
-        raw_model_df if raw_model_df is not None else df, text_col, "_r"
-    )
+    br, cr = _bigram_tables(df, text_col, "_r")
     # ONE scalar job computes both vocab sizes (and materializes both
     # persisted bigram caches) instead of two sequential jobs
     vrows = dict(

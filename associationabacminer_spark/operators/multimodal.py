@@ -2,65 +2,23 @@
 with decode / feature-extract / resize / frame-sample as Arrow-batched
 ``mapInPandas`` stages.
 
-Codec libraries are probed at import (the same optional-dependency
-pattern as ``sources/iceberg.py``): when Pillow is installed,
-``decode_media(codec="image")`` decodes real image payloads; otherwise
-— and always for the oracle-checked queries, which pass the default —
-the decode is a deterministic fake (or ``NotImplementedError`` when
-``strict=True``).  Either way the Spark-side plumbing is real and
+The decode is a deterministic fake: geometry and an 8-dim feature come
+from the payload's byte length, so the DuckDB oracles can reproduce
+them from ``n_chars`` arithmetic.  The Spark-side plumbing is real and
 tested: the binary column schema, the mapInPandas batch shape, the
 metadata struct, and the partitioning all match what a production
-decode stage needs.
-
-Compressed-codec acquisition attempt (round 5, 2026-08-17):
-``pip install soundfile av`` was attempted from this sandbox and failed
-at DNS resolution for every index retry (``Failed to establish a new
-connection: [Errno -2] Name or service not known`` — no outbound
-network; same failure mode as the Iceberg jar fetch recorded in
-``sources/iceberg.py``).  So MP3/AAC/Vorbis audio and H.264/VP9 video
-remain strict-raise territory here: ``probe_codecs()`` reports what is
-real (Pillow images when present, stdlib PCM WAV, pure-Python Y4M) and
-the compressed-container paths raise honestly.  Wiring real
-soundfile/PyAV decode behind new probes is deliberately NOT stubbed in
-ahead of time — untestable decode paths would be speculation, not
-engineering; the honest raise marks exactly where they would go.
+decode stage needs; a real codec would replace ``_fake_decode`` inside
+the same ``mapInPandas`` stage.
 """
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # optional codec probe — absent in the sandbox, real elsewhere
-    from PIL import Image as _PILImage
-
-    HAS_PIL = True
-except ImportError:  # pragma: no cover - depends on environment
-    _PILImage = None
-    HAS_PIL = False
-
-try:  # stdlib WAV reader — no new dependency; real PCM decode
-    import wave as _wave
-
-    HAS_WAVE = True
-except ImportError:  # pragma: no cover - stdlib, effectively always present
-    _wave = None
-    HAS_WAVE = False
-
-
-def probe_codecs() -> dict[str, bool]:
-    """Which real decoders are available in this environment.  Audio
-    covers PCM WAV via the stdlib ``wave`` module; video covers
-    uncompressed Y4M (YUV4MPEG2) via a pure-Python parser — both need no
-    extra dependency, so they are always True.  Compressed video
-    (ffmpeg territory) is NOT claimed: feeding a non-Y4M payload to
-    ``codec="video"`` raises ValueError at the magic check."""
-    return {"image": HAS_PIL, "audio": HAS_WAVE, "video": True}
 
 MEDIA_SCHEMA = (
     "media_id long, payload binary, media_type string, "
@@ -105,193 +63,14 @@ def _fake_decode(payload: pd.Series, media_type: pd.Series) -> pd.DataFrame:
     )
 
 
-def _pil_decode(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real image decode via Pillow: geometry from the actual header,
-    feature = 8-bin grayscale histogram (density).  Only called when the
-    probe found the library."""
-    widths, heights, feats = [], [], []
-    for payload in pdf["payload"]:
-        img = _PILImage.open(io.BytesIO(payload))
-        widths.append(img.width)
-        heights.append(img.height)
-        gray = np.asarray(img.convert("L"), dtype=np.float64)
-        hist, _ = np.histogram(gray, bins=8, range=(0, 256), density=False)
-        feats.append((hist / max(gray.size, 1)).astype(np.float32))
-    n_bytes = pdf["payload"].str.len().astype("int64")
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"],
-            "media_type": pdf["media_type"],
-            "n_bytes": n_bytes,
-            "width": pd.Series(widths, dtype="int32", index=pdf.index),
-            "height": pd.Series(heights, dtype="int32", index=pdf.index),
-            "n_frames": pd.Series(np.ones(len(pdf)), dtype="int32", index=pdf.index),
-            "feature": feats,
-        }
-    )
-
-
-def _wave_decode(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real PCM WAV decode via the stdlib ``wave`` module.  Column
-    mapping onto the generic DECODED_SCHEMA: ``width`` = sample rate
-    (Hz), ``height`` = channel count, ``n_frames`` = audio frames;
-    ``feature`` = 8-segment RMS envelope normalized to peak (int16/int8
-    PCM), so a silent file yields zeros and any payload is scale-free."""
-    rates, chans, frames, feats = [], [], [], []
-    for payload in pdf["payload"]:
-        with _wave.open(io.BytesIO(payload), "rb") as w:
-            rates.append(w.getframerate())
-            chans.append(w.getnchannels())
-            n = w.getnframes()
-            frames.append(n)
-            raw = w.readframes(n)
-            width = w.getsampwidth()
-        if width == 2:
-            samples = np.frombuffer(raw, dtype="<i2").astype(np.float64)
-        elif width == 1:  # 8-bit WAV is unsigned
-            samples = np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-        else:
-            raise NotImplementedError(
-                f"PCM sample width {width} bytes unsupported (use 8/16-bit)"
-            )
-        if len(samples) == 0:
-            feats.append(np.zeros(8, dtype=np.float32))
-            continue
-        segs = np.array_split(samples, 8)
-        rms = np.array([np.sqrt(np.mean(s * s)) if len(s) else 0.0 for s in segs])
-        peak = np.abs(samples).max()
-        feats.append((rms / peak if peak > 0 else rms).astype(np.float32))
-    n_bytes = pdf["payload"].str.len().astype("int64")
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"],
-            "media_type": pdf["media_type"],
-            "n_bytes": n_bytes,
-            "width": pd.Series(rates, dtype="int32", index=pdf.index),
-            "height": pd.Series(chans, dtype="int32", index=pdf.index),
-            "n_frames": pd.Series(frames, dtype="int32", index=pdf.index),
-            "feature": feats,
-        }
-    )
-
-
-_Y4M_MAGIC = b"YUV4MPEG2 "
-
-
-def _y4m_decode(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real uncompressed-video decode: Y4M (YUV4MPEG2), pure Python.
-
-    Container layout (public spec, mjpegtools): an ASCII stream header
-    ``YUV4MPEG2 W<w> H<h> F<num>:<den> ...\\n`` followed by frames, each
-    ``FRAME[ params]\\n`` + raw planar YUV.  Only 4:2:0 (default, frame
-    payload w*h*3/2) and mono/4:4:4 via the C param are handled — the
-    formats an uncompressed pipeline actually emits.  ``feature`` = mean
-    luma (Y plane, scaled to [0,1]) of up to the first 8 frames, padded
-    with zeros — a real per-frame statistic a frame-sampling stage would
-    compute after a real decode."""
-    widths, heights, frames, feats = [], [], [], []
-    for payload in pdf["payload"]:
-        if not payload.startswith(_Y4M_MAGIC):
-            raise ValueError(
-                "codec='video' handles uncompressed Y4M only; compressed "
-                "containers need ffmpeg, which this environment lacks"
-            )
-        nl = payload.index(b"\n")
-        header = payload[len(_Y4M_MAGIC) : nl].decode("ascii")
-        w = h = None
-        chroma = "420"
-        for tok in header.split():
-            if tok[0] == "W":
-                w = int(tok[1:])
-            elif tok[0] == "H":
-                h = int(tok[1:])
-            elif tok[0] == "C":
-                chroma = tok[1:]
-        if not w or not h:
-            raise ValueError("Y4M header missing W/H")
-        if chroma.startswith("420"):
-            frame_bytes = w * h * 3 // 2
-        elif chroma == "444":
-            frame_bytes = w * h * 3
-        elif chroma == "mono":
-            frame_bytes = w * h
-        else:
-            raise NotImplementedError(f"Y4M chroma subsampling C{chroma}")
-        pos, n, lumas = nl + 1, 0, []
-        while pos < len(payload):
-            if payload[pos : pos + 5] != b"FRAME":
-                raise ValueError(f"Y4M frame marker missing at offset {pos}")
-            pos = payload.index(b"\n", pos) + 1
-            if n < 8:  # luma stats for the sampled head only
-                y = np.frombuffer(payload[pos : pos + w * h], dtype=np.uint8)
-                lumas.append(float(y.mean()) / 255.0)
-            pos += frame_bytes
-            n += 1
-        widths.append(w)
-        heights.append(h)
-        frames.append(n)
-        feats.append(
-            np.asarray(lumas + [0.0] * (8 - len(lumas)), dtype=np.float32)
-        )
-    n_bytes = pdf["payload"].str.len().astype("int64")
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"],
-            "media_type": pdf["media_type"],
-            "n_bytes": n_bytes,
-            "width": pd.Series(widths, dtype="int32", index=pdf.index),
-            "height": pd.Series(heights, dtype="int32", index=pdf.index),
-            "n_frames": pd.Series(frames, dtype="int32", index=pdf.index),
-            "feature": feats,
-        }
-    )
-
-
-def decode_media(df: DataFrame, strict: bool = False, codec: str = "fake") -> DataFrame:
-    """Decode + feature-extract stage over ``mapInPandas``.
-
-    ``codec="fake"`` (default — what every oracle-checked query uses)
-    runs the deterministic fake so the plumbing (schema, batching,
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode + feature-extract stage over ``mapInPandas``: the
+    deterministic fake decode, so the plumbing (schema, batching,
     vectorization) is exercised end-to-end with byte-reproducible
-    output.  ``codec="image"`` decodes real image payloads via Pillow
-    when the import probe found it, and raises ImportError otherwise.
-    ``codec="audio"`` decodes real PCM WAV payloads via the stdlib
-    ``wave`` module; ``codec="video"`` decodes real uncompressed Y4M
-    payloads via a pure-Python parser (neither needs a new dependency).
-    ``strict=True`` with the fake codec raises NotImplementedError at
-    the exact point a real decoder would run — the marked integration
-    point for codecs this container lacks (ffmpeg for compressed
-    video)."""
-    if codec not in ("fake", "image", "audio", "video"):
-        raise ValueError(f"unknown codec {codec!r}")
-    if codec == "image" and not HAS_PIL:
-        raise ImportError(
-            "decode_media(codec='image') requires Pillow, which probe_codecs() "
-            "did not find in this environment"
-        )
-    if codec == "audio" and not HAS_WAVE:  # pragma: no cover - stdlib
-        raise ImportError(
-            "decode_media(codec='audio') requires the stdlib wave module, "
-            "which probe_codecs() did not find in this environment"
-        )
+    output."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if codec == "image":
-                yield _pil_decode(pdf)
-                continue
-            if codec == "audio":
-                yield _wave_decode(pdf)
-                continue
-            if codec == "video":
-                yield _y4m_decode(pdf)
-                continue
-            if strict:
-                raise NotImplementedError(
-                    "real media decode requires codec libraries not present "
-                    "in this environment (ffmpeg for video; use codec='image'/"
-                    "'audio' for the real Pillow/wave paths); plug in here"
-                )
             geo = _fake_decode(pdf["payload"], pdf["media_type"])
             # 8-dim fake feature vector: scaled byte-length harmonics
             base = geo["n_bytes"].to_numpy(dtype=np.float64)

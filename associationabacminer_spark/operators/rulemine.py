@@ -12,11 +12,9 @@ Pipeline parity map:
 - greedy cover loop with deletion (EnvAbacRuleMiner.py:133-232,268-272)
   -> driver loop: filter-out covered rows + localCheckpoint per
   iteration (cuts lineage, the delete_by_query(refresh=True) analog)
-- policy confusion matrix (/root/reference/src/eval/EnvPolicyEvaluator.py:202-252)
-  with the positives count either FACTORIZED (|U|*|O|*|E|, the O6
-  rewrite at EnvOverassignmentCalculator.py:113-116) or estimated by
-  the from-scratch HLL sketch — replacing the reference's brute-force
-  Cartesian enumeration into a hash set (EnvPolicyEvaluator.py:106-169).
+
+The policy confusion-matrix core (the reference's
+``EnvPolicyEvaluator.py:202-252``) is q29's conditional aggregation.
 """
 
 from __future__ import annotations
@@ -396,50 +394,6 @@ def mine_rules(
     return policy
 
 
-def merge_rules(policy: Policy) -> Policy:
-    """Pairwise rule merge to fixpoint (T6,
-    /root/reference/src/eval/RuleMerger.py:19-64): rules whose constraint
-    maps agree on all but one key collapse into one rule whose differing
-    key takes the union of values.  Driver-side (rules are few)."""
-    rules = [dict((k, {v} if isinstance(v, str) else set(v)) for k, v in r.constraints.items()) for r in policy.rules]
-    changed = True
-    while changed:
-        changed = False
-        for i in range(len(rules)):
-            if changed:
-                break
-            for j in range(i + 1, len(rules)):
-                a, b = rules[i], rules[j]
-                if set(a) != set(b):
-                    continue
-                diff = [k for k in a if a[k] != b[k]]
-                if len(diff) <= 1:
-                    if diff:
-                        a[diff[0]] = a[diff[0]] | b[diff[0]]
-                    rules.pop(j)
-                    changed = True
-                    break
-    out = Policy()
-    for r in rules:
-        out.rules.append(
-            Rule(constraints={k: sorted(v) if len(v) > 1 else next(iter(v)) for k, v in r.items()})
-        )
-    return out
-
-
-def wsc(policy: Policy, weights: dict[str, float] | None = None) -> float:
-    """Weighted structural complexity (M4,
-    /root/reference/src/eval/WscCalculator.py:24-53): weighted count of
-    constraints per class of key."""
-    weights = weights or {}
-    total = 0.0
-    for r in policy.rules:
-        for k, v in r.constraints.items():
-            n_vals = len(v) if isinstance(v, (list, set, tuple)) else 1
-            total += weights.get(k, 1.0) * n_vals
-    return total
-
-
 def auc_from_points(fpr: list[float], tpr: list[float]) -> float:
     """Trapezoidal ROC AUC over (FPR, TPR) points (M5,
     /root/reference/src/job/AUCPrinter.py:22-37 — sklearn.metrics.auc
@@ -450,56 +404,3 @@ def auc_from_points(fpr: list[float], tpr: list[float]) -> float:
         area += (x1 - x0) * (y0 + y1) / 2.0
     return area
 
-
-def score_policy(
-    policy: Policy,
-    opr_df: DataFrame,
-    universe_counts: dict[str, int] | None = None,
-    positives_estimate: float | None = None,
-) -> dict[str, float]:
-    """Confusion matrix on the operation window
-    (/root/reference/src/eval/EnvPolicyEvaluator.py:202-252).
-
-    positives (|allowed universe|) comes from either the factorized
-    product of per-dimension counts (``universe_counts``) or an HLL
-    estimate (``positives_estimate``) — never brute-force enumeration.
-    Divide-by-zero rates are redefined to 1.0 exactly as the reference
-    does (EnvPolicyEvaluator.py:225-248)."""
-    allowed = policy.allows()
-    row = opr_df.agg(
-        F.sum(F.when(allowed, 1).otherwise(0)).alias("tp"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    tp, n = int(row["tp"] or 0), int(row["n"])
-    fn = n - tp
-    if positives_estimate is not None:
-        positives = float(positives_estimate)
-    elif universe_counts:
-        positives = 1.0
-        for c in universe_counts.values():
-            positives *= c
-    else:
-        positives = float(tp)
-    fp = max(0.0, positives - tp)
-    total_universe = max(positives, float(n))
-    tn = max(0.0, total_universe - tp - fn - fp)
-    precision = tp / (tp + fp) if (tp + fp) > 0 else 1.0
-    recall = tp / (tp + fn) if (tp + fn) > 0 else 1.0
-    specificity = tn / (tn + fp) if (tn + fp) > 0 else 1.0
-    accuracy = (
-        (tp + tn) / (tp + tn + fp + fn) if (tp + tn + fp + fn) > 0 else 1.0
-    )
-    fpr = fp / (fp + tn) if (fp + tn) > 0 else 0.0
-    return {
-        "tp": float(tp),
-        "fn": float(fn),
-        "fp": fp,
-        "tn": tn,
-        "precision": precision,
-        "recall": recall,
-        "specificity": specificity,
-        "accuracy": accuracy,
-        "fpr": fpr,
-        "n_rules": float(len(policy.rules)),
-        "wsc": float(sum(len(r.constraints) for r in policy.rules)),
-    }

@@ -18,8 +18,9 @@ Scale shape:
     sum(c_i^2) over cluster sizes, never n^2.  n_clusters is the cost
     dial: at N vectors pick n_clusters ~ N / target_cluster_size; the
     paper uses ~100k clusters at web scale.
-  * Duplicate groups close transitively via the large-star/small-star
-    components operator (operators/components.py) — a group spanning
+  * The caller closes duplicate groups transitively with the
+    large-star/small-star components operator
+    (components.assign_components, as q70 does) — a group spanning
     many rows never materializes in one task.
 """
 
@@ -28,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from associationabacminer_spark.operators.components import assign_components
 from associationabacminer_spark.operators.similarity import (
     _nearest_centroids_udf,
     cosine,
@@ -110,27 +110,6 @@ def semdedup_pairs(
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )
     return pairs if star is None else pairs.unionByName(star)
-
-
-def semdedup(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    n_clusters: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Rows of ``df`` that survive semantic dedup: one representative
-    (the minimum id) per transitively-closed duplicate group.  Pairs in
-    DIFFERENT clusters are never compared — the paper's deliberate
-    recall/cost trade; raise n_clusters for cost, lower for recall."""
-    clustered = cluster_assign(df, vec_col, n_clusters, seed)
-    pairs = semdedup_pairs(clustered, id_col, vec_col, threshold).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = assign_components(df, pairs, id_col)
-    keep = comp.filter(F.col(id_col) == F.col("component")).select(id_col)
-    return df.join(keep, id_col, "left_semi")
 
 
 def diversity_sample(

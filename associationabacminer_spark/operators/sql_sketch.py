@@ -273,70 +273,6 @@ def bloom_from_sql(df: DataFrame, col: str, m_bits: int, k: int) -> BloomFilter:
     return out
 
 
-def _mg_by_group(df, group_cols, col, capacity, salt_buckets, tail, emit):
-    """Per-group Misra-Gries in two sorted-stream folds
-    (``agg.sorted_fold``) over the JVM-side (group, key-hash) histogram.
-    The first folds each (group, salt) run into one kernel; the second
-    merges a group's partials in sorted-blob order (Spark's binary order
-    is unsigned lexicographic, so the bytes do not depend on task
-    scheduling) and returns ``emit(merged_kernel)``: the group's output
-    rows, shaped by the ``tail`` DDL fields."""
-    from associationabacminer_spark.operators.agg import sorted_fold
-    from associationabacminer_spark.sketch.misragries import MisraGries
-
-    cnts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(*group_cols, F.xxhash64(col).alias("__kh"))
-        .agg(F.count("*").alias("__cnt"))
-        .withColumn("__salt", F.pmod(F.col("__kh"), F.lit(salt_buckets)))
-    )
-
-    def build(key, cols):
-        mg = MisraGries(capacity)
-        mg.update_batch(cols["__kh"], counts=cols["__cnt"], prehashed=True)
-        return [(mg.serialize(),)]
-
-    def merge(key, cols):
-        parts = map(MisraGries.deserialize, map(bytes, cols["state"]))
-        return emit(reduce(MisraGries.merge, parts))
-
-    partials = sorted_fold(cnts, [*group_cols, "__salt"], [], "state binary", build)
-    return sorted_fold(
-        partials.select(*group_cols, "state"), list(group_cols), ["state"], tail, merge
-    )
-
-
-def mg_by_group_states(
-    df: DataFrame,
-    group_cols: list[str],
-    col: str,
-    capacity: int = 256,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Per-group Misra-Gries heavy-hitter states: (group_cols...,
-    state binary), one mergeable MG summary of ``col`` per group.
-
-    SQL-reduced build (the per-group twin of :func:`mg_from_sql`): the
-    raw rows are first collapsed JVM-side by ``groupBy(groups,
-    xxhash64(col)).count()`` — map-side partial aggregation, whole-stage
-    codegen, Arrow transfer proportional to DISTINCT (group, key) pairs,
-    never rows.  The histogram is salted on ``pmod(key_hash,
-    salt_buckets)`` so a hot group's distinct keys spread over
-    ``salt_buckets`` bounded kernel builds (MG over exact counts equals
-    the streaming build — mergeable summaries subsume streams, PODS'12);
-    a second fold merges each group's partials in sorted-blob order, so
-    the state bytes are reproducible.
-
-    Each state stores at most ``capacity`` (key-hash, count) pairs; a
-    group's merged summary guarantees every key with true frequency
-    > n_group/(capacity+1) per partial chain is present, with the exact
-    undercount bound tracked in the state (``err``)."""
-    return _mg_by_group(
-        df, group_cols, col, capacity, salt_buckets, "state binary",
-        lambda mg: [(mg.serialize(),)],
-    )
-
-
 def mg_topk_by_group(
     df: DataFrame,
     group_cols: list[str],
@@ -352,17 +288,46 @@ def mg_topk_by_group(
     frequency is within [count_lb, count_lb + err], underestimate-only);
     ranking is by the lower bound with the key hash as a deterministic
     tiebreak, emitted by the same fold that merges the states.
+
+    Misra-Gries runs in two sorted-stream folds (``agg.sorted_fold``)
+    over the JVM-side (group, key-hash) histogram.  The raw rows are
+    collapsed by ``groupBy(groups, xxhash64(col)).count()`` — map-side
+    partial aggregation, Arrow transfer proportional to DISTINCT (group,
+    key) pairs, never rows — and the histogram is salted on
+    ``pmod(key_hash, salt_buckets)`` so a hot group's keys spread over
+    ``salt_buckets`` bounded kernel builds (MG over exact counts equals
+    the streaming build — mergeable summaries subsume streams, PODS'12).
+    The first fold builds each (group, salt) run into one kernel of at
+    most ``capacity`` pairs; the second merges a group's partials in
+    sorted-blob order (Spark's binary order is unsigned lexicographic,
+    so the bytes do not depend on task scheduling) and emits its top k.
     Original values are recovered by one probe of the corpus's
     (hash, value) pairs against the broadcast (groups x k)-row top
     table, then a distinct over the output rows."""
+    from associationabacminer_spark.operators.agg import sorted_fold
+    from associationabacminer_spark.sketch.misragries import MisraGries
 
-    def topk(mg):
+    cnts = (
+        df.filter(F.col(col).isNotNull())
+        .groupBy(*group_cols, F.xxhash64(col).alias("__kh"))
+        .agg(F.count("*").alias("__cnt"))
+        .withColumn("__salt", F.pmod(F.col("__kh"), F.lit(salt_buckets)))
+    )
+
+    def build(key, cols):
+        mg = MisraGries(capacity)
+        mg.update_batch(cols["__kh"], counts=cols["__cnt"], prehashed=True)
+        return [(mg.serialize(),)]
+
+    def topk(key, cols):
+        mg = reduce(MisraGries.merge, map(MisraGries.deserialize, map(bytes, cols["state"])))
         order = np.lexsort((mg.keys, -mg.counts))[:k]
         keys, counts = mg.keys[order].astype(np.int64).tolist(), mg.counts[order].tolist()
         return [(h, c, mg.err, rank) for rank, (h, c) in enumerate(zip(keys, counts), 1)]
 
-    top = _mg_by_group(
-        df, group_cols, col, capacity, salt_buckets,
+    partials = sorted_fold(cnts, [*group_cols, "__salt"], [], "state binary", build)
+    top = sorted_fold(
+        partials.select(*group_cols, "state"), list(group_cols), ["state"],
         "__kh long, count_lb long, err long, rank int", topk,
     )
     return (

@@ -3,7 +3,8 @@
 The reference runs these offline with sklearn/skfeature over collected
 matrices (/root/reference/src/experiment/FeatureSelector.py,
 SeparatedVarianceSelector.py); here they are distributed DataFrame
-programs (crosstab, variance, correlation) that never collect raw rows.
+programs (crosstab, functional-dependency strength) that never collect
+raw rows.
 """
 
 from __future__ import annotations
@@ -36,63 +37,6 @@ def functional_dependency_strength(
         F.round(F.col("mx") / F.col("total"), 6).alias("strength"),
         F.col("total").alias("n_rows"),
     )
-
-
-def low_variance_columns(
-    df: DataFrame, cols: list[str], threshold: float = 0.0
-) -> list[str]:
-    """Categorical 'variance threshold' (E1): columns whose dominant value
-    covers >= (1 - threshold) of rows — the reference's constant-column
-    elimination generalized (/root/reference/src/TableCreator.py:124-128).
-
-    Round 6: genuinely ONE aggregation pass — the columns are melted to
-    (col_name, value) rows map-side (the q91 stack shape) and a single
-    two-level aggregate yields every column's dominant share; the
-    previous implementation ran a count job PLUS one groupBy job per
-    column.  Values are compared as strings (injective for atomic
-    types within a column); sum(cnt) equals the row count because the
-    null group participates."""
-    if not cols:
-        return []
-    melted = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col_name"),
-                        F.col(c).cast("string").alias("value"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("__m__")
-    ).select("__m__.col_name", "__m__.value")
-    counts = melted.groupBy("col_name", "value").agg(F.count("*").alias("cnt"))
-    shares = {
-        r["col_name"]: (r["top"], r["n"])
-        for r in counts.groupBy("col_name")
-        .agg(F.max("cnt").alias("top"), F.sum("cnt").alias("n"))
-        .collect()
-    }
-    if not shares:  # empty input: every column is constant-by-vacuity
-        return list(cols)
-    return [
-        c for c in cols if shares[c][0] / shares[c][1] >= 1.0 - threshold
-    ]
-
-
-def pearson_correlation(df: DataFrame, cols: list[str]) -> list[list[float]]:
-    """Pearson correlation matrix via Spark ML (E4,
-    FeatureSelector.py:261-319) — distributed, collects only the k x k
-    matrix."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.stat import Correlation
-
-    vec = VectorAssembler(inputCols=cols, outputCol="__features__").transform(
-        df.select(*cols).na.drop()
-    )
-    m = Correlation.corr(vec, "__features__").collect()[0][0]
-    return m.toArray().tolist()
 
 
 def dedup_summaries_by_beta(
@@ -146,17 +90,6 @@ def deterministic_mask(df: DataFrame, cols: list[str], salt: str = "") -> DataFr
     return out
 
 
-def parse_dependency_map(correlations: list[str]) -> dict[str, list[str]]:
-    """E7: 'det -> dep' strings into a determinant->dependents multimap
-    (/root/reference/src/experiment/dependency_map_from_correlations.py:3-42
-    hardcodes the list; the parse/multimap shape is identical)."""
-    out: dict[str, list[str]] = {}
-    for corr in correlations:
-        det, dep = (s.strip() for s in corr.split("->", 1))
-        out.setdefault(det, []).append(dep)
-    return out
-
-
 def relation_fd_strength(df: DataFrame, det: str, dep: str) -> DataFrame:
     """Whole-relation functional-dependency strength of det -> dep:
     sum over determinant values of the majority dependent count, divided
@@ -170,24 +103,6 @@ def relation_fd_strength(df: DataFrame, det: str, dep: str) -> DataFrame:
         F.lit(dep).alias("dep"),
         F.round(F.sum("mx") / F.sum("total").cast("double"), 6).alias("strength"),
     )
-
-
-def dependency_map_from_fd(
-    df: DataFrame, cols: list[str], threshold: float = 0.99
-) -> dict[str, list[str]]:
-    """Derive the E7 dependency multimap from data instead of hardcoding
-    it: every ordered column pair whose whole-relation FD strength meets
-    the threshold becomes det -> dep.  k*(k-1) tiny aggregations over a
-    (usually pre-aggregated) frame; the resulting map is driver-sized."""
-    found: list[str] = []
-    for det in cols:
-        for dep in cols:
-            if det == dep:
-                continue
-            s = relation_fd_strength(df, det, dep).collect()[0]["strength"]
-            if s is not None and s >= threshold:
-                found.append(f"{det} -> {dep}")
-    return parse_dependency_map(found)
 
 
 def service_op_resource_types(

@@ -51,18 +51,3 @@ def window_counts(
         )
     )
 
-
-def sessionize(
-    df: DataFrame,
-    partition_col: str,
-    ts_col: str = "ts",
-    gap_seconds: float = 1800.0,
-) -> DataFrame:
-    """Classic lag+cumsum sessionization: a new session starts when the
-    gap to the previous event exceeds ``gap_seconds``."""
-    w = Window.partitionBy(partition_col).orderBy(ts_col)
-    gap = _epoch_s(ts_col) - F.lag(_epoch_s(ts_col)).over(w)
-    new_sess = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return df.withColumn("__new__", new_sess).withColumn(
-        "session_id", F.sum("__new__").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    ).drop("__new__")

@@ -1,4 +1,3 @@
 from associationabacminer_spark.plans.lineage import run_with_lineage, read_ledger
-from associationabacminer_spark.plans.jobs import sliding_windows
 
-__all__ = ["run_with_lineage", "read_ledger", "sliding_windows"]
+__all__ = ["run_with_lineage", "read_ledger"]

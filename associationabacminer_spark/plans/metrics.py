@@ -3,21 +3,12 @@
 The reference tracks rows processed across worker threads with a locked
 AtomicCounter (/root/reference/src/util/AtomicCounter.py:32-48) and
 prints progress from it (EnvLogUniverseGenerator.py, job_executor.py).
-The Spark-native analogs, in preference order:
-
-- ``observed``: ``df.observe(Observation, ...)`` — exact aggregate
-  metrics collected as a side effect of whatever action consumes the
-  DataFrame. Zero extra jobs, zero extra scans; the right default.
-- ``with_row_count_accumulator``: a SparkContext accumulator bumped per
-  Arrow batch — live, monotone progress visible on the driver *while*
-  a long job runs (the AtomicCounter's actual use-case). Opt-in: it
-  inserts a mapInPandas pass-through stage, so only wrap the hot path
-  when live progress is worth one Arrow round-trip.
+The Spark-native analog is ``observed``: ``df.observe(Observation, ...)``
+— exact aggregate metrics collected as a side effect of whatever action
+consumes the DataFrame.  Zero extra jobs, zero extra scans.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 
@@ -37,19 +28,3 @@ def observed(df: DataFrame, name: str = "metrics", **exprs: Column):
     obs = Observation(name)
     return df.observe(obs, *[e.alias(n) for n, e in exprs.items()]), obs
 
-
-def with_row_count_accumulator(df: DataFrame, accumulator):
-    """Pass-through stage that adds each Arrow batch's row count to a
-    SparkContext accumulator — live progress a driver thread can poll
-    mid-job (``accumulator.value``), matching the reference's
-    AtomicCounter.increment loop but batched, not per-row."""
-    import pandas as pd  # noqa: F401 — mapInPandas contract
-
-    schema = df.schema
-
-    def count_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            accumulator.add(len(pdf))
-            yield pdf
-
-    return df.mapInPandas(count_batches, schema=schema)

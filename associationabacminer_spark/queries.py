@@ -1206,11 +1206,6 @@ ALIASES: dict[str, str] = {
 }
 
 
-def resolve(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    """Look up a query by current or legacy (pre-round-3) name."""
-    return QUERIES[ALIASES.get(name, name)]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
 
@@ -2758,8 +2753,7 @@ def q90(spark, sf_dir):
     """Pairwise Pearson correlations (E4,
     /root/reference/src/FeatureSelector.py:261-319) as pure Catalyst
     aggregates: one single-pass agg, k*(k-1)/2 co-moment states, no ML
-    VectorAssembler / driver matrix — the oracled anchor for
-    stats.pearson_correlation."""
+    VectorAssembler / driver matrix."""
     li = _t(spark, sf_dir, "lineitem")
     return li.agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
@@ -2790,8 +2784,7 @@ def q91(spark, sf_dir):
     """Dominant-value share per column (E1 variance-threshold analog,
     /root/reference/src/TableCreator.py:124-128): melt the column set with
     stack() so ALL columns are screened in one shuffle instead of one
-    collect per column — the distributed anchor for
-    stats.low_variance_columns."""
+    collect per column."""
     li = _t(spark, sf_dir, "lineitem")
     stacked = li.select(
         F.expr(

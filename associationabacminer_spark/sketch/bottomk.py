@@ -144,18 +144,3 @@ class BottomK:
         """The kept payloads (a uniform sample of distinct keys); entries
         without payloads are excluded via the out-of-band mask."""
         return self.payloads[self.has_payload]
-
-
-def jaccard_estimate(a: "BottomK", b: "BottomK") -> float:
-    """Jaccard similarity |A∩B| / |A∪B| from two bottom-k sketches with
-    equal k (Beyer et al. SIGMOD 2007 §5: the k smallest hashes of the
-    UNION are a uniform sample of A∪B, so the fraction of them present
-    in both sketches is an unbiased estimator with standard error
-    ~1/sqrt(k)).  Exact when both sets fit under k."""
-    assert a.k == b.k, "jaccard requires equal k"
-    u = BottomK.merge(a, b)
-    if len(u.hashes) == 0:
-        return 0.0
-    in_a = np.isin(u.hashes, a.hashes, assume_unique=True)
-    in_b = np.isin(u.hashes, b.hashes, assume_unique=True)
-    return float((in_a & in_b).sum() / len(u.hashes))

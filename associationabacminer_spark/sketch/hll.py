@@ -168,17 +168,3 @@ class HyperLogLog:
             out._dense = np.frombuffer(payload, dtype=np.uint8, count=n).copy()
             out._sparse = np.empty(0, dtype=np.uint32)
         return out
-
-
-def intersection_estimate(a: "HyperLogLog", b: "HyperLogLog") -> float:
-    """|A ∩ B| by inclusion-exclusion over mergeable unions.  Error is
-    additive in the union's absolute error (~1.04/sqrt(m) * |A ∪ B|), so
-    relative error blows up when the true intersection is much smaller
-    than the union — the known KMV/HLL set-algebra caveat; use it for
-    overlap ratios of same-order sets, not needle-in-haystack joins."""
-    return a.estimate() + b.estimate() - HyperLogLog.merge(a, b).estimate()
-
-
-def difference_estimate(a: "HyperLogLog", b: "HyperLogLog") -> float:
-    """|A \\ B| = |A ∪ B| - |B| (same error caveat as intersection)."""
-    return HyperLogLog.merge(a, b).estimate() - b.estimate()

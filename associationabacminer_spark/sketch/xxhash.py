@@ -26,34 +26,8 @@ _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
 _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 SPARK_SEED = 42
-
-
-def _rotl(x: np.ndarray, r: int) -> np.ndarray:
-    r_ = np.uint64(r)
-    return ((x << r_) | (x >> (np.uint64(64) - r_))) & _MASK
-
-
-def xxh64_int64(values, seed: int = SPARK_SEED) -> np.ndarray:
-    """Vectorized XXH64 of int64 values (8-byte LE), matching Spark's
-    ``xxhash64(bigint_col)``."""
-    with np.errstate(over="ignore"):
-        inp = np.asarray(values).astype(np.int64).view(np.uint64)
-        acc = (np.uint64(seed) + _P5 + np.uint64(8)) & _MASK
-        k1 = (inp * _P2) & _MASK
-        k1 = _rotl(k1, 31)
-        k1 = (k1 * _P1) & _MASK
-        acc = np.full(len(inp), acc, dtype=np.uint64) ^ k1
-        acc = (_rotl(acc, 27) * _P1 + _P4) & _MASK
-        # avalanche
-        acc ^= acc >> np.uint64(33)
-        acc = (acc * _P2) & _MASK
-        acc ^= acc >> np.uint64(29)
-        acc = (acc * _P3) & _MASK
-        acc ^= acc >> np.uint64(32)
-        return acc
 
 
 def _u64(b: bytes, i: int) -> int:

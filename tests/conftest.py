@@ -19,28 +19,6 @@ def spark():
     s.stop()
 
 
-def _file_ranges(path: str, column: str) -> list[tuple]:
-    """(min, max) of ``column`` per parquet file under ``path`` — the
-    statistics the scanner prunes with, read straight from the footers
-    so layout tests prove disjointness rather than assume it."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(Path(path).glob("**/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(column)
-        stats = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
-        stats = [st for st in stats if st is not None and st.has_min_max]
-        if stats:
-            out.append((min(st.min for st in stats), max(st.max for st in stats)))
-    return out
-
-
-@pytest.fixture(scope="session")
-def file_ranges():
-    return _file_ranges
-
-
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

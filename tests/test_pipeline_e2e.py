@@ -16,8 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from associationabacminer_spark.operators import dedup, sampling
-from associationabacminer_spark.operators.components import near_dedup_keep_roots
-from associationabacminer_spark.operators.decontaminate import decontaminate
+from associationabacminer_spark.operators.components import assign_components
+from associationabacminer_spark.operators.decontaminate import contaminated_ids
 from associationabacminer_spark.operators.packing import pack_sequences
 from associationabacminer_spark.functions.text import repetition_ratio
 
@@ -52,8 +52,8 @@ class TestCurationPipeline:
         # 1b. paragraph-level boilerplate scrub (CCNet/RefinedWeb) over
         # 12-token-chunked text — chunking only changes whitespace,
         # which every downstream tokenizer (split on \s+) normalizes.
-        # keep_one: every duplicated paragraph keeps exactly one witness,
-        # so the rebuilt corpus has NO paragraph with n_occ >= 2.
+        # Every occurrence of a duplicated paragraph is dropped, so the
+        # rebuilt corpus has NO paragraph with n_occ >= 2.
         keep = [c for c in uniq.columns if c != "text"]
         tokd = uniq.select(
             *keep, F.split(F.trim(F.col("text")), r"\s+").alias("__toks__")
@@ -71,7 +71,7 @@ class TestCurationPipeline:
         # real run) — every downstream stage otherwise re-executes the
         # scrub's join lineage per action
         scrubbed = (
-            dedup.scrub_common_paragraphs(chunked, "text", "doc_id", keep_one=True)
+            dedup.scrub_common_paragraphs(chunked, "text", "doc_id")
             .filter(F.trim(F.col("text")) != "")
             .drop("n_paras", "n_scrubbed")
             .localCheckpoint()
@@ -82,12 +82,19 @@ class TestCurationPipeline:
             .filter(F.col("par") != "")
         )
         assert paras.groupBy("par").count().filter(F.col("count") >= 2).count() == 0
+        # the injected spam loop chunks into 16 identical 12-token
+        # paragraphs and an 8-token tail: the scrub drops every repeated
+        # chunk and keeps only the tail, which occurs once
+        spam = scrubbed.filter(F.col("doc_id") == 9_000_001).collect()
+        assert [r["text"] for r in spam] == [" ".join(["spam"] * 8)]
 
         # 2. near-dup closure: MinHash-LSH pairs -> components -> keep roots
         pairs = dedup.minhash_lsh_dedup(
             scrubbed, "text", "doc_id", num_perm=32, bands=16, n=3, threshold=0.6
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        survivors = near_dedup_keep_roots(scrubbed, pairs, "doc_id")
+        comp = assign_components(scrubbed, pairs, "doc_id")
+        roots = comp.filter(F.col("doc_id") == F.col("component")).select("doc_id")
+        survivors = scrubbed.join(roots, "doc_id", "left_semi")
 
         # 3. quality + repetition screen (token-level, then the Gopher
         # n-gram rules, then the bigram-LM cross-entropy band)
@@ -97,12 +104,13 @@ class TestCurationPipeline:
         )
 
         rep = gopher_repetition(survivors, "text", "doc_id")
+        raw_spam = uniq.filter(F.col("doc_id") == 9_000_001)
         assert (
-            rep.filter(F.col("doc_id") == 9_000_001)
+            gopher_repetition(raw_spam, "text", "doc_id")
             .filter(F.col("dup_2gram_frac") > 0.9)
             .count()
             == 1
-        )  # the injected spam loop is exactly what the Gopher rules catch
+        )  # the unscrubbed spam loop is exactly what the Gopher rules catch
         ok_rep = rep.filter(
             (F.col("dup_3gram_frac") < 0.9) & (F.col("dup_4gram_frac") < 0.9)
         ).select("doc_id")
@@ -147,12 +155,10 @@ class TestCurationPipeline:
         # 4. decontaminate vs a held-out slice of itself (guaranteed hits)
         test_set = clean.filter(F.col("doc_id") % 7 == 0)
         train_set = clean.filter(F.col("doc_id") % 7 != 0)
-        safe_test = decontaminate(train_set, test_set, "text", "doc_id", n=5)
+        hits = contaminated_ids(train_set, test_set, "text", "doc_id", n=5)
+        safe_test = test_set.join(hits, "doc_id", "left_anti")
         # re-running contamination against train finds nothing
-        assert (
-            decontaminate(train_set, safe_test, "text", "doc_id", n=5).count()
-            == safe_test.count()
-        )
+        assert contaminated_ids(train_set, safe_test, "text", "doc_id", n=5).count() == 0
 
         # 5. deterministic split + per-source quota on the train side
         split = sampling.hash_split(train_set, "doc_id", test_frac=0.1)

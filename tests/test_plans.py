@@ -428,17 +428,22 @@ class TestSortedFoldPlans:
         assert nodes.count("MapInPandas") == 2, nodes
 
     def test_mg_by_group_budget(self, spark):
-        """Per-group Misra-Gries is two keyed folds over the JVM-side
-        (group, key-hash) histogram: the histogram's exchange, then one
-        exchange and one ``MapInPandas`` per fold; q51 reads its top
-        table once, through a broadcast, and caches nothing."""
-        from associationabacminer_spark.operators.sql_sketch import mg_by_group_states
+        """Per-group Misra-Gries top-k is two keyed folds over the
+        JVM-side (group, key-hash) histogram: the histogram's exchange,
+        then one exchange and one ``MapInPandas`` per fold; the values
+        come back through one broadcast of the top table onto a second
+        scan, then one exchange for the output distinct and one for the
+        ordering.  q51 reads its top table once, through a broadcast,
+        and caches nothing."""
+        from associationabacminer_spark.operators.sql_sketch import mg_topk_by_group
 
         ev = spark.read.parquet(f"{SF}/events.parquet")
-        nodes = _nodes(mg_by_group_states(ev, ["event_type"], "user_id"))
+        nodes = _nodes(mg_topk_by_group(ev, ["event_type"], "user_id"))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert nodes.count("MapInPandas") == 2, nodes
-        assert nodes.count("Exchange") == 3, nodes
+        assert nodes.count("Exchange") == 5, nodes
+        assert nodes.count("BroadcastExchange") == 1, nodes
+        assert nodes.count("FileScan") == 2, nodes
         nodes = _nodes(Q.QUERIES["q51_mg_topk_by_group"](spark, SF))
         assert "FlatMapGroupsInPandas" not in nodes, nodes
         assert "InMemoryTableScan" not in nodes, nodes

@@ -891,36 +891,6 @@ class TestGroupedSketchStates:
             b = HyperLogLog.deserialize(bytes(rows[r["group"]]["sketch"]))
             assert (a._registers() == b._registers()).all()
 
-
-class TestRangeSortedLayout:
-    def test_output_files_have_disjoint_ranges(self, spark, tmp_path, file_ranges):
-        """The written files' parquet min/max statistics must form
-        non-overlapping ts ranges — the property pruning relies on."""
-        from associationabacminer_spark.sources.layout import write_range_sorted
-
-        ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-        dst = str(tmp_path / "sorted-events")
-        write_range_sorted(ev, dst, ["ts"], n_files=8)
-        back = spark.read.parquet(dst)
-        assert back.count() == ev.count()
-        ranges = sorted(file_ranges(dst, "ts"))
-        assert len(ranges) >= 4
-        for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:]):
-            assert hi_a <= lo_b, (hi_a, lo_b)
-
-    def test_unsorted_write_overlaps(self, spark, tmp_path, file_ranges):
-        """Control: a hash-repartitioned write has overlapping ranges —
-        the test above isn't vacuously true."""
-        ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-        dst = str(tmp_path / "hashed-events")
-        ev.repartition(8).write.mode("overwrite").parquet(dst)
-        ranges = sorted(file_ranges(dst, "ts"))
-        overlaps = sum(
-             1 for (lo_a, hi_a), (lo_b, hi_b) in zip(ranges, ranges[1:])
-             if hi_a > lo_b
-        )
-        assert overlaps > 0
-
     def test_bottomk_and_cms_through_grouped_states(self, spark):
         """Kernel generality: grouped_sketch_states works for ANY kernel
         implementing the lifecycle — bottom-k distinct samples and CMS
@@ -995,64 +965,6 @@ class TestLedgerOrdering:
             assert not any(r["run_id"] == "r3" for r in ledger3)
             assert len(ledger3) == 32
         finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-
-class TestBucketedJoin:
-    """write_bucketed makes same-key joins shuffle-free: both sides
-    pre-hashed into aligned buckets at write time, so the join plan has
-    NO Exchange — the co-location lever for fact-to-fact joins at
-    100 TB."""
-
-    def test_bucketed_join_has_no_exchange(self, spark):
-        from associationabacminer_spark.sources.layout import write_bucketed
-
-        tmp = tempfile.mkdtemp(prefix="buckets-")
-        try:
-            a = spark.range(0, 10_000).select(
-                F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-            )
-            b = spark.range(0, 10_000).select(
-                F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-            )
-            write_bucketed(a, "bk_a", ["k"], 8, path=tmp + "/a", sort_cols=["k"])
-            write_bucketed(b, "bk_b", ["k"], 8, path=tmp + "/b", sort_cols=["k"])
-            ta, tb = spark.table("bk_a"), spark.table("bk_b")
-            joined = ta.join(tb.hint("merge"), "k")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            # and it computes the right thing
-            row = joined.agg(
-                F.count("*").alias("n"), F.sum(F.col("va") + F.col("vb")).alias("s")
-            ).collect()[0]
-            assert row["n"] == 10_000
-            assert row["s"] == sum(2 * i + 3 * i for i in range(10_000))
-        finally:
-            spark.sql("DROP TABLE IF EXISTS bk_a")
-            spark.sql("DROP TABLE IF EXISTS bk_b")
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    def test_bucketed_groupby_has_no_exchange(self, spark):
-        from associationabacminer_spark.sources.layout import write_bucketed
-
-        tmp = tempfile.mkdtemp(prefix="buckets-")
-        try:
-            a = spark.range(0, 10_000).select(
-                (F.col("id") % 500).alias("k"), F.col("id").alias("v")
-            )
-            write_bucketed(a, "bk_g", ["k"], 8, path=tmp + "/g")
-            plan = (
-                spark.table("bk_g")
-                .groupBy("k")
-                .agg(F.sum("v"))
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "Exchange" not in plan, plan
-        finally:
-            spark.sql("DROP TABLE IF EXISTS bk_g")
             shutil.rmtree(tmp, ignore_errors=True)
 
 
