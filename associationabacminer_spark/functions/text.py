@@ -21,6 +21,13 @@ def token_count(text: Column | str) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
 
 
+def tokens(text: Column | str) -> Column:
+    """Lowercased whitespace tokens: the one tokenizer of the n-gram,
+    language-model and language-ID paths."""
+    t = text if isinstance(text, Column) else F.col(text)
+    return F.split(F.trim(F.lower(t)), r"\s+")
+
+
 def punct_ratio(text: Column | str) -> Column:
     t = text if isinstance(text, Column) else F.col(text)
     n = F.length(t)
@@ -46,9 +53,7 @@ def lang_guess(text: Column | str) -> Column:
     several times, and filter() is an interpreted higher-order function
     with no codegen CSE — the plain formulation re-split and re-scanned
     the text ~20x per row (round-6 plan audit)."""
-    t = text if isinstance(text, Column) else F.col(text)
     langs = list(_LANG_MARKERS)
-    toks_expr = F.split(F.trim(F.lower(t)), r"\s+")
 
     def with_hits(h):
         hit = {lang: F.element_at(h, i + 1) for i, lang in enumerate(langs)}
@@ -66,7 +71,7 @@ def lang_guess(text: Column | str) -> Column:
         return lambda w: w.isin(*markers)
 
     return bind_once(
-        toks_expr,
+        tokens(text),
         lambda toks: bind_once(
             F.array(
                 *[
@@ -90,8 +95,7 @@ def fingerprint(text: Column | str) -> Column:
 
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """Array of word n-gram shingles (the MinHash/Jaccard input unit)."""
-    t = text if isinstance(text, Column) else F.col(text)
-    toks = F.split(F.trim(F.lower(t)), r"\s+")
+    toks = tokens(text)
     k = F.size(toks) - (n - 1)
     idx = F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0)))
     return F.when(k <= 0, F.array(F.array_join(toks, " "))).otherwise(
@@ -127,7 +131,6 @@ def word_ngram_hash_chain(text: Column | str, n: int = 3) -> Column:
     pairs with nothing (without the guard every NULL text hashed to one
     shared constant shingle)."""
     t = text if isinstance(text, Column) else F.col(text)
-    toks_expr = F.split(F.trim(F.lower(t)), r"\s+")
 
     def with_th(toks, th):
         k = F.size(th) - (n - 1)
@@ -144,7 +147,7 @@ def word_ngram_hash_chain(text: Column | str, n: int = 3) -> Column:
     return F.when(
         t.isNotNull(),
         bind_once(
-            toks_expr,
+            tokens(t),
             lambda toks: bind_once(
                 F.transform(toks, lambda x: F.xxhash64(x)), lambda th: with_th(toks, th)
             ),

@@ -103,12 +103,14 @@ def contaminated_ids(
     if bloom_fpp is not None:
         from associationabacminer_spark.operators.sql_sketch import bloom_semi_filter
 
-        # cache the reference shingle set: the Bloom build (sizing count
-        # + word-table reduction) and the final semi-join all consume it.
-        # tr is distinct by construction, so its count IS n_keys — pass
-        # it through to spare bloom_semi_filter a redundant distinct
-        # shuffle over the full shingle set
-        tr = tr.cache()
+        # checkpoint the reference shingle set (lazily: the count below
+        # materializes it, and its blocks live as long as the result
+        # does): the Bloom build (sizing count + word-table reduction)
+        # and the final semi-join all consume it.  tr is distinct by
+        # construction, so its count IS n_keys — pass it through to
+        # spare bloom_semi_filter a redundant distinct shuffle over the
+        # full shingle set
+        tr = tr.localCheckpoint(eager=False)
         te = bloom_semi_filter(
             te, "sh", tr, "sh", fpp=bloom_fpp, n_keys=tr.count()
         )

@@ -17,11 +17,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from associationabacminer_spark.functions.text import (
     bind_once,
+    tokens,
     word_ngram_hash_chain,
     word_ngram_hashes,
     word_ngrams,
@@ -476,23 +477,30 @@ def lsh_candidate_pairs(
     # collision — candidate-superset-safe either way, since every pair
     # is exact-rechecked downstream).
     banded = band_hash_table(sig_df, bands=bands, rows_per_band=rows_per_band)
-    # Bucket-size filter BEFORE any collect_list, in ONE pass: a window
-    # count over the bucket key shuffles banded once (spill-safe row
-    # buffer per group), drops the ~rows*bands singleton buckets, and the
-    # groupBy that follows requires the exact partitioning the window
-    # already established — EnsureRequirements inserts no second
-    # Exchange, so the expensive signature map upstream runs exactly
-    # once.  (A collect_list-first formulation OOMs at 59M docs — the
-    # partial aggregation buffers a list per mostly-singleton key; a
-    # count-aggregate + self-join formulation recomputes the signature
-    # scan twice.  Plan-asserted single-Exchange in tests.)
-    from pyspark.sql import Window
+    return bucket_pairs(banded, max_bucket_size)
 
-    w = Window.partitionBy("band_hash")
-    filtered = banded.withColumn("n", F.count("*").over(w)).filter(F.col("n") > 1)
+
+def bucket_pairs(keyed: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, of ``doc_id``s sharing
+    a bucket; every other column of ``keyed`` is the bucket key.
+
+    Bucket-size filter BEFORE any collect_list, in ONE pass: a window
+    count over the bucket key shuffles ``keyed`` once (spill-safe row
+    buffer per group), drops the singleton buckets, and the groupBy that
+    follows requires the exact partitioning the window already
+    established — EnsureRequirements inserts no second Exchange, so the
+    expensive map upstream (signatures, hyperplane bits) runs exactly
+    once.  (A collect_list-first formulation OOMs at 59M docs — the
+    partial aggregation buffers a list per mostly-singleton key; a
+    count-aggregate + self-join formulation recomputes the upstream
+    scan twice.  Plan-asserted single-Exchange in tests.)
+    ``max_bucket_size`` also drops buckets above the cap."""
+    key = [c for c in keyed.columns if c != "doc_id"]
+    w = Window.partitionBy(*key)
+    filtered = keyed.withColumn("n", F.count("*").over(w)).filter(F.col("n") > 1)
     if max_bucket_size is not None:
         filtered = filtered.filter(F.col("n") <= max_bucket_size)
-    buckets = filtered.groupBy("band_hash").agg(
+    buckets = filtered.groupBy(*key).agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
     # all pairs within a bucket: (i-th, each later element); ids sorted so
@@ -585,7 +593,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     tokens, per-bit signed sums, sign -> bit reassembly."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.explode(tokens(text_col)).alias("tok"),
     ).withColumn("h", F.xxhash64("tok"))
     bit_sums = toks.groupBy("doc_id").agg(
         *[
@@ -766,9 +774,7 @@ def _window_fingerprint_rows(df: DataFrame, text_col: str, id_col: str, k: int) 
     token arrays stay pinned by its ``bind_once``.  Docs shorter than k
     tokens produce no rows: the filter on the raw column drops them
     before the chain's whole-text fallback could fire."""
-    return df.filter(
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")) >= k
-    ).select(
+    return df.filter(F.size(tokens(text_col)) >= k).select(
         F.col(id_col),
         F.posexplode(word_ngram_hash_chain(F.col(text_col), k)).alias("s", "fp"),
     )
@@ -828,8 +834,6 @@ def _span_islands(
 ) -> DataFrame:
     """(id, s, fp, island) duplicated-window rows with their per-doc
     gap-and-island span assignment (see ``duplicated_spans``)."""
-    from pyspark.sql import Window
-
     wins = _window_fingerprint_rows(df, text_col, id_col, k)
     # duplicated-fingerprint filter as a WINDOW count over fp (the
     # lsh_candidate_pairs pattern): the groupBy + semi-join formulation

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from associationabacminer_spark.functions.text import bind_once, tokens
+
 
 def _bigram_rows(df: DataFrame, text_col: str, id_col: str | None) -> DataFrame:
     """(id?, hp, hw) hashed bigram rows, one per adjacent token pair.
@@ -33,13 +35,10 @@ def _bigram_rows(df: DataFrame, text_col: str, id_col: str | None) -> DataFrame:
     transform-inlining trap documented in text.bind_once;
     round-6 plan audit showed the explode Generate collapsed the old
     chained projections and duplicated the tokenization)."""
-    from associationabacminer_spark.functions.text import bind_once
-
     cols = [F.col(id_col)] if id_col else []
-    tokd = df.select(
-        *cols,
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__toks__"),
-    ).filter(F.size("__toks__") >= 2)
+    tokd = df.select(*cols, tokens(text_col).alias("__toks__")).filter(
+        F.size("__toks__") >= 2
+    )
     pairs = bind_once(
         F.transform("__toks__", lambda t: F.xxhash64(t)),
         lambda th: F.transform(
@@ -77,12 +76,12 @@ def bigram_lm_scores(
     Returns (id_col, n_bigrams, xent) with xent rounded to 6 — the
     filter use is ``scores.filter(col("xent") < hi)`` or a
     quantiles_by_group band."""
-    bigram, context, v = _train_bigram_model(df, text_col, "")
+    bigram, context, v = _model(_bigram_counts(df, text_col, ""), [""])
     dp = _bigram_rows(df, text_col, id_col)
     scored = (
         dp.join(bigram, ["hp", "hw"], "left")
         .join(context, ["hp"], "left")
-        .withColumn("__nll__", _nll("cb", "cu", add_k, v))
+        .withColumn("__nll__", _nll("cb", "cu", add_k, v[""]))
     )
     return scored.groupBy(id_col).agg(
         F.count("*").alias("n_bigrams"),
@@ -90,37 +89,45 @@ def bigram_lm_scores(
     )
 
 
-def _bigram_tables(model: DataFrame, text_col: str, suffix: str):
-    """(bigram_counts, context_counts) for an add-k bigram model — ONE
-    corpus pass: context counts derive from the bigram count table
-    (cu(p) = sum_w cb(p, w)) instead of re-scanning the corpus.  The
-    vocab-bounded table is persisted: the vocab scalar job materializes
-    it once and the scoring joins read the cache.  Count columns are
-    suffixed so two models can join into one scoring pass
+def _bigram_counts(model: DataFrame, text_col: str, suffix: str) -> DataFrame:
+    """(hp, hw, cb<suffix>) bigram counts of an add-k bigram model; the
+    count column is suffixed so two models can merge into one table
     (``dsir_logratio``)."""
     mp = _bigram_rows(model, text_col, id_col=None)
-    bigram = (
-        mp.groupBy("hp", "hw").agg(F.count("*").alias(f"cb{suffix}")).persist()
+    return mp.groupBy("hp", "hw").agg(F.count("*").alias(f"cb{suffix}"))
+
+
+def _model(bigram: DataFrame, suffixes: list[str]):
+    """(bigram_counts, context_counts, {suffix: vocab_size}) of the
+    models whose counts ``bigram`` holds, one ``cb<suffix>`` column
+    each.  Context counts derive from the bigram table
+    (cu(p) = sum_w cb(p, w)) and a model's vocab is the distinct
+    hp ∪ hw of its rows (every token of a >= 2-token doc appears in some
+    bigram), so neither re-scans the corpus.  The vocab-bounded table is
+    a lazy local checkpoint: ONE scalar job computes every vocab size
+    from ONE scan of it and materializes it, the scoring joins read its
+    blocks, and those blocks live as long as the returned tables do
+    (nothing is left in the session's cache)."""
+    bigram = bigram.localCheckpoint(eager=False)
+    context = bigram.groupBy("hp").agg(
+        *[F.sum(f"cb{s}").alias(f"cu{s}") for s in suffixes]
     )
-    context = bigram.groupBy("hp").agg(F.sum(f"cb{suffix}").alias(f"cu{suffix}"))
-    return bigram, context
-
-
-def _vocab_union(bigram: DataFrame, tag: str) -> DataFrame:
-    """(tag, h) token rows of a bigram table — vocab = distinct hp ∪ hw
-    of the TABLE (every token of a >= 2-token doc appears in some
-    bigram, so no corpus re-scan is needed)."""
-    return bigram.select(
-        F.lit(tag).alias("__m__"), F.col("hp").alias("h")
-    ).unionAll(bigram.select(F.lit(tag), F.col("hw")))
-
-
-def _train_bigram_model(model: DataFrame, text_col: str, suffix: str):
-    """(bigram_counts, context_counts, vocab_size); the v scalar job
-    doubles as the cache-materialization pass for the bigram table."""
-    bigram, context = _bigram_tables(model, text_col, suffix)
-    v = _vocab_union(bigram, "m").agg(F.countDistinct("h")).first()[0]
-    if not v:
+    own = [
+        F.struct(
+            F.when(F.col(f"cb{s}").isNotNull(), F.lit(s)).alias("m"),
+            F.col(c).alias("h"),
+        )
+        for s in suffixes
+        for c in ("hp", "hw")
+    ]
+    v = dict(
+        bigram.select(F.inline(F.array(*own)))
+        .filter(F.col("m").isNotNull())
+        .groupBy("m")
+        .agg(F.countDistinct("h"))
+        .collect()
+    )
+    if not all(v.get(s) for s in suffixes):
         # every P(w|p) would be 0.5/0 -> xent = -inf; fail loudly instead
         raise ValueError(
             "model corpus has no bigrams (no doc with >= 2 tokens) — "
@@ -170,35 +177,23 @@ def dsir_logratio(
     Returns (id_col, n_bigrams, xent_raw, xent_target, logw), all
     rounded to 6.  Docs with fewer than two tokens produce no row
     (they have no bigrams to weigh)."""
-    bt, ct = _bigram_tables(target_df, text_col, "_t")
-    br, cr = _bigram_tables(df, text_col, "_r")
-    # ONE scalar job computes both vocab sizes (and materializes both
-    # persisted bigram caches) instead of two sequential jobs
-    vrows = dict(
-        _vocab_union(bt, "t")
-        .unionAll(_vocab_union(br, "r"))
-        .groupBy("__m__")
-        .agg(F.countDistinct("h").alias("v"))
-        .collect()
-    )
-    vt, vr = vrows.get("t", 0), vrows.get("r", 0)
-    if not vt or not vr:
-        raise ValueError(
-            "model corpus has no bigrams (no doc with >= 2 tokens) — "
-            "cannot train a bigram model"
-        )
     # merge the two models' tables MODEL-SIDE (vocab-bounded, cheap) so
     # the big document bigram stream pays TWO lookups instead of four —
-    # the full-outer merges keep every (hp, hw) / hp either model knows,
-    # and _nll already coalesces the missing side to 0 (round 6)
-    bm = bt.join(br, ["hp", "hw"], "full")
-    cm = ct.join(cr, ["hp"], "full")
+    # the full-outer merge keeps every (hp, hw) either model knows, a
+    # context sum over a model's nulls is null, and _nll coalesces the
+    # missing side to 0
+    bm, cm, v = _model(
+        _bigram_counts(target_df, text_col, "_t").join(
+            _bigram_counts(df, text_col, "_r"), ["hp", "hw"], "full"
+        ),
+        ["_t", "_r"],
+    )
     dp = _bigram_rows(df, text_col, id_col)
     scored = (
         dp.join(bm, ["hp", "hw"], "left")
         .join(cm, ["hp"], "left")
-        .withColumn("__nll_r__", _nll("cb_r", "cu_r", add_k, vr))
-        .withColumn("__nll_t__", _nll("cb_t", "cu_t", add_k, vt))
+        .withColumn("__nll_r__", _nll("cb_r", "cu_r", add_k, v["_r"]))
+        .withColumn("__nll_t__", _nll("cb_t", "cu_t", add_k, v["_t"]))
     )
     ag = scored.groupBy(id_col).agg(
         F.count("*").alias("n_bigrams"),
@@ -241,12 +236,7 @@ def gopher_repetition(
     Returns ``df``'s id plus ``n_tokens`` and one ``dup_{n}gram_frac``
     per n (rounded to 6); docs with fewer than n tokens score 0.0 for
     that n."""
-    from associationabacminer_spark.functions.text import bind_once
-
-    tokd = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("__toks__"),
-    )
+    tokd = df.select(F.col(id_col), tokens(text_col).alias("__toks__"))
 
     def gram_hash(th, n: int):
         # NB: must be a ONE-parameter lambda — pyspark passes (element,

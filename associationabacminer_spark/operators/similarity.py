@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from associationabacminer_spark.operators.dedup import bucket_pairs
+
 
 def dot(a, b) -> Column:
     return F.aggregate(
@@ -327,27 +329,11 @@ def embedding_near_dup_pairs_banded(
     # (the lsh_candidate_pairs shape) instead of a two-sided self-join —
     # the join evaluated the Python banding UDF twice (two Arrow round
     # trips over every vector) and shuffled the banded table twice.
-    # The window count drops singleton buckets before any collect_list
-    # and establishes exactly the partitioning the groupBy needs.
-    from pyspark.sql import Window
-
-    keyed = df.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(band_bucket_ids(F.col(vec_col))).alias("band", "bucket"),
-    )
-    w = Window.partitionBy("band", "bucket")
-    filtered = keyed.withColumn("n", F.count("*").over(w)).filter(F.col("n") > 1)
-    buckets = filtered.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("vid")).alias("ids")
-    )
-    e1 = buckets.select("ids", F.posexplode("ids").alias("i", "id_a"))
-    cands = (
-        e1.select(
-            "id_a",
-            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("id_b"),
+    cands = bucket_pairs(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.posexplode(band_bucket_ids(F.col(vec_col))).alias("band", "bucket"),
         )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
     )
     # per-doc norms precomputed map-side: norm() is an interpreted
     # higher-order aggregate, so paying it once per DOC instead of once

@@ -596,11 +596,14 @@ _RULES = [
     """,
 )
 def q26(spark, sf_dir):
-    """Event x rule theta-join: broadcast nested-loop with conjunctive
-    predicates (J1, policy_allows_event at EnvPolicyEvaluator.py:32-36)."""
+    """Event x rule theta-join with conjunctive predicates (J1,
+    policy_allows_event at EnvPolicyEvaluator.py:32-36): the event-type
+    equality is the join key and the user-id range a join condition, so
+    the executed plan is a broadcast hash join building the events side
+    (a left outer join cannot build its preserved rules side)."""
     ev = _t(spark, sf_dir, "events")
     rules = spark.createDataFrame(_RULES, "rule_id string, etype string, lo long, hi long")
-    joined = F.broadcast(rules).join(
+    joined = rules.join(
         ev,
         (ev.event_type == rules.etype)
         & (ev.user_id >= rules.lo)

@@ -2580,8 +2580,8 @@ class TestSourceOverlapMatrix:
 
 
 class TestIncrementalIngest:
-    """operators/ingest.py: dedup a new batch against a persisted
-    fingerprint store without rescanning historical text."""
+    """operators/ingest.py: dedup a new batch against a fingerprint
+    store without rescanning historical text."""
 
     @pytest.fixture(scope="class")
     def corpus(self, spark):
@@ -2689,6 +2689,34 @@ class TestIncrementalIngest:
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
 
+class TestOperatorsLeaveNoCache:
+    def test_lm_ingest_and_bloom_decontaminate_leave_no_cache(self, spark):
+        """A table an operator materializes for its own reuse (the bigram
+        counts, the store signatures, the Bloom path's reference
+        shingles) lives as long as the DataFrames that read it: nothing
+        stays in the session's cache once the result is collected.  A
+        leftover entry logs "Asked to cache already cached data" when
+        the same plan runs again."""
+        from associationabacminer_spark.operators import decontaminate, ingest, lm
+
+        spark.catalog.clearCache()  # entries earlier tests left behind
+        docs = spark.createDataFrame(
+            [
+                (1, "the quick brown fox jumps over the lazy dog"),
+                (2, "the lazy dog sleeps under the quick brown tree"),
+                (3, "a third document about something else entirely"),
+            ],
+            "doc_id long, text string",
+        )
+        lm.bigram_lm_scores(docs, "text", "doc_id").collect()
+        store = ingest.dedup_store_build(docs, "text", "doc_id")
+        ingest.incremental_ingest(docs, store, "text", "doc_id").collect()
+        decontaminate.contaminated_ids(
+            docs, docs, "text", "doc_id", n=3, bloom_fpp=0.01
+        ).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 class TestOphOptimalDensification:
     def test_slot_agreement_tracks_jaccard_on_short_docs(self, spark):
         """Optimal densification (Shrivastava, ICML 2017) restores
@@ -2761,118 +2789,3 @@ class TestOphOptimalDensification:
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         with pytest.raises(ValueError):
             dedup.minhash_signatures_oph(df, "text", "doc_id", densify="nope")
-
-
-class TestIngestStoreSafety:
-    """Round-6 hardening of the persisted-store lifecycle: narrow
-    read-failure handling, parked-table recovery, a parameter manifest,
-    and the bands-divisibility guard."""
-
-    SCHEMA = "doc_id long, text string"
-
-    def _batch(self, spark):
-        return spark.createDataFrame(
-            [
-                (1, "first crawl document about rivers and banks and foxes"),
-                (2, "second crawl document covering spark plans and operators"),
-                (3, "second crawl document covering spark plans and operators"),
-            ],
-            self.SCHEMA,
-        )
-
-    def test_store_read_raises_on_corrupt_table(self, spark, tmp_path):
-        """Only path-does-not-exist reads as an empty (fresh) table; a
-        corrupt table must raise instead of re-admitting the corpus."""
-        import pytest
-
-        from associationabacminer_spark.operators.ingest import (
-            dedup_store_build,
-            dedup_store_read,
-            dedup_store_write,
-        )
-
-        store_dir = str(tmp_path / "store")
-        dedup_store_write(
-            dedup_store_build(self._batch(spark), "text", "doc_id"), store_dir
-        )
-        # clobber the exact table with a non-parquet file
-        import shutil
-
-        shutil.rmtree(f"{store_dir}/exact")
-        import os
-
-        os.makedirs(f"{store_dir}/exact")
-        with open(f"{store_dir}/exact/garbage.parquet", "w") as f:
-            f.write("this is not parquet")
-        with pytest.raises(Exception):
-            dedup_store_read(spark, store_dir)["exact"].count()
-        # a genuinely missing table still reads as empty
-        shutil.rmtree(f"{store_dir}/exact")
-        assert dedup_store_read(spark, store_dir)["exact"].count() == 0
-
-    def test_store_read_restores_parked_old_table(self, spark, tmp_path):
-        """A crash between park and swap leaves <table>__old with no
-        <table>; the read must restore it, not return empty."""
-        import os
-
-        from associationabacminer_spark.operators.ingest import (
-            dedup_store_build,
-            dedup_store_read,
-            dedup_store_write,
-        )
-
-        store_dir = str(tmp_path / "store")
-        dedup_store_write(
-            dedup_store_build(self._batch(spark), "text", "doc_id"), store_dir
-        )
-        os.rename(f"{store_dir}/exact", f"{store_dir}/exact__old")
-        store = dedup_store_read(spark, store_dir)
-        assert store["exact"].count() == 2  # restored, not empty
-        assert os.path.exists(f"{store_dir}/exact")
-
-    def test_params_manifest_fails_fast_on_mismatch(self, spark, tmp_path):
-        import pytest
-
-        from associationabacminer_spark.operators.ingest import (
-            dedup_store_build,
-            dedup_store_read,
-            dedup_store_write,
-            store_params,
-        )
-
-        store_dir = str(tmp_path / "store")
-        dedup_store_write(
-            dedup_store_build(self._batch(spark), "text", "doc_id"),
-            store_dir,
-            params=store_params(),
-        )
-        # same params: fine
-        dedup_store_read(spark, store_dir, params=store_params())
-        # drifted num_perm: must raise, not silently under-probe
-        with pytest.raises(ValueError, match="different"):
-            dedup_store_read(
-                spark, store_dir, params=store_params(num_perm=64)
-            )
-        with pytest.raises(ValueError, match="different"):
-            dedup_store_write(
-                dedup_store_build(
-                    self._batch(spark), "text", "doc_id", densify="minrehash"
-                ),
-                store_dir,
-                params=store_params(densify="minrehash"),
-            )
-
-    def test_bands_must_divide_num_perm(self, spark):
-        import pytest
-
-        from associationabacminer_spark.operators.ingest import (
-            dedup_store_build,
-            incremental_ingest,
-        )
-
-        batch = self._batch(spark)
-        store = dedup_store_build(batch, "text", "doc_id")
-        with pytest.raises(ValueError, match="divide"):
-            incremental_ingest(batch, store, "text", "doc_id", bands=5)
-        with pytest.raises(ValueError, match="divide"):
-            dedup_store_build(batch, "text", "doc_id", bands=7)

@@ -231,31 +231,25 @@ class TestCurationPipeline:
 
 
 class TestIngestPipeline:
-    def test_steady_state_ingest_against_persisted_store(
-        self, spark, corpus, tmp_path
-    ):
+    def test_steady_state_ingest_against_persisted_store(self, spark, corpus):
         """The steady-state continuation of the curation chain: day 0's
-        accepted corpus becomes a parquet fingerprint store; day 1's
-        crawl (mostly recrawled content + a few new docs) is ingested
-        against it.  Invariants: recrawled content never survives, new
-        content always does, the store absorbs the delta, and
-        re-ingesting day 1 yields zero survivors."""
+        accepted corpus becomes the fingerprint store (in-session tables
+        a caller would persist as parquet); day 1's crawl
+        (mostly recrawled content + a few new docs) is ingested against
+        it.  Invariants: recrawled content never survives, new content
+        always does, the store absorbs the delta, and re-ingesting day 1
+        yields zero survivors."""
         from associationabacminer_spark.operators.ingest import (
+            dedup_store_append,
             dedup_store_build,
-            dedup_store_read,
-            dedup_store_write,
             incremental_ingest,
             ingest_delta,
         )
 
-        store_dir = str(tmp_path / "store")
         day0 = dedup.exact_dedup(
             corpus.filter(F.col("doc_id") < 5_000_000), "text", "doc_id"
         )
-        dedup_store_write(
-            dedup_store_build(day0, "text", "doc_id"), store_dir
-        )
-        store = dedup_store_read(spark, store_dir)
+        store = dedup_store_build(day0, "text", "doc_id")
 
         # day 1: recrawl of 1/3 of day 0 under new ids + 3 new docs
         recrawl = day0.filter(F.col("doc_id") % 3 == 0).select(
@@ -276,11 +270,10 @@ class TestIngestPipeline:
         kept = sorted(r["doc_id"] for r in surv.select("doc_id").collect())
         assert kept == [8_000_001, 8_000_002, 8_000_003]
 
-        # store absorbs the delta on disk; re-ingest is empty
-        dedup_store_write(
-            ingest_delta(day1, surv, "text", "doc_id"), store_dir
+        # store absorbs the delta; re-ingest is empty
+        store2 = dedup_store_append(
+            store, ingest_delta(day1, surv, "text", "doc_id")
         )
-        store2 = dedup_store_read(spark, store_dir)
         assert store2["exact"].distinct().count() > store["exact"].count()
         again = incremental_ingest(day1, store2, "text", "doc_id", threshold=0.5)
         assert again.count() == 0

@@ -114,6 +114,14 @@ class TestPlanShapes:
         plan = plan_of(lineage)
         assert "xxhash64" in plan  # hashing is in the JVM plan
 
+    def test_q26_carries_no_dropped_broadcast_hint(self, spark):
+        """q26 left-outer-joins from the rules side, which Spark cannot
+        build, so a broadcast hint on it is dropped with a warning on
+        every run."""
+        df = Q.QUERIES["q26_rule_match_counts"](spark, SF)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "leftHint=(strategy=broadcast)" not in plan
+
 
 class TestSuitePlan:
     def test_suite_build_has_single_exchange(self, spark, transcripts):

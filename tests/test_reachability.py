@@ -31,12 +31,6 @@ SCRIPTS = sorted(ROOT.glob("perfbench/*.py")) + [
 ALLOWED = {
     f"{PACKAGE}.operators.rulemine.auc_from_points":
         "the reference TestRocAucParity checks q44's SQL against",
-    f"{PACKAGE}.operators.ingest.dedup_store_read":
-        "persisted ingest store: ROADMAP Direction 6 gives it a runner or deletes it",
-    f"{PACKAGE}.operators.ingest.dedup_store_write":
-        "persisted ingest store: ROADMAP Direction 6 gives it a runner or deletes it",
-    f"{PACKAGE}.operators.ingest.store_params":
-        "persisted ingest store: ROADMAP Direction 6 gives it a runner or deletes it",
 }
 
 
